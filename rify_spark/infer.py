@@ -973,8 +973,11 @@ def fixpoint(
         "spark.sql.constraintPropagation.enabled": None,
         "spark.sql.shuffle.partitions": None,
     }
-    _saved = {k: spark.conf.get(k, "true") for k in _toggles}
-    _session_width = int(_saved["spark.sql.shuffle.partitions"])
+    _width_key = "spark.sql.shuffle.partitions"
+    _saved = {k: spark.conf.get(k, "true") for k in _toggles if k != _width_key}
+    # the width is numeric: unset, it reads as Spark's own default
+    _saved[_width_key] = spark.conf.get(_width_key, "200")
+    _session_width = int(_saved[_width_key])
     _percore = 250_000 * max(1, spark.sparkContext.defaultParallelism)
     codegen_below = (
         cfg.codegen_below_rows if cfg.codegen_below_rows is not None else _percore

@@ -153,23 +153,24 @@ _BAND_KEYS = ["band"] + [f"k{r}" for r in range(LSH_ROWS)]
 
 
 def _band_rows(sig: DataFrame) -> DataFrame:
-    """Explode a signature row into LSH_BANDS rows keyed by the band's raw
-    minhash values (long columns, not a concatenated string — compact
-    shuffle keys and no collision risk)."""
-    bands = []
-    for b in range(LSH_BANDS):
-        cols = [f"mh{b * LSH_ROWS + r}" for r in range(LSH_ROWS)]
-        bands.append(
-            sig.select(
-                "doc_id",
-                F.lit(b).alias("band"),
-                *[F.col(c).alias(f"k{r}") for r, c in enumerate(cols)],
-            )
+    """Explode a signature row into LSH_BANDS rows (doc_id, band int,
+    k0..k{r-1}) keyed by the band's raw minhash values (long columns, not a
+    concatenated string — compact shuffle keys and no collision risk).
+    ONE explode of per-band structs, not a union of per-band selects:
+    column pruning would split the shared minhash aggregate into one
+    4-of-16-column aggregate per union branch, which exchange reuse cannot
+    merge (LSH_BANDS signature passes instead of one)."""
+    bands = [
+        F.struct(
+            F.lit(b).alias("band"),
+            *[F.col(f"mh{b * LSH_ROWS + r}").alias(f"k{r}")
+              for r in range(LSH_ROWS)],
         )
-    out = bands[0]
-    for b in bands[1:]:
-        out = out.unionByName(b)
-    return out
+        for b in range(LSH_BANDS)
+    ]
+    return sig.select("doc_id", F.explode(F.array(*bands)).alias("_b")).select(
+        "doc_id", "_b.*"
+    )
 
 
 def lsh_candidate_pairs(docs: DataFrame) -> DataFrame:
@@ -792,20 +793,16 @@ def _star_edges(docs: DataFrame) -> DataFrame:
     for the mega-cluster blowup: 10^6 copies of a boilerplate doc share
     every band bucket, which is 5*10^11 pairs under the pair join but
     10^6 - 1 star edges here (tested: test_star_edges_linear_in_mega_
-    cluster). One groupBy over the band rows + one join back on the band
-    key — no self-join anywhere.
+    cluster). One window over the band rows (bucket min per band key) —
+    one shuffle, no self-join, no join back and no per-bucket array, so a
+    mega-bucket streams through; reading the band rows once also keeps the
+    minhash aggregate to a single evaluation.
     """
     allb = _band_rows(minhash_signatures(docs))
-    mins = (
-        allb.groupBy(*_BAND_KEYS)
-        .agg(F.min("doc_id").alias("a"), F.count("*").alias("n_in_bucket"))
-        .filter(F.col("n_in_bucket") >= 2)
-        .drop("n_in_bucket")
-    )
+    a = F.min("doc_id").over(Window.partitionBy(*_BAND_KEYS))
     return (
-        allb.join(mins, _BAND_KEYS)
-        .filter(F.col("doc_id") != F.col("a"))
-        .select("a", F.col("doc_id").alias("b"))
+        allb.select(a.alias("a"), F.col("doc_id").alias("b"))
+        .filter(F.col("b") != F.col("a"))
         .distinct()
     )
 

@@ -391,7 +391,8 @@ def pack_offsets(docs: DataFrame, budget: int = PACK_SEQ_TOKENS) -> DataFrame:
     parts = sorted(
         (r["_pid"], r["tok"])
         for r in ranged.groupBy("_pid")
-        .agg(F.sum("n_tokens").alias("tok"))
+        # an all-NULL-text range partition sums to NULL: it adds 0 tokens
+        .agg(F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("tok"))
         .collect()
     )
     bases, acc = [], 0

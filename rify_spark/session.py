@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import warnings
 from typing import Mapping, Optional
 
 from pyspark.sql import SparkSession
@@ -146,6 +147,6 @@ def _warm_session(spark: SparkSession) -> None:
         ]
         derived, _ = infer_df(spark, prem, wrules, InferConfig())
         derived.write.format("noop").mode("overwrite").save()
-    except Exception:
+    except Exception as e:
         # warmup is best-effort: a failure must never block session use
-        pass
+        warnings.warn(f"rify_spark session warm-up failed: {e!r}")

@@ -127,8 +127,11 @@ def smart_tc_fixpoint(
         "spark.sql.constraintPropagation.enabled": None,
         "spark.sql.shuffle.partitions": None,
     }
-    _saved = {k: spark.conf.get(k, "true") for k in _toggles}
-    _session_width = int(_saved["spark.sql.shuffle.partitions"])
+    _width_key = "spark.sql.shuffle.partitions"
+    _saved = {k: spark.conf.get(k, "true") for k in _toggles if k != _width_key}
+    # the width is numeric: unset, it reads as Spark's own default
+    _saved[_width_key] = spark.conf.get(_width_key, "200")
+    _session_width = int(_saved[_width_key])
     _percore = 250_000 * max(1, spark.sparkContext.defaultParallelism)
     codegen_below = (
         cfg.codegen_below_rows if cfg.codegen_below_rows is not None else _percore
@@ -313,6 +316,7 @@ def smart_tc_fixpoint(
                 d = spark.read.parquet(ckpt.extra_path(it, "d.parquet"))
                 if d_rows is None:
                     d_rows = d.count()  # footer-count of the parquet just written
+                    metrics[-1]["d_rows"] = d_rows
                 ckpt.save_iteration(
                     it,
                     novel,

@@ -1,4 +1,8 @@
-"""Dump .explain('formatted') for the headline + touched gate queries."""
+"""Dump .explain('formatted') for the headline + touched gate queries.
+
+Usage: SPARK_GRAFT_CPUS=<n> python scripts/dump_plans_r6.py <out_dir> [suffix] [target ...]
+(no targets: dump all of them)
+"""
 import os
 import sys
 
@@ -8,6 +12,7 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = sys.argv[1]
 SUFFIX = sys.argv[2] if len(sys.argv) > 2 else "before"
+ONLY = set(sys.argv[3:])
 
 
 def main():
@@ -15,8 +20,9 @@ def main():
     from rify_spark.session import get_spark
     import __spark_entry__ as entrymod
 
-    spark = get_spark(master="local[32]", app_name="plan-dump",
-                      shuffle_partitions=64)
+    # master and shuffle width follow SPARK_GRAFT_CPUS (get_spark's
+    # defaults: local[<cpus>], min(64, 2 * cpus) partitions)
+    spark = get_spark(app_name="plan-dump")
     entrymod._ship(spark)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
@@ -47,6 +53,8 @@ def main():
         "dedup_minhash": lambda s, d: dedup.minhash_signatures(docs),
         "dedup_lsh_pairs": lambda s, d: dedup.lsh_candidate_pairs(docs),
         "dedup_clusters": lambda s, d: dedup.neardup_clusters(docs),
+        # the clusters plan starts at its edge checkpoint; this is its input
+        "dedup_star_edges": lambda s, d: dedup._star_edges(docs),
         "text_quality": lambda s, d: text.quality_score(docs),
         "sparql_agg": _sparql_agg,
         "knn_bruteforce": lambda s, d: similarity.knn_bruteforce(emb),
@@ -58,6 +66,8 @@ def main():
     os.makedirs(OUT, exist_ok=True)
     sc = spark.sparkContext
     for name, fn in targets.items():
+        if ONLY and name not in ONLY:
+            continue
         try:
             df = fn(spark, SF_DIR)
             txt = sc._jvm.PythonSQLUtils.explainString(

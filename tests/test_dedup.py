@@ -7,6 +7,7 @@ the gate's) and assert the candidate/join row counts stay linear, the way
 VERDICT r4 "What's wrong" #1/#2 prescribe."""
 
 import os
+import re
 import sys
 
 import pytest
@@ -18,6 +19,8 @@ from rify_spark.ops import dedup  # noqa: E402
 from rify_spark.ops.dedup import _capped_shingles, _shingles  # noqa: E402
 from rify_spark.ops.params import (  # noqa: E402
     JACCARD_THRESHOLD,
+    LSH_BANDS,
+    LSH_ROWS,
     NGRAM_DF_CAP,
     NGRAM_N,
 )
@@ -190,6 +193,64 @@ def test_short_docs_have_empty_shingles(spark):
     )
     assert _shingles(docs).filter(F.col("n_sh") > 0).count() == 0
     assert dedup.ngram_jaccard_pairs(docs).count() == 0
+
+
+# --- LSH banding ---------------------------------------------------------------
+
+
+def _band_rows_union_ref(sig):
+    """The union-of-per-band-selects banding that _band_rows replaced: the
+    row-set and schema reference."""
+    out = None
+    for b in range(LSH_BANDS):
+        band = sig.select(
+            "doc_id",
+            F.lit(b).alias("band"),
+            *[F.col(f"mh{b * LSH_ROWS + r}").alias(f"k{r}") for r in range(LSH_ROWS)],
+        )
+        out = band if out is None else out.unionByName(band)
+    return out
+
+
+def test_band_rows_compute_minhash_once(spark, hot_shingle_docs):
+    """The banded rows read ONE minhash aggregate: the planned query holds
+    exactly one doc_id hash exchange (a union of per-band selects plans
+    one pruned aggregate — and exchange — per band)."""
+    bands = dedup._band_rows(dedup.minhash_signatures(hot_shingle_docs))
+    plan = bands._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"Exchange hashpartitioning\(doc_id", plan)) == 1
+
+
+def test_band_rows_match_union_reference(spark, hot_shingle_docs):
+    """Same schema (column order and types — the streaming LSH index
+    persists these rows) and the same row multiset as the union form."""
+    sig = dedup.minhash_signatures(hot_shingle_docs)
+    got = dedup._band_rows(sig)
+    ref = _band_rows_union_ref(sig)
+    assert got.schema == ref.schema
+    assert got.schema.simpleString() == (
+        "struct<doc_id:bigint,band:int,k0:bigint,k1:bigint,k2:bigint,k3:bigint>"
+    )
+    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+
+
+def test_lsh_candidate_pairs_match_union_reference(spark, hot_shingle_docs):
+    """lsh_candidate_pairs returns exactly the pairs of the union-form band
+    self-join on the hot-shingle fixture, the planted twins among them."""
+    allb = _band_rows_union_ref(dedup.minhash_signatures(hot_shingle_docs))
+    on = [F.col("l.doc_id") < F.col("r.doc_id")] + [
+        F.col(f"l.{k}") == F.col(f"r.{k}") for k in dedup._BAND_KEYS
+    ]
+    ref = {
+        tuple(r)
+        for r in allb.alias("l")
+        .join(allb.alias("r"), on)
+        .select("l.doc_id", "r.doc_id")
+        .collect()
+    }
+    got = {tuple(r) for r in dedup.lsh_candidate_pairs(hot_shingle_docs).collect()}
+    assert got == ref
+    assert {(i, i + N_HOT_DOCS) for i in range(10)} <= got
 
 
 # --- fuzzy-dedup clustering ---------------------------------------------------

@@ -573,6 +573,36 @@ def test_fixpoint_scopes_constraint_propagation(spark):
         spark.conf.set(key, saved)
 
 
+@pytest.mark.parametrize("smart", [True, False])
+def test_fixpoint_unset_shuffle_width_falls_back_to_spark_default(spark, smart):
+    """An unset spark.sql.shuffle.partitions reads as Spark's own default
+    width (200) in both loops — never the boolean toggles' "true"
+    fallback — and the conf reads the same after the run."""
+    from rify_spark.api import infer_df
+
+    key = "spark.sql.shuffle.partitions"
+    rules = [([[U("a"), B("p"), U("b"), U("g")]], [[U("a"), B("q"), U("b"), U("g")]])]
+    rows = [("x", "p", "y", "g")]
+    if smart:  # linear TC over a 6-edge chain routes to tc.smart_tc_fixpoint
+        rules.append((
+            [[U("a"), B("p"), U("b"), U("g")], [U("b"), B("q"), U("c"), U("g")]],
+            [[U("a"), B("q"), U("c"), U("g")]],
+        ))
+        rows = [(f"n{i}", "p", f"n{i + 1}", "g") for i in range(6)]
+    rules = decl_rules(rules)
+    facts = spark.createDataFrame(rows, "s string, p string, o string, g string")
+    saved = spark.conf.get(key)
+    try:
+        spark.conf.unset(key)
+        before = spark.conf.get(key)
+        derived, res = infer_df(spark, facts, rules)
+        assert (res.metrics[0].get("strategy") == "smart_tc") == smart
+        assert derived.count() == (21 if smart else 1)
+        assert spark.conf.get(key) == before
+    finally:
+        spark.conf.set(key, saved)
+
+
 def test_fused_iterations_reach_identical_fixpoint(spark):
     """Iteration fusion (fuse_rounds>1) is a coarser chaotic iteration of the
     same monotone operator: the derived set must be identical to plain

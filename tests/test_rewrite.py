@@ -257,6 +257,32 @@ def test_smart_tc_engaged_with_checkpoint_dir(spark, tmp_path):
         assert os.path.isdir(os.path.join(ck, d, "d.parquet"))
 
 
+def test_smart_tc_checkpoint_metrics_count_wavefront(spark, tmp_path):
+    """Checkpoint mode counts the D wavefront for meta.json; the same count
+    lands in FixpointResult.metrics, so every round that added facts
+    reports an integer d_rows equal to the one persisted."""
+    import json
+    import os
+
+    from rify_spark.api import infer_df
+    from rify_spark.infer import InferConfig
+
+    facts = [(f"n{i}", "next", f"n{i+1}", "g0") for i in range(10)]
+    edges = spark.createDataFrame(facts, "s string, p string, o string, g string")
+    ck = str(tmp_path / "ck")
+    _, res = infer_df(
+        spark, edges, _linear_tc(),
+        InferConfig(checkpoint_dir=ck, checkpoint_retain_history=True),
+    )
+    rounds = [m for m in res.metrics if m["delta_rows"]]
+    assert rounds and all(m["strategy"] == "smart_tc" for m in rounds)
+    for m in rounds:
+        assert isinstance(m["d_rows"], int)
+        meta_path = os.path.join(ck, f"iter={m['iteration']:05d}", "meta.json")
+        with open(meta_path) as f:
+            assert json.load(f)["d_rows"] == m["d_rows"]
+
+
 def test_smart_tc_checkpoint_resume_exact(spark, tmp_path):
     """Kill mid-run (max_iterations), resume: the completed rounds are not
     recomputed and the final closure is exact; a generic-loop checkpoint

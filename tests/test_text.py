@@ -154,6 +154,34 @@ def test_pack_offsets_concat_then_chunk(spark):
             out[3].spans_boundary) == (5, 1, 1, True)
 
 
+def test_pack_offsets_all_null_range_partition(spark):
+    """A contiguous run of NULL texts fills whole range partitions; each
+    such partition's token sum is NULL and must count as 0. Checked against
+    the DuckDB oracle (pack_offsets_sql): NULL docs get NULL offsets and
+    add nothing to the running sum of the docs after them."""
+    import duckdb
+
+    from rify_spark.ops.text import pack_offsets, pack_offsets_sql
+
+    rows = [
+        (i, None if 10 <= i < 90 else " ".join(["w"] * (i % 7 + 1)))
+        for i in range(100)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    ranged = docs.repartitionByRange(
+        int(spark.conf.get("spark.sql.shuffle.partitions")), "doc_id"
+    ).withColumn("_pid", F.spark_partition_id())
+    null_only = ranged.groupBy("_pid").agg(F.count("text").alias("n"))
+    assert null_only.filter("n = 0").count() >= 1, "fixture needs an all-NULL partition"
+    got = sorted(tuple(r) for r in pack_offsets(docs, budget=8).collect())
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted(tuple(r) for r in con.execute(pack_offsets_sql(8)).fetchall())
+    assert got == want
+
+
 # --- TF-IDF ------------------------------------------------------------------
 
 from rify_spark.ops.text import TFIDF_IDF_SCALE, tfidf_top_terms  # noqa: E402
