@@ -46,7 +46,6 @@ Scale design:
 from __future__ import annotations
 
 import hashlib
-import os
 import time
 from dataclasses import dataclass, field
 from typing import Optional
@@ -58,12 +57,7 @@ from pyspark.sql import functions as F
 from .checkpoint import CheckpointManager
 from .matcher import bindings, lineage_cols, project_heads
 from .rules import LoweredRule
-
-# RIFY_PROF_CATALYST=1: per-iteration metrics carry "catalyst_s", the time
-# to force the staged block's physical plan (Catalyst analysis +
-# optimization + planning, driver-serial) — the profiling hook behind
-# scripts/prof_iter_catalyst.py's floor decomposition.
-_PROF_CATALYST = os.environ.get("RIFY_PROF_CATALYST", "") == "1"
+from .session import floor_regime, scoped_conf, shuffle_width
 
 SPOG = ["s", "p", "o", "g"]
 
@@ -391,49 +385,6 @@ class InferConfig:
     # occurrence-sample target for hot-key detection; a >=20%-share key is
     # detected from ~1M sampled occurrences with overwhelming probability
     hot_scan_sample_rows: int = 1_000_000
-    # iteration fusion: apply the rules FUSE_ROUNDS times within one logical
-    # plan per outer iteration (round k+1 seeds from round k's novel output
-    # — dedup + store-anti-join, still inside the one lazy plan). Exact:
-    # each fused round is precisely a semi-naive round, so the fixpoint set
-    # is identical in ~1/k the outer iterations (tested:
-    # test_fused_iterations_reach_identical_fixpoint). DEFAULT OFF (1):
-    # measured a 1.5-3x per-iteration LOSS on the 100k-file pipeline and a
-    # 2x loss on a 200k-node chain closure, because under AQE every
-    # exchange and broadcast in the fused mega-plan materializes as its own
-    # driver-scheduled job — a probe of the fused shape ran ~30 jobs for
-    # the "single" count action, so fusing MULTIPLIES the per-job floor it
-    # was meant to amortize instead of paying it once per k rounds. The
-    # floor is attacked where it actually lives instead: the adaptive
-    # codegen + AQE toggles below (driver-serial compile and per-stage
-    # scheduling, ~1-1.5 s/iteration, invariant in core count). Kept as an
-    # option for AQE-off deployments, where one plan really is one job.
-    # Lineage mode never fuses (per-round first-derivation attribution) and
-    # goal-directed mode never fuses (goals_met must see every round's
-    # novelty before more work is scheduled).
-    fuse_rounds: int = 1
-    fuse_below_rows: int = 500_000
-    # adaptive whole-stage codegen: below this delta size an iteration is
-    # floor-bound (driver-serial janino compile of the per-iteration plan —
-    # profiled ~0.7-1.0 s/iteration, invariant in core count — dominates a
-    # sub-second data path), so codegen is switched off for the iteration
-    # and back on when the delta grows past the threshold. Codegen stays on
-    # for data-bound iterations, where the compiled loop wins by far. 0
-    # disables the toggle (session setting rules throughout); None picks
-    # 250k rows PER CORE at runtime — the crossover is cores-dependent:
-    # interpreted eval costs ~rows x O(µs)/cores of wall, the compile a
-    # fixed ~0.8 s, so a fixed 2M threshold that wins at 8-32 cores on
-    # 100k-row pipeline deltas costs ~+10 s/iteration at 2 cores on
-    # 1M-row tree deltas (measured in the weak-scaling pair).
-    codegen_below_rows: Optional[int] = None
-    # adaptive AQE: below this delta size an iteration's shuffles are tiny
-    # and AQE's per-stage materialization barriers (each exchange/broadcast
-    # becomes its own driver-scheduled job) cost more than its runtime
-    # re-planning saves — profiled ~0.3-0.5 s/iteration at 100-200k-row
-    # deltas, invariant in core count. Above the threshold AQE stays on:
-    # skew-join splitting and runtime broadcast conversion are load-bearing
-    # for data-bound iterations. 0 disables the toggle; None matches the
-    # codegen rule (250k rows per core).
-    aqe_below_rows: Optional[int] = None
     # rewrite linear transitive recursions (H <- B; H(x,z) <- B(x,y),H(y,z))
     # to the LFP-identical doubling form (H(x,z) <- H(x,y),H(y,z)) so a
     # k-deep chain closes in O(log k) iterations instead of O(k) — the
@@ -574,21 +525,13 @@ def _limited_collect(df: DataFrame, n: int) -> list:
     raw limit-scans (e.g. the hot-key sampler) WANT the incremental
     launch.
 
-    Session-conf scoping: this (and the fixpoint's per-iteration
-    codegen/AQE toggles) save/restore SESSION-level SQLConfs. The engine
-    assumes one fixpoint per SparkSession at a time — the documented
-    single-tenant contract (the concurrent dictionary audit thread only
-    submits jobs whose plans are already compiled, so these perf-only
-    confs cannot change its results). Run concurrent fixpoints on
-    ``spark.newSession()`` instances, which have isolated SQLConf."""
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    saved = spark.conf.get(key, "1")
-    spark.conf.set(key, "10000")
-    try:
+    The limit conf is scoped with :func:`~rify_spark.session.scoped_conf`,
+    under its single-tenant session contract (the concurrent dictionary
+    audit thread only submits jobs whose plans are already compiled, so
+    this perf-only conf cannot change its results)."""
+    with scoped_conf(df.sparkSession) as set_conf:
+        set_conf("spark.sql.limit.initialNumPartitions", 10000)
         return df.limit(n).collect()
-    finally:
-        spark.conf.set(key, saved)
 
 
 def _delta_predicates(delta: DataFrame, cfg: InferConfig) -> Optional[set]:
@@ -962,50 +905,17 @@ def fixpoint(
     else:
         delta_preds = _delta_predicates(delta, cfg)
 
-    # adaptive codegen/AQE (see InferConfig.codegen_below_rows /
-    # aqe_below_rows): both are runtime SQLConfs read at plan-compile time,
-    # so flipping them between iterations changes only plans built
-    # afterwards — no effect on already-cached blocks. Originals restored
-    # on exit.
-    _toggles = {
-        "spark.sql.codegen.wholeStage": None,
-        "spark.sql.adaptive.enabled": None,
-        "spark.sql.constraintPropagation.enabled": None,
-        "spark.sql.shuffle.partitions": None,
-    }
-    _width_key = "spark.sql.shuffle.partitions"
-    _saved = {k: spark.conf.get(k, "true") for k in _toggles if k != _width_key}
-    # the width is numeric: unset, it reads as Spark's own default
-    _saved[_width_key] = spark.conf.get(_width_key, "200")
-    _session_width = int(_saved[_width_key])
-    _percore = 250_000 * max(1, spark.sparkContext.defaultParallelism)
-    codegen_below = (
-        cfg.codegen_below_rows if cfg.codegen_below_rows is not None else _percore
-    )
-    aqe_below = cfg.aqe_below_rows if cfg.aqe_below_rows is not None else _percore
-
-    def _set_conf(key: str, on: bool) -> None:
-        if _toggles[key] is not on:
-            spark.conf.set(key, str(on).lower())
-            _toggles[key] = on
-
-    def _set_width(w: int) -> None:
-        key = "spark.sql.shuffle.partitions"
-        if _toggles[key] != w:
-            spark.conf.set(key, str(w))
-            _toggles[key] = w
-
-    try:
+    with scoped_conf(spark) as set_conf:
         # constraint propagation walks every operator's expression set at
         # optimization time — a measurable slice of the per-iteration driver
         # floor on the fixpoint's iteration-deep join/union plans (profiled
         # ~0.5 s/iteration on the 100k-file pipeline) and useless here: quad
         # columns are non-null by construction and every join is an inner
-        # equi-join. Scoped to THIS fixpoint run (restored in the finally)
-        # because the global off was measured to cost the shallow ops
-        # queries ~10% (knn_lsh A/B, AB_KNN_LSH.json) — they keep the
-        # Spark default.
-        _set_conf("spark.sql.constraintPropagation.enabled", False)
+        # equi-join. Scoped to THIS fixpoint run because the global off was
+        # measured to cost the shallow ops queries ~10% (knn_lsh A/B,
+        # AB_KNN_LSH.json) — they keep the Spark default.
+        set_conf("spark.sql.constraintPropagation.enabled", False)
+        session_width = shuffle_width(spark)
         while delta_rows > 0 and cond_rules:
             if goals is not None and goals_met():
                 break
@@ -1013,27 +923,8 @@ def fixpoint(
                 break
             it += 1
             t0 = time.time()
-            if codegen_below:
-                _set_conf(
-                    "spark.sql.codegen.wholeStage",
-                    delta_rows > codegen_below,
-                )
-            if aqe_below:
-                _set_conf(
-                    "spark.sql.adaptive.enabled",
-                    delta_rows > aqe_below,
-                )
-                # with AQE off nothing coalesces the session's shuffle
-                # width, so a floor-bound iteration pays (width) near-empty
-                # tasks per implicit exchange — size the width to the
-                # delta (the pipeline small-input rule) and restore once
-                # the delta grows past the AQE threshold (or on exit)
-                if delta_rows <= aqe_below:
-                    _set_width(
-                        max(8, min(_session_width, delta_rows // 25_000 + 1))
-                    )
-                else:
-                    _set_width(_session_width)
+            # codegen, AQE and shuffle width keyed to the live delta size
+            floor_regime(set_conf, delta_rows, session_width)
 
             broadcast_delta = delta_rows <= broadcast_cutoff
             delta_src = F.broadcast(delta) if broadcast_delta else delta
@@ -1043,105 +934,24 @@ def fixpoint(
             hot = hot_lits if (hot_lits and not broadcast_delta) else None
             facts = store.union()
 
-            # iteration fusion (cfg.fuse_rounds, DEFAULT OFF — see the
-            # config docstring for the measured negative result under AQE):
-            # k semi-naive rounds inside ONE logical plan. Round k+1 seeds
-            # from round k's novel output (dedup + store-anti inside the
-            # same lazy plan), reads facts ∪ novel with F_old = facts — each
-            # fused round is exactly a semi-naive round (facts accumulate
-            # the earlier fused rounds' novelty; F_old is the previous
-            # round's facts; the delta is novelk minus every earlier novel
-            # block), so the fixpoint set is identical and termination ("no
-            # novelty from any fused round") is unchanged.
-            fused = (
-                cfg.fuse_rounds
-                if (
-                    cfg.fuse_rounds > 1
-                    and not lineage
-                    and goals is None
-                    and delta_rows <= cfg.fuse_below_rows
-                )
-                else 1
-            )
-            round_delta = delta_src
-            round_facts = facts
-            round_facts_old = facts_old
-            round_preds = delta_preds
-            cands: list = []
-            plans_built = 0
-            for k in range(fused):
-                plans = []
-                head_preds: Optional[set] = set()
-                for r in cond_rules:
-                    extra = lineage_cols(r, dtype) if lineage else ()
-                    live = [
-                        i
-                        for i in range(len(r.body))
-                        if _seed_plan_live(r.body[i], round_preds)
-                    ]
-                    if not live:
+            plans = []
+            for r in cond_rules:
+                extra = lineage_cols(r, dtype) if lineage else ()
+                for i in range(len(r.body)):
+                    if not _seed_plan_live(r.body[i], delta_preds):
                         continue
-                    # predicate set this round's heads can emit — the next
-                    # fused round's prune set (None once any fired rule has
-                    # a variable head predicate)
-                    if head_preds is not None:
-                        for atom in r.head:
-                            if atom[1][0] == "c":
-                                head_preds.add(_norm_term(atom[1][1]))
-                            else:
-                                head_preds = None
-                                break
-                    for i in live:
-                        b = bindings(
-                            round_facts,
-                            r,
-                            delta=round_delta,
-                            seed_pos=i,
-                            stats=stats,
-                            facts_old=round_facts_old,
-                            hot_values=hot,
-                            salt_n=cfg.hot_salt_n,
-                        )
-                        plans.append(project_heads(b, r, dtype, extra))
-                if not plans:
-                    break
-                plans_built += len(plans)
-                candk = _union_all(plans)
-                if k + 1 < fused:
-                    # the next round seeds from this round's NOVEL quads —
-                    # dedup + anti-join against the store, all still inside
-                    # the one lazy plan (no barrier). Seeding from raw
-                    # candidates instead re-derives consequences of already-
-                    # known facts and was measured 2-3x slower than two plain
-                    # rounds; with the novelty restriction the fused pair is
-                    # exactly two semi-naive rounds sharing one Catalyst
-                    # compile + one count action. The s-repartition mirrors
-                    # the tail: dedup and (chained-mode) anti are subset-
-                    # satisfied by it, and ReuseExchange computes it once
-                    # across the next round's several references.
-                    novelk = store.anti(
-                        candk.repartition(store.partitions, "s")
-                        .dropDuplicates(SPOG)
+                    b = bindings(
+                        facts,
+                        r,
+                        delta=delta_src,
+                        seed_pos=i,
+                        stats=stats,
+                        facts_old=facts_old,
+                        hot_values=hot,
+                        salt_n=cfg.hot_salt_n,
                     )
-                    # subtract novelty already produced by EARLIER fused
-                    # rounds (the store anti alone re-admits quads round k-1
-                    # just derived), so delta_k is exactly the k-th
-                    # semi-naive delta; each prior block is s-partitioned at
-                    # the store width, so the chained antis add no exchange
-                    for prior in cands:
-                        novelk = novelk.join(prior, SPOG, "left_anti")
-                    cands.append(novelk)
-                    round_delta = novelk
-                    # accumulate: round k+1 must see EVERY earlier fused
-                    # round's novelty in F (with F_old = the previous F),
-                    # or a 3rd fused round could not join round-1 novelty
-                    # against round-2 novelty until the next outer iteration
-                    round_facts_old = round_facts
-                    round_facts = round_facts.unionByName(novelk)
-                    round_preds = head_preds if cfg.prune_seed_plans else None
-                else:
-                    cands.append(candk)
-            if not cands:
+                    plans.append(project_heads(b, r, dtype, extra))
+            if not plans:
                 # every seeded plan is predicate-dead: nothing in the delta
                 # can fire any rule, so the fixpoint is reached
                 metrics.append(
@@ -1149,7 +959,6 @@ def fixpoint(
                      "wall_s": round(time.time() - t0, 4)}
                 )
                 break
-            cand = _union_all(cands)
 
             # ONE explicit exchange for the whole post-candidate pipeline: the
             # candidate set is hash-partitioned by s at the store's width, which
@@ -1158,7 +967,7 @@ def fixpoint(
             # exchange), and (b) co-partitions the anti-join with every store
             # block (zero exchange either side). Without it the delta pays a
             # spog-dedup exchange AND an s-exchange at the anti-join.
-            cand = cand.repartition(store.partitions, "s")
+            cand = _union_all(plans).repartition(store.partitions, "s")
             if lineage:
                 novel = store.anti(cand)
                 w = Window.partitionBy(*SPOG).orderBy("rule_index", "inst")
@@ -1180,18 +989,6 @@ def fixpoint(
             # yields the count + next prune set. Eager checkpoint + separate
             # count + separate block fill was three driver barriers.
             block = store.stage_block(new)
-            if _PROF_CATALYST:
-                # attribute the iteration's Catalyst share: forcing the
-                # physical plan compiles analysis+optimization+planning for
-                # the deep candidate->anti->checkpoint pipeline without
-                # running it; the subsequent action reuses the cached
-                # QueryExecution, so this costs ~nothing when enabled and
-                # exactly nothing when off
-                tq = time.time()
-                block._jdf.queryExecution().executedPlan()
-                catalyst_s = round(time.time() - tq, 4)
-            else:
-                catalyst_s = None
             delta_rows, delta_preds = _count_and_preds(block, cfg)
             if lineage and delta_rows:
                 arg_blocks.append(new_full)
@@ -1214,12 +1011,11 @@ def fixpoint(
                 # emergent hot keys: re-detect on the compacted store (sampled —
                 # O(hot_scan_sample_rows), amortized 1/store_compact_every)
                 hot_lits = _hot_values(store.union(), facts_rows, cfg)
-            m = {
+            metrics.append({
                 "iteration": it,
                 "delta_rows": delta_rows,
                 "facts_rows": facts_rows,
-                "plans_built": plans_built,
-                "fused_rounds": fused,
+                "plans_built": len(plans),
                 "wall_s": round(time.time() - t0, 4),
                 # the delta lives in the store as an s-partitioned block at the
                 # store width — report that instead of new.rdd.getNumPartitions(),
@@ -1229,10 +1025,7 @@ def fixpoint(
                 "store_blocks": len(store.blocks),
                 "store_partitions": store.partitions,
                 "compacted": store.just_compacted,
-            }
-            if catalyst_s is not None:
-                m["catalyst_s"] = catalyst_s
-            metrics.append(m)
+            })
             if ckpt:
                 # first saved iteration always writes a base (== the old
                 # `it == 1`: resumed runs restart past 1 with last_base > 0)
@@ -1263,10 +1056,6 @@ def fixpoint(
                     arg_blocks.append(arguments)
                 if write_base and not cfg.checkpoint_retain_history:
                     ckpt.prune(last_base)
-    finally:
-        for k, v in _saved.items():
-            if _toggles[k] is not None:
-                spark.conf.set(k, v)
 
     return FixpointResult(
         facts=store.union(),

@@ -19,6 +19,8 @@ Spark-first and 100-TB-shaped:
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -420,9 +422,10 @@ def bfs_levels(
       * each new level is ``localCheckpoint``-truncated, so plan depth
         stays constant as levels accumulate (the lazy-checkpoint lesson
         from the fixpoint loop);
-      * termination: empty frontier, or the ``max_iter`` guard (a
-        diameter bound the caller can raise — documented, shared with
-        the SQL twin's recursion cap).
+      * termination: empty frontier. ``max_iter`` is a diameter bound
+        the caller can raise (shared with the SQL twin's recursion cap);
+        if level ``max_iter + 1`` would still reach a new node the call
+        raises ``RuntimeError`` instead of returning a truncated map.
 
     The visited set grows by union-of-checkpointed-levels; the per-
     iteration anti-join is O(visited) — the standard BFS frontier cost,
@@ -463,10 +466,8 @@ def bfs_levels(
         .localCheckpoint()
     )
     frontier = visited
-    d = 0
     try:
-        while d < max_iter:
-            d += 1
+        for d in itertools.count(1):
             nxt = (
                 ed.join(
                     frontier.select(F.col("node").alias("s")), "s"
@@ -479,6 +480,11 @@ def bfs_levels(
             )
             if not nxt.take(1):
                 break
+            if d > max_iter:
+                raise RuntimeError(
+                    f"bfs_levels did not converge within max_iter={max_iter} "
+                    f"levels (level {d} still reaches new nodes); raise max_iter"
+                )
             visited = visited.unionByName(nxt)
             frontier = nxt
     finally:
@@ -537,7 +543,9 @@ def sssp_distances(
     with integer weights ≥ 1 every improvement lengthens a simple
     path, so ≤ diameter rounds; zero-weight edges still terminate (an
     equal distance is not an improvement); ``max_iter`` is the
-    documented hop cap shared with the SQL twin's recursion bound.
+    documented hop cap shared with the SQL twin's recursion bound — if
+    round ``max_iter + 1`` would still improve a node the call raises
+    ``RuntimeError`` instead of returning unsettled distances.
     Integer arithmetic end to end — bit-identical across engines, no
     float summation order to diverge."""
     spark = edges.sparkSession
@@ -562,7 +570,7 @@ def sssp_distances(
     )
     frontier = dist
     try:
-        for _ in range(max_iter):
+        for rnd in itertools.count(1):
             cand = (
                 ed.join(
                     frontier.select(
@@ -587,6 +595,12 @@ def sssp_distances(
             )
             if not improved.take(1):
                 break
+            if rnd > max_iter:
+                raise RuntimeError(
+                    f"sssp_distances did not converge within max_iter="
+                    f"{max_iter} rounds (round {rnd} still improves a "
+                    f"node); raise max_iter"
+                )
             # lazy checkpoint: without it the settled map's plan nests one
             # anti-join per round and every later round re-executes the
             # whole chain — O(rounds^2) join work (measured 22.2s for a

@@ -27,6 +27,7 @@ from .extract.canonicalize import canonicalize_quads, scoped_components
 from .extract.code import assert_sha256, extract_triples, link_score_udf
 from .infer import InferConfig
 from .rules import Bound as B, Rule, Unbound as U
+from .session import scoped_conf, shuffle_width
 
 DG_PRED = ["imports", "defines", "calls"]
 
@@ -289,40 +290,33 @@ def run_pipeline(
     # compile and AQE's per-exchange stage-materialization jobs are
     # driver-serial costs, invariant in core count, that dominate tiny
     # shuffles (profiled ~5 s of a ~33 s serial floor at 100k files / 8
-    # cores). Both confs are flipped off for the stage jobs and restored
-    # after; a big input (the 100-TB regime) keeps codegen + AQE, where
-    # they carry the data path. The fixpoint makes the same decision
-    # per-iteration on its own (InferConfig.codegen_below_rows /
-    # aqe_below_rows), keyed to the live delta size.
+    # cores). Both confs are flipped off for the stage jobs; a big input
+    # (the 100-TB regime) keeps codegen + AQE, where they carry the data
+    # path. The fixpoint makes the same decision per round on its own
+    # (session.floor_regime), keyed to the live delta size.
     #
-    # Scoping contract: the flips are session-level and restored in the
-    # finally below, but the RETURNED DataFrames are lazy — a stage a
-    # caller materializes after return runs under the restored confs
-    # (harmless: everything width-sensitive — the fixpoint, the pandas-UDF
-    # stages — materializes eagerly inside the toggled window; only the
-    # final decode projection floats). Like the fixpoint's own toggles,
-    # this assumes a single-tenant SparkSession; use spark.newSession()
-    # per concurrent pipeline.
+    # Scoping contract: the flips go through session.scoped_conf and are
+    # restored when run_pipeline returns or raises, but the RETURNED
+    # DataFrames are lazy — a stage a caller materializes after return
+    # runs under the restored confs (harmless: everything width-sensitive
+    # — the fixpoint, the pandas-UDF stages — materializes eagerly inside
+    # the scoped block; only the final decode projection floats).
     in_bytes = _plan_size_bytes(code_files)
     small_input = in_bytes is not None and in_bytes <= small_input_max_bytes
-    _toggled: dict = {}
-    if small_input:
-        for k in ("spark.sql.codegen.wholeStage", "spark.sql.adaptive.enabled"):
-            _toggled[k] = spark.conf.get(k, "true")
-            spark.conf.set(k, "false")
-        # with AQE off nothing coalesces the session's shuffle width, so a
-        # tiny input pays (width) near-empty tasks per exchange — at 32
-        # cores / 64 partitions that doubled the pipeline wall vs 8
-        # partitions (interleaved probe: 12.2s vs 6.2s at 1200 files).
-        # Size the width from the same Catalyst estimate that gated small
-        # mode (~32 MB per partition, floor 8) and restore it after.
-        k = "spark.sql.shuffle.partitions"
-        cur = int(spark.conf.get(k, "64"))
-        want = max(8, int(in_bytes) // (32 << 20) + 1)
-        if want < cur:
-            _toggled[k] = str(cur)
-            spark.conf.set(k, str(want))
-    try:
+    with scoped_conf(spark) as set_conf:
+        if small_input:
+            set_conf("spark.sql.codegen.wholeStage", False)
+            set_conf("spark.sql.adaptive.enabled", False)
+            # with AQE off nothing coalesces the session's shuffle width, so
+            # a tiny input pays (width) near-empty tasks per exchange — at
+            # 32 cores / 64 partitions that doubled the pipeline wall vs 8
+            # partitions (interleaved probe: 12.2s vs 6.2s at 1200 files).
+            # Size the width from the same Catalyst estimate that gated
+            # small mode (~32 MB per partition, floor 8).
+            want = max(8, int(in_bytes) // (32 << 20) + 1)
+            if want < shuffle_width(spark):
+                set_conf("spark.sql.shuffle.partitions", want)
+
         t0 = time.time()
         code_files = assert_sha256(code_files)
         triples = stage(extract_triples(code_files), "triples")
@@ -359,9 +353,6 @@ def run_pipeline(
             )
         derived, fx = infer_df(spark, canonical, rules, infer_config)
         t_fixpoint = time.time() - t0
-    finally:
-        for k, v in _toggled.items():
-            spark.conf.set(k, v)
     return PipelineResult(
         raw_triples=triples,
         links=links,

@@ -4,9 +4,14 @@ from __future__ import annotations
 
 import os
 import warnings
-from typing import Mapping, Optional
+from contextlib import contextmanager
+from typing import Callable, Iterator, Mapping, Optional
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+WIDTH_KEY = "spark.sql.shuffle.partitions"
+SetConf = Callable[[str, object], None]
 
 
 def get_spark(
@@ -40,8 +45,8 @@ def get_spark(
         # default here. Disabling it helps only the fixpoint's
         # iteration-deep plans (~0.5 s/iteration of optimizer time) and was
         # measured to COST the shallow ops queries ~10% (knn_lsh A/B,
-        # AB_KNN_LSH.json, round 5) — so infer.fixpoint() scopes the off
-        # toggle to its own run and restores on exit.
+        # AB_KNN_LSH.json, round 5) — so both fixpoint loops switch it off
+        # inside their own scoped_conf() block, restored on exit.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
@@ -64,6 +69,71 @@ def get_spark(
     spark = b.getOrCreate()
     _warm_session(spark)
     return spark
+
+
+def shuffle_width(spark: SparkSession) -> int:
+    """The session's shuffle width; unset reads as Spark's own default."""
+    return int(spark.conf.get(WIDTH_KEY, "200"))
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession) -> Iterator[SetConf]:
+    """Scope session SQL conf changes to a ``with`` block.
+
+    Yields ``set_conf(key, value)``; every session conf ``rify_spark``
+    changes goes through one. The first set of a key records its prior
+    value, and on every exit path — exceptions included — each recorded
+    key is put back: re-set if it had a value, unset if it had none.
+    Setting the value already in force is a no-op. Session confs are
+    shared by everything on the SparkSession, so this assumes a
+    single-tenant session: run concurrent fixpoints on
+    ``spark.newSession()`` instances, which have isolated SQLConf.
+    """
+    saved: dict = {}
+    current: dict = {}
+
+    def set_conf(key: str, value) -> None:
+        value = str(value).lower() if isinstance(value, bool) else str(value)
+        if current.get(key) == value:
+            return
+        if key not in saved:
+            saved[key] = spark.conf.get(key, None)
+        spark.conf.set(key, value)
+        current[key] = value
+
+    try:
+        yield set_conf
+    finally:
+        for key, value in saved.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def floor_regime(set_conf: SetConf, work_rows: int, session_width: int) -> None:
+    """The per-round conf regime both fixpoint loops share.
+
+    At or below 250k rows per core a round is floor-bound: the
+    driver-serial janino compile (~0.7-1.0 s/round) and AQE's
+    per-exchange stage-materialization jobs (~0.3-0.5 s/round), both
+    invariant in core count, dominate a sub-second data path. Codegen and
+    AQE go off, and since nothing then coalesces the shuffle width, the
+    width is sized to the round (~25k rows per partition, floor 8) instead
+    of paying ``session_width`` near-empty tasks per exchange. Above the
+    threshold the round is data-bound: codegen, AQE (skew-join splitting,
+    runtime broadcast conversion) and the session width come back. The
+    crossover is per core because interpreted evaluation costs
+    ~rows x O(µs) / cores of wall while the compile is a fixed cost. All
+    three confs are read at plan-compile time, so a flip changes only
+    plans built afterwards, never cached blocks or results.
+    """
+    cores = max(1, SparkContext.getOrCreate().defaultParallelism)
+    floor = work_rows <= 250_000 * cores
+    set_conf("spark.sql.codegen.wholeStage", not floor)
+    set_conf("spark.sql.adaptive.enabled", not floor)
+    width = max(8, min(session_width, work_rows // 25_000 + 1))
+    set_conf(WIDTH_KEY, width if floor else session_width)
 
 
 def _warm_session(spark: SparkSession) -> None:

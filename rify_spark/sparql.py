@@ -4006,8 +4006,10 @@ def sparql_describe(
     scale the store is range-read once for the edge projection and the
     iterations exchange only frontiers; named resources never join the
     frontier, so the closure is bounded by bnode-chain depth, not store
-    size — ``cbd_max_hops`` raises/lowers the chain-depth cap,
-    defaulting to bfs_levels' BFS_MAX_ITER of 64). Resources are the
+    size). ``cbd_max_hops`` caps the chain depth, defaulting to
+    bfs_levels' BFS_MAX_ITER of 64: the closure keeps the nodes within
+    that many hops, and a chain that still grows past
+    ``max(cbd_max_hops, 64)`` hops raises ``RuntimeError``. Resources are the
     DESCRIBE constants plus, for ``DESCRIBE ?v WHERE {...}``, the
     distinct non-null bindings of each described variable (an unbound —
     OPTIONAL-miss — binding describes nothing). Plan shape: the resource
@@ -4051,18 +4053,22 @@ def sparql_describe(
         resources = resources.unionByName(p)
     resources = resources.distinct()
     if cbd:
-        from .ops.graph import bfs_levels
+        from .ops.graph import BFS_MAX_ITER, bfs_levels
 
         bnode_edges = quads.filter(
             F.col("o").startswith("_:")
         ).select("s", "o")
-        kw = {} if cbd_max_hops is None else {"max_iter": cbd_max_hops}
+        hops = BFS_MAX_ITER if cbd_max_hops is None else cbd_max_hops
+        # bfs_levels raises rather than truncate, so a cap below its
+        # default is applied to the converged hop distances
         reached = bfs_levels(
             bnode_edges,
             resources.select(F.col("r").alias("node")),
-            **kw,
+            max_iter=max(hops, BFS_MAX_ITER),
         )
-        resources = reached.select(F.col("node").alias("r"))
+        resources = reached.filter(F.col("dist") <= hops).select(
+            F.col("node").alias("r")
+        )
     return (
         quads.select("s", "p", "o", "g")
         .join(resources, F.col("s") == F.col("r"), "left_semi")

@@ -59,6 +59,7 @@ from pyspark.sql import functions as F
 
 from ..infer import SPOG, FactStore, InferConfig, _union_all, fixpoint, seed_facts
 from ..rules import Rule, lower_rule
+from ..session import scoped_conf
 
 QUAD_SCHEMA = "s string, p string, o string, g string"
 BUCKET_COL = "bucket"
@@ -350,23 +351,19 @@ class IncrementalReasoner:
                 "retract_batch requires track_premises=True (the premise set "
                 "defines what a retraction means)"
             )
-        # constraint propagation OFF for the whole retraction (restored in
-        # the finally), for the fixpoint's perf reason (infer.py:876-884)
-        # plus a correctness one: the cone/readded unions mix eager
-        # localCheckpoints, and a checkpointed LogicalRDD carries its
+        # constraint propagation OFF for the whole retraction (scoped, so
+        # restored on every exit), for the fixpoint's perf reason (see
+        # infer.fixpoint) plus a correctness one: the cone/readded unions
+        # mix eager localCheckpoints, and a checkpointed LogicalRDD carries its
         # origin plan's constraints — when the source plan was
         # constraint-rich (parquet reads + filters), Union's
         # rewriteConstraints hits attributes absent from the checkpoint's
         # output and throws NoSuchElementException ("key not found: g#N",
         # UnionBase.rewriteConstraints). Constraints buy nothing here: every
         # join is an equi/semi/anti join on non-null quad columns.
-        _ckey = "spark.sql.constraintPropagation.enabled"
-        _csaved = self.spark.conf.get(_ckey, "true")
-        self.spark.conf.set(_ckey, "false")
-        try:
+        with scoped_conf(self.spark) as set_conf:
+            set_conf("spark.sql.constraintPropagation.enabled", False)
             return self._retract_batch_inner(retract_df)
-        finally:
-            self.spark.conf.set(_ckey, _csaved)
 
     def _retract_batch_inner(self, retract_df: DataFrame) -> dict:
         from .retract import (

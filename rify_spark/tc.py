@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .matcher import SPOG, term_lit
+from .session import floor_regime, scoped_conf, shuffle_width
 
 PAIR = ["s", "o", "g"]
 
@@ -110,45 +111,6 @@ def smart_tc_fixpoint(
     tracked_deltas: list = []  # post-seed novel blocks == derived facts
     last_base = 0  # iteration of the newest full-facts parquet base
 
-    # Adaptive codegen / AQE / constraint propagation, mirroring the generic
-    # loop (infer.fixpoint): below the per-core threshold a round is
-    # floor-bound — driver-serial janino compile plus AQE's per-exchange
-    # stage-materialization jobs dominate a sub-second data path (profiled
-    # ~1-1.5 s/round of the sf0.1 ancestry closure's ~1.2 s/round wall) —
-    # so both flip off while the store is small and back on once the
-    # closure grows data-bound. Constraint propagation is off for the whole
-    # run (quad columns are non-null by construction; every join is an
-    # inner equi-join), scoped here and restored in the finally, same as
-    # the generic loop. Results are unaffected: all three are plan-cost
-    # knobs read at compile time.
-    _toggles = {
-        "spark.sql.codegen.wholeStage": None,
-        "spark.sql.adaptive.enabled": None,
-        "spark.sql.constraintPropagation.enabled": None,
-        "spark.sql.shuffle.partitions": None,
-    }
-    _width_key = "spark.sql.shuffle.partitions"
-    _saved = {k: spark.conf.get(k, "true") for k in _toggles if k != _width_key}
-    # the width is numeric: unset, it reads as Spark's own default
-    _saved[_width_key] = spark.conf.get(_width_key, "200")
-    _session_width = int(_saved[_width_key])
-    _percore = 250_000 * max(1, spark.sparkContext.defaultParallelism)
-    codegen_below = (
-        cfg.codegen_below_rows if cfg.codegen_below_rows is not None else _percore
-    )
-    aqe_below = cfg.aqe_below_rows if cfg.aqe_below_rows is not None else _percore
-
-    def _set_conf(key: str, on: bool) -> None:
-        if _toggles[key] is not on:
-            spark.conf.set(key, str(on).lower())
-            _toggles[key] = on
-
-    def _set_width(w: int) -> None:
-        key = "spark.sql.shuffle.partitions"
-        if _toggles[key] != w:
-            spark.conf.set(key, str(w))
-            _toggles[key] = w
-
     resumed = None
     if ckpt and cfg.resume:
         resumed = ckpt.latest()
@@ -199,30 +161,23 @@ def smart_tc_fixpoint(
         # unknown (None) until a checkpointing run needs it for meta
         d_rows = None
 
-    try:
-        _set_conf("spark.sql.constraintPropagation.enabled", False)
+    # Same conf regime as the generic loop (infer.fixpoint): constraint
+    # propagation off for the whole run (quad columns are non-null by
+    # construction; every join is an inner equi-join), codegen/AQE/width
+    # per round via floor_regime (profiled ~1-1.5 s/round of the sf0.1
+    # ancestry closure's ~1.2 s/round wall is that floor). All are
+    # plan-cost knobs read at compile time; results are unaffected.
+    with scoped_conf(spark) as set_conf:
+        set_conf("spark.sql.constraintPropagation.enabled", False)
+        session_width = shuffle_width(spark)
         while cfg.max_iterations is None or it < cfg.max_iterations:
             it += 1
             t0 = time.time()
             # the round's data volume: the compose scans the whole R plus
-            # the D wavefront, so key the codegen/AQE decision to the larger
-            # of the two; with a lazy (uncounted) wavefront, facts_rows
-            # alone decides — it already dominates every prior delta
-            work_rows = max(facts_rows, d_rows or 0)
-            if codegen_below:
-                _set_conf("spark.sql.codegen.wholeStage", work_rows > codegen_below)
-            if aqe_below:
-                _set_conf("spark.sql.adaptive.enabled", work_rows > aqe_below)
-                # with AQE off nothing coalesces the session's shuffle
-                # width, so a floor-bound round pays (width) near-empty
-                # tasks per implicit exchange (the compose join) — size the
-                # width to the round's rows, same rule as the pipeline's
-                # small-input mode, and restore once the closure grows past
-                # the AQE threshold (or on exit)
-                if work_rows <= aqe_below:
-                    _set_width(max(8, min(_session_width, work_rows // 25_000 + 1)))
-                else:
-                    _set_width(_session_width)
+            # the D wavefront, so key the regime to the larger of the two;
+            # with a lazy (uncounted) wavefront, facts_rows alone decides —
+            # it already dominates every prior delta
+            floor_regime(set_conf, max(facts_rows, d_rows or 0), session_width)
             if it == 1:
                 # round 1 = the copy rule: seed the H relation with the edge
                 # image. H-facts already among the premises are in the store.
@@ -333,11 +288,6 @@ def smart_tc_fixpoint(
                     ckpt.prune(last_base)
             if d_rows is not None and d_rows == 0:
                 break
-
-    finally:
-        for k, v in _saved.items():
-            if _toggles[k] is not None:
-                spark.conf.set(k, v)
 
     return FixpointResult(
         facts=store.union(),

@@ -62,9 +62,6 @@ def main() -> None:
         "iter_walls": [
             m.get("wall_s") for m in res.metrics.get("iteration_metrics", [])
         ],
-        "fused": [
-            m.get("fused_rounds") for m in res.metrics.get("iteration_metrics", [])
-        ],
     }
     print(json.dumps(out))
 

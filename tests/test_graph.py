@@ -113,16 +113,58 @@ def test_bfs_levels_multi_source_and_cap(spark):
     }
     # each node takes its NEAREST source
     assert got["n5"] == 1 and got["n3"] == 3 and got["n4"] == 0
-    # the max_iter guard truncates exploration
-    capped = {
-        r["node"]: r["dist"]
-        for r in bfs_levels(
+    # the max_iter guard never truncates: level 3 still reaches n3
+    import pytest
+
+    with pytest.raises(RuntimeError, match="did not converge"):
+        bfs_levels(
             chain,
             spark.createDataFrame([("n0",)], "node string"),
             max_iter=2,
-        ).collect()
+        )
+
+
+def _path(spark, n, weight=None):
+    rows = [
+        (f"n{i}", f"n{i + 1}") + (() if weight is None else (weight,))
+        for i in range(n)
+    ]
+    schema = "s string, o string" + ("" if weight is None else ", w int")
+    return spark.createDataFrame(rows, schema), spark.createDataFrame(
+        [("n0",)], "node string"
+    )
+
+
+def test_bfs_levels_nonconvergence_raises_not_partial(spark):
+    # an 8-edge path needs 8 levels: a 5-level budget must raise, never
+    # return the first 5 levels; with the budget at the depth it matches
+    # the closed form dist(n_i) = i
+    import pytest
+
+    from rify_spark.ops.graph import bfs_levels
+
+    edges, src = _path(spark, 8)
+    with pytest.raises(RuntimeError, match="bfs_levels did not converge"):
+        bfs_levels(edges, src, max_iter=5)
+    got = {r["node"]: r["dist"] for r in bfs_levels(edges, src, max_iter=8).collect()}
+    assert got == {f"n{i}": i for i in range(9)}
+
+
+def test_sssp_nonconvergence_raises_not_partial(spark):
+    # an 8-edge weight-3 path improves one node per round: a 5-round
+    # budget must raise; with the budget at the depth dist(n_i) = 3i
+    import pytest
+
+    from rify_spark.ops.graph import sssp_distances
+
+    edges, src = _path(spark, 8, weight=3)
+    with pytest.raises(RuntimeError, match="sssp_distances did not converge"):
+        sssp_distances(edges, src, max_iter=5)
+    got = {
+        r["node"]: r["dist"]
+        for r in sssp_distances(edges, src, max_iter=8).collect()
     }
-    assert max(capped.values()) == 2 and "n3" not in capped
+    assert got == {f"n{i}": 3 * i for i in range(9)}
 
 
 def test_sssp_min_plus_beats_hop_count(spark):

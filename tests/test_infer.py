@@ -319,15 +319,11 @@ def test_seed_plan_pruning_preserves_fixpoint(spark):
             [[U("b"), B("liked_by"), U("a"), U("g")]],
         ),
     ]
-    # fuse_rounds=1: this test asserts per-round plan counts, which fusion
-    # deliberately coarsens (plans_built sums the fused rounds)
     df_on, fx_on = infer_df(
-        spark, facts, rules,
-        config=InferConfig(prune_seed_plans=True, fuse_rounds=1),
+        spark, facts, rules, config=InferConfig(prune_seed_plans=True)
     )
     df_off, fx_off = infer_df(
-        spark, facts, rules,
-        config=InferConfig(prune_seed_plans=False, fuse_rounds=1),
+        spark, facts, rules, config=InferConfig(prune_seed_plans=False)
     )
     assert sorted(map(tuple, df_on.collect())) == sorted(map(tuple, df_off.collect()))
     # 4 seed plans exist (1 + 2 + 1); after iteration 1 the delta carries
@@ -407,8 +403,8 @@ def test_fixpoint_rescan_hot_on_compact_preserves_results(spark):
         for j in range(i + 1, n + 1)
     )
     assert got == want
-    # linear rule: one hop per fused round, fuse_rounds hops per iteration
-    assert fx.iterations >= n // InferConfig().fuse_rounds
+    # linear rule: one hop per iteration
+    assert fx.iterations >= n
     assert any(m.get("compacted") for m in fx.metrics)
 
 
@@ -546,28 +542,38 @@ def test_store_growth_triggers_on_rows_not_only_block_count(spark):
     assert store.union().count() == 1008
 
 
-def test_fixpoint_scopes_constraint_propagation(spark):
-    """The constraintPropagation off-toggle is scoped to the fixpoint run:
-    whatever the caller had set is restored on exit (round 5: the global
-    off in session.py cost the shallow ops queries ~10%, AB_KNN_LSH.json)."""
+def _copy_or_tc_program(spark, smart):
+    """A one-rule copy program (generic loop) or, with ``smart``, the
+    linear TC of a 6-edge chain (routes to tc.smart_tc_fixpoint; 21
+    derived quads)."""
+    rules = [([[U("a"), B("p"), U("b"), U("g")]], [[U("a"), B("q"), U("b"), U("g")]])]
+    rows = [("x", "p", "y", "g")]
+    if smart:
+        rules.append((
+            [[U("a"), B("p"), U("b"), U("g")], [U("b"), B("q"), U("c"), U("g")]],
+            [[U("a"), B("q"), U("c"), U("g")]],
+        ))
+        rows = [(f"n{i}", "p", f"n{i + 1}", "g") for i in range(6)]
+    facts = spark.createDataFrame(rows, "s string, p string, o string, g string")
+    return facts, decl_rules(rules)
+
+
+@pytest.mark.parametrize("smart", [True, False])
+def test_fixpoint_scopes_constraint_propagation(spark, smart):
+    """The constraintPropagation off-toggle is scoped to the fixpoint run
+    in both loops: whatever the caller had set is restored on exit (round
+    5: the global off in session.py cost the shallow ops queries ~10%,
+    AB_KNN_LSH.json)."""
     from rify_spark.api import infer_df
-    from rify_spark.rules import Bound as B, Rule, Unbound as U
 
     key = "spark.sql.constraintPropagation.enabled"
-    rules = [
-        Rule.create(
-            [[U("a"), B("p"), U("b"), U("g")]],
-            [[U("a"), B("q"), U("b"), U("g")]],
-        )
-    ]
-    facts = spark.createDataFrame(
-        [("x", "p", "y", "g")], "s string, p string, o string, g string"
-    )
+    facts, rules = _copy_or_tc_program(spark, smart)
     saved = spark.conf.get(key)
     try:
         for preset in ("true", "false"):
             spark.conf.set(key, preset)
-            infer_df(spark, facts, rules)
+            _, res = infer_df(spark, facts, rules)
+            assert (res.metrics[0].get("strategy") == "smart_tc") == smart
             assert spark.conf.get(key) == preset
     finally:
         spark.conf.set(key, saved)
@@ -581,16 +587,7 @@ def test_fixpoint_unset_shuffle_width_falls_back_to_spark_default(spark, smart):
     from rify_spark.api import infer_df
 
     key = "spark.sql.shuffle.partitions"
-    rules = [([[U("a"), B("p"), U("b"), U("g")]], [[U("a"), B("q"), U("b"), U("g")]])]
-    rows = [("x", "p", "y", "g")]
-    if smart:  # linear TC over a 6-edge chain routes to tc.smart_tc_fixpoint
-        rules.append((
-            [[U("a"), B("p"), U("b"), U("g")], [U("b"), B("q"), U("c"), U("g")]],
-            [[U("a"), B("q"), U("c"), U("g")]],
-        ))
-        rows = [(f"n{i}", "p", f"n{i + 1}", "g") for i in range(6)]
-    rules = decl_rules(rules)
-    facts = spark.createDataFrame(rows, "s string, p string, o string, g string")
+    facts, rules = _copy_or_tc_program(spark, smart)
     saved = spark.conf.get(key)
     try:
         spark.conf.unset(key)
@@ -601,59 +598,6 @@ def test_fixpoint_unset_shuffle_width_falls_back_to_spark_default(spark, smart):
         assert spark.conf.get(key) == before
     finally:
         spark.conf.set(key, saved)
-
-
-def test_fused_iterations_reach_identical_fixpoint(spark):
-    """Iteration fusion (fuse_rounds>1) is a coarser chaotic iteration of the
-    same monotone operator: the derived set must be identical to plain
-    semi-naive, in fewer outer iterations. Exercises the re-seeded fused
-    rounds (delta_k = round-k novelty minus earlier fused novelty,
-    facts = store ∪ accumulated novelty, F_old = the previous round's
-    facts) including the head-predicate prune set. fuse_rounds=3 covers
-    the k>=3 accumulation path: round 3 joins round-1 novelty against
-    round-2 novelty inside ONE outer iteration, which the pre-fix code
-    (round_facts rebuilt from the pre-fusion store) could not do."""
-    from rify_spark.api import infer_df
-    from rify_spark.infer import InferConfig
-    from rify_spark.rules import Bound as B, Rule, Unbound as U
-
-    # 64-deep chain => 6+ semi-naive iterations; plus a renaming rule so the
-    # fused round-2 prune set sees several head predicates
-    edges = [(f"n{i}", "parent", f"n{i+1}", "g") for i in range(64)]
-    facts = spark.createDataFrame(edges, "s string, p string, o string, g string")
-    rules = [
-        Rule.create(
-            [[U("a"), B("parent"), U("b"), U("g")]],
-            [[U("a"), B("anc"), U("b"), U("g")]],
-        ),
-        Rule.create(
-            [
-                [U("a"), B("anc"), U("b"), U("g")],
-                [U("b"), B("anc"), U("c"), U("g")],
-            ],
-            [[U("a"), B("anc"), U("c"), U("g")]],
-        ),
-    ]
-    # rewrite detection OFF: the pure nonlinear pair would otherwise
-    # delegate to smart TC (tc.py) and never reach the fused generic loop
-    # this test exists to exercise
-    df_plain, fx_plain = infer_df(
-        spark, facts, rules,
-        config=InferConfig(fuse_rounds=1, rewrite_linear_recursion=False),
-    )
-    expected = sorted(map(tuple, df_plain.collect()))
-    for k in (2, 3):
-        df_fused, fx_fused = infer_df(
-            spark, facts, rules,
-            config=InferConfig(
-                fuse_rounds=k,
-                fuse_below_rows=10**9,
-                rewrite_linear_recursion=False,
-            ),
-        )
-        assert sorted(map(tuple, df_fused.collect())) == expected
-        assert fx_fused.iterations < fx_plain.iterations
-        assert any(m.get("fused_rounds") == k for m in fx_fused.metrics)
 
 
 def test_tiered_compaction_keeps_base_and_exact_union(spark):
