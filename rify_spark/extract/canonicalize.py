@@ -1,18 +1,13 @@
 """Entity canonicalization: connected components over candidate same-as
-edges, via iterative min-label propagation on a salted hash-partitioned id
-space (the north rule's "connected-components-style min-hash union").
+edges (the north rule's "connected-components-style min-hash union").
 
-No reference analog (rify has no entity resolution). Spark-first design:
-
-  * nodes get 64-bit ``xxhash64`` ids (same scheme as the term dictionary —
-    shuffle-free to compute, uniformly hash-partitioned, so a hot entity
-    name does not land its whole component on one partition);
-  * labels converge by repeated (edges ⋈ labels) -> groupBy(min) rounds —
-    the classic label-propagation CC. Rounds are bounded by component
-    diameter; entity-link components are star-shaped (mention -> definition),
-    so convergence is 2-3 rounds in practice;
-  * each round's label table is checkpointed (same rationale as the
-    inference fixpoint: cut iterative lineage).
+No reference analog (rify has no entity resolution). The components come
+from the one min-label propagation kernel,
+:func:`rify_spark.ops.graph.min_label_components`: fused two-hop rounds
+over a once-checkpointed edge table, each round's labels checkpointed and
+checked for convergence by one straddling-edge count. Entity-link
+components are star-shaped (mention -> definition), so convergence is one
+round in practice.
 
 Representative election is rank-based: every node carries a (rank, id) pair
 and components adopt the minimum — ranks order canonical IRIs before
@@ -23,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..ops.graph import CC_MAX_ITER, min_label_components
 
 # lower rank = preferred representative
 _RANKS = [
@@ -46,87 +43,26 @@ def _node_rank():
 
 
 def connected_components(
-    edges: DataFrame, max_rounds: int = 50, hops_per_round: int = 2
+    edges: DataFrame, max_iter: int = CC_MAX_ITER
 ) -> DataFrame:
     """edges(a: string, b: string) -> mapping(node: string, canon: string).
 
     Undirected connected components; each node maps to its component's
-    preferred representative (min (rank, node) lexicographically).
-
-    Convergence is checked by EDGE CONSISTENCY — count of edges whose
-    endpoints carry different labels — not by label change between rounds.
-    Labels only ever decrease and are always drawn from the component's
-    initial labels, so "every edge agrees" is exactly the fixpoint (each
-    component uniform on its min), and it holds the moment the last hop
-    lands rather than one no-op round later. Entity-link graphs are
-    bipartite mention->entity stars (diameter <=2), so the common case is
-    ONE round: ``hops_per_round`` lazy propagation hops fused into a single
-    plan, one eager checkpoint, one consistency count — two driver barriers
-    total, vs the 5+ of a change-detection loop. Deeper components
-    (ambiguous mentions chaining entities) just take more rounds; the hop
-    budget ``max_rounds`` bounds the total and failure is loud.
+    preferred representative: the min ``(rank, node)`` struct label of
+    :func:`rify_spark.ops.graph.min_label_components` (lexicographic, so
+    the rank decides first). Entity-link graphs are bipartite
+    mention->entity stars (diameter <= 2), so the common case is one
+    round; ambiguous mentions chaining entities take more, up to
+    ``max_iter`` rounds, past which the call raises.
     """
-    nodes = (
-        edges.select(F.col("a").alias("node"))
-        .unionByName(edges.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    # label = (rank, node) struct; min over struct = lexicographic. Lazy:
-    # the first round's checkpoint materializes it fused with the hops.
-    labels = nodes.select(
-        "node",
-        F.struct(_node_rank().alias("r"), F.col("node").alias("n")).alias("label"),
-    )
-
-    sym = edges.select("a", "b").unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-
-    def propagate(lab: DataFrame) -> DataFrame:
-        neighbor_labels = sym.join(
-            lab, sym["a"] == lab["node"], "inner"
-        ).select(F.col("b").alias("node"), F.col("label"))
-        return (
-            lab.unionByName(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-
-    def straddling_edges(lab: DataFrame) -> int:
-        la = lab.select(F.col("node").alias("a"), F.col("label").alias("__la"))
-        lb = lab.select(F.col("node").alias("b"), F.col("label").alias("__lb"))
-        return (
-            edges.select("a", "b")
-            .join(la, "a")
-            .join(lb, "b")
-            .filter(F.col("__la") != F.col("__lb"))
-            .count()
-        )
-
-    bad = -1
-    hops_done = 0
-    while hops_done < max_rounds:
-        for _hop in range(hops_per_round):
-            labels = propagate(labels)
-        hops_done += hops_per_round
-        # lazy checkpoint: the consistency count materializes it, so a
-        # whole round (hops + checkpoint + convergence check) is ONE job
-        labels = labels.localCheckpoint(eager=False)
-        bad = straddling_edges(labels)
-        if bad == 0:
-            return labels.select("node", F.col("label.n").alias("canon"))
-    # a partially-converged mapping would silently split one component
-    # onto multiple representatives — fail loud instead
-    raise RuntimeError(
-        f"connected_components did not converge within {hops_done} "
-        f"label-propagation hops ({bad} edges still straddling two labels); "
-        f"the edge graph has a component with diameter > {max_rounds} — "
-        f"raise max_rounds (the total hop budget)"
+    label = F.struct(_node_rank().alias("r"), F.col("node").alias("n"))
+    return min_label_components(edges, label, max_iter).select(
+        "node", F.col("label.n").alias("canon")
     )
 
 
 def scoped_components(
-    edges: DataFrame, max_rounds: int = 50, hops_per_round: int = 2
+    edges: DataFrame, max_iter: int = CC_MAX_ITER
 ) -> DataFrame:
     """Graph-scoped connected components.
 
@@ -140,7 +76,7 @@ def scoped_components(
         F.concat(F.col("g"), F.lit(SCOPE_SEP), F.col("a")).alias("a"),
         F.concat(F.col("g"), F.lit(SCOPE_SEP), F.col("b")).alias("b"),
     )
-    mapping = connected_components(prefixed, max_rounds, hops_per_round)
+    mapping = connected_components(prefixed, max_iter)
     return mapping.select(
         F.substring_index(F.col("node"), SCOPE_SEP, 1).alias("g"),
         F.substring_index(F.col("node"), SCOPE_SEP, -1).alias("node"),

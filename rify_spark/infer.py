@@ -91,7 +91,7 @@ class FactStore:
     ):
         self.spark = spark
         self.fixed_partitions = fixed_partitions
-        self.max_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        self.max_partitions = shuffle_width(spark)
         self.rows_per_partition = rows_per_partition
         self.compact_every = max(2, compact_every)
         self.blocks: list = []

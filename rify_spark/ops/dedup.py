@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .graph import min_label_components
 from .params import (
     EMB_BAND_BITS_MAX,
     EMB_BAND_BITS_MIN,
@@ -815,56 +816,21 @@ def neardup_clusters(docs: DataFrame) -> DataFrame:
 
     Composition, all O(near-duplicates) and never quadratic in bucket
     size: :func:`_star_edges` (bucket-min stars — same components as the
-    full candidate-pair cliques, k-1 edges per k-bucket) feeds
-    min-label-propagation connected components on 8-byte doc_id keys —
-    the same fused-hops + edge-consistency-convergence design as the
-    entity canonicalizer (extract/canonicalize.py:48), restated here on
-    numeric labels because doc ids need no rank ordering and long shuffle
-    keys beat strings. Rounds are bounded by component diameter; star
-    edges keep each bucket at diameter 2, so rounds only grow when
-    buckets genuinely chain. Labels stay hash-partitioned by doc_id — no
-    skew: a mega-cluster spreads across partitions and only its (node,
-    label) rows shuffle, never document text. The DuckDB oracle
+    full candidate-pair cliques, k-1 edges per k-bucket) feeds the
+    min-label connected-components kernel
+    (:func:`rify_spark.ops.graph.min_label_components`) labelled by the
+    8-byte doc_id itself — doc ids need no rank ordering and long shuffle
+    keys beat strings. Star edges keep each bucket at diameter 2, so the
+    common case is one round. The DuckDB oracle
     (:func:`neardup_clusters_sql`) computes reachability over the FULL
     candidate-pair graph — its exact agreement is also the proof that the
     star reduction preserves components.
     """
-    star = _star_edges(docs)
-    sym = star.unionByName(
-        star.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    sym = sym.localCheckpoint(eager=False)  # reused every round: cut the LSH plan
-    labels = (
-        sym.select(F.col("a").alias("node")).distinct().withColumn("lab", F.col("node"))
-    )
-    for _round in range(25):
-        # two propagation hops fused lazily per round (same trick as
-        # extract/canonicalize.py): star components have diameter 2, so
-        # the common case is ONE barrier — the straddle count below
-        # materializes the checkpoint and checks convergence in one job
-        for _hop in range(2):
-            neighbor = sym.join(labels, sym["a"] == labels["node"]).select(
-                F.col("b").alias("node"), F.col("lab")
-            )
-            labels = (
-                labels.unionByName(neighbor)
-                .groupBy("node")
-                .agg(F.min("lab").alias("lab"))
-            )
-        labels = labels.localCheckpoint(eager=False)
-        la = labels.select(F.col("node").alias("a"), F.col("lab").alias("__la"))
-        lb = labels.select(F.col("node").alias("b"), F.col("lab").alias("__lb"))
-        straddling = (
-            sym.join(la, "a").join(lb, "b").filter(F.col("__la") != F.col("__lb"))
-        )
-        if straddling.count() == 0:
-            break
-    else:
-        raise RuntimeError("neardup_clusters: component diameter > 50 hops")
-    sizes = labels.groupBy("lab").agg(F.count("*").alias("cluster_size"))
-    return labels.join(sizes, "lab").select(
+    labels = min_label_components(_star_edges(docs))
+    sizes = labels.groupBy("label").agg(F.count("*").alias("cluster_size"))
+    return labels.join(sizes, "label").select(
         F.col("node").alias("doc_id"),
-        F.col("lab").alias("canon_id"),
+        F.col("label").alias("canon_id"),
         "cluster_size",
     )
 

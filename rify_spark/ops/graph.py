@@ -19,10 +19,13 @@ Spark-first and 100-TB-shaped:
 
 from __future__ import annotations
 
-import itertools
+from contextlib import contextmanager
+from typing import Callable, Iterator, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..session import shuffle_width
 
 
 def edges_table(quads: DataFrame) -> DataFrame:
@@ -63,6 +66,44 @@ def vertices_table(quads: DataFrame) -> DataFrame:
 def materialize_graph(quads: DataFrame) -> tuple:
     """(vertices, edges) of the quad store — the publishable KG shape."""
     return vertices_table(quads), edges_table(quads)
+
+
+# --- the iterative-loop skeleton ---------------------------------------------
+#
+# rify's engine is one loop — apply the rules to the new facts until none
+# appear (src/infer.rs:52-77). Every iterative graph operator below is that
+# loop over one relation: a once-partitioned edge cache (``_cached``) and a
+# round loop with one convergence contract (``_converge``).
+
+
+@contextmanager
+def _cached(df: DataFrame, key: str) -> Iterator[DataFrame]:
+    """``df`` hash-partitioned on ``key`` at the session's shuffle width,
+    persisted and materialized once for a loop to reuse. Unpersisted on
+    every exit, so a failed job never leaks the cache for the session."""
+    cached = df.repartition(shuffle_width(df.sparkSession), key).persist()
+    try:
+        cached.count()
+        yield cached
+    finally:
+        cached.unpersist()
+
+
+def _converge(name: str, max_iter: int, step: Callable, state):
+    """Run ``state, done = step(state, rnd)`` for rounds 1, 2, ... and
+    return the state of the first round that reports ``done``.
+
+    Round ``max_iter + 1`` runs only when round ``max_iter`` was not done,
+    as the check: if it is still not done the call raises ``RuntimeError``.
+    A loop never returns a partial result, and one that converges within
+    its budget runs no extra round."""
+    for rnd in range(1, max_iter + 2):
+        state, done = step(state, rnd)
+        if done:
+            return state
+    raise RuntimeError(
+        f"{name} did not converge within max_iter={max_iter}; raise max_iter"
+    )
 
 
 # --- driver-gate query + DuckDB oracle --------------------------------------
@@ -180,54 +221,42 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     (lineage is also truncated, so downstream plans don't re-run the
     loop).
     """
-    spark = edges.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ed = edges.select("s", "o")
     nodes = (
         ed.select(F.col("s").alias("node"))
         .unionByName(ed.select(F.col("o").alias("node")))
         .distinct()
-        .repartition(width, "node")
-        .persist()
     )
     outdeg = ed.groupBy("s").agg(F.count("*").alias("outdeg"))
-    edges_deg = (
-        ed.join(outdeg, "s")
-        .select("s", "o", "outdeg")
-        .repartition(width, "s")
-        .persist()
-    )
-    edges_deg.count()  # materialize the partitioned cache before the loop
-    ranks = nodes.select(
-        "node", F.lit(PR_UNIT).cast("long").alias("rank")
-    )
-    for _ in range(iters):
-        contrib = (
-            edges_deg.join(ranks, edges_deg["s"] == ranks["node"])
-            .select(
-                F.col("o"),
-                F.expr("rank div outdeg").alias("c"),
-            )
-            .groupBy("o")
-            .agg(F.sum("c").alias("contrib"))
+    edges_deg = ed.join(outdeg, "s").select("s", "o", "outdeg")
+    with _cached(nodes, "node") as nodes, _cached(edges_deg, "s") as edges_deg:
+        ranks = nodes.select(
+            "node", F.lit(PR_UNIT).cast("long").alias("rank")
         )
-        ranks = (
-            nodes.join(contrib, nodes["node"] == contrib["o"], "left")
-            .select(
-                "node",
-                (
-                    F.lit(PR_BASE)
-                    + F.expr(
-                        f"({PR_DAMP_NUM} * coalesce(contrib, 0L))"
-                        f" div {PR_DAMP_DEN}"
-                    )
-                ).cast("long").alias("rank"),
+        for _ in range(iters):
+            contrib = (
+                edges_deg.join(ranks, edges_deg["s"] == ranks["node"])
+                .select(
+                    F.col("o"),
+                    F.expr("rank div outdeg").alias("c"),
+                )
+                .groupBy("o")
+                .agg(F.sum("c").alias("contrib"))
             )
-        )
-    out = ranks.localCheckpoint()  # eager: caches below are still live here
-    edges_deg.unpersist()
-    nodes.unpersist()
-    return out
+            ranks = (
+                nodes.join(contrib, nodes["node"] == contrib["o"], "left")
+                .select(
+                    "node",
+                    (
+                        F.lit(PR_BASE)
+                        + F.expr(
+                            f"({PR_DAMP_NUM} * coalesce(contrib, 0L))"
+                            f" div {PR_DAMP_DEN}"
+                        )
+                    ).cast("long").alias("rank"),
+                )
+            )
+        return ranks.localCheckpoint()  # eager: the caches are still live
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -446,32 +475,25 @@ def bfs_levels(
     extra materializations: the simple eager-checkpoint-per-level shape
     below is the fastest measured form at both core counts.
     """
-    spark = edges.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # null endpoints (quarantined RDF rows, outer-join residue) would
     # defeat the anti-join's visited check (null keys never match) and
     # re-add a null node at every level — drop them up front
-    ed = (
-        edges.select("s", "o")
-        .filter(F.col("s").isNotNull() & F.col("o").isNotNull())
-        .repartition(width, "s")
-        .persist()
+    ed = edges.select("s", "o").filter(
+        F.col("s").isNotNull() & F.col("o").isNotNull()
     )
-    ed.count()
-    visited = (
-        sources.select(F.col("node"))
-        .filter(F.col("node").isNotNull())
-        .dropDuplicates(["node"])
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint()
-    )
-    frontier = visited
-    try:
-        for d in itertools.count(1):
+    with _cached(ed, "s") as ed:
+        visited = (
+            sources.select(F.col("node"))
+            .filter(F.col("node").isNotNull())
+            .dropDuplicates(["node"])
+            .select("node", F.lit(0).cast("long").alias("dist"))
+            .localCheckpoint()
+        )
+
+        def level(state, d):
+            visited, frontier = state
             nxt = (
-                ed.join(
-                    frontier.select(F.col("node").alias("s")), "s"
-                )
+                ed.join(frontier.select(F.col("node").alias("s")), "s")
                 .select(F.col("o").alias("node"))
                 .dropDuplicates(["node"])
                 .join(visited, "node", "left_anti")
@@ -479,19 +501,10 @@ def bfs_levels(
                 .localCheckpoint()
             )
             if not nxt.take(1):
-                break
-            if d > max_iter:
-                raise RuntimeError(
-                    f"bfs_levels did not converge within max_iter={max_iter} "
-                    f"levels (level {d} still reaches new nodes); raise max_iter"
-                )
-            visited = visited.unionByName(nxt)
-            frontier = nxt
-    finally:
-        # a job failure mid-loop must not leak the cached edge table for
-        # the session lifetime
-        ed.unpersist()
-    return visited
+                return state, True
+            return (visited.unionByName(nxt), nxt), False
+
+        return _converge("bfs_levels", max_iter, level, (visited, visited))[0]
 
 
 def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -548,29 +561,20 @@ def sssp_distances(
     ``RuntimeError`` instead of returning unsettled distances.
     Integer arithmetic end to end — bit-identical across engines, no
     float summation order to diverge."""
-    spark = edges.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ed = (
-        edges.select("s", "o", F.col("w").cast("long").alias("w"))
-        .filter(
-            F.col("s").isNotNull()
-            & F.col("o").isNotNull()
-            & (F.col("w") >= 0)
+    ed = edges.select("s", "o", F.col("w").cast("long").alias("w")).filter(
+        F.col("s").isNotNull() & F.col("o").isNotNull() & (F.col("w") >= 0)
+    )
+    with _cached(ed, "s") as ed:
+        dist = (
+            sources.select(F.col("node"))
+            .filter(F.col("node").isNotNull())
+            .dropDuplicates(["node"])
+            .select("node", F.lit(0).cast("long").alias("dist"))
+            .localCheckpoint()
         )
-        .repartition(width, "s")
-        .persist()
-    )
-    ed.count()
-    dist = (
-        sources.select(F.col("node"))
-        .filter(F.col("node").isNotNull())
-        .dropDuplicates(["node"])
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint()
-    )
-    frontier = dist
-    try:
-        for rnd in itertools.count(1):
+
+        def relax(state, _rnd):
+            dist, frontier = state
             cand = (
                 ed.join(
                     frontier.select(
@@ -594,13 +598,7 @@ def sssp_distances(
                 .localCheckpoint()
             )
             if not improved.take(1):
-                break
-            if rnd > max_iter:
-                raise RuntimeError(
-                    f"sssp_distances did not converge within max_iter="
-                    f"{max_iter} rounds (round {rnd} still improves a "
-                    f"node); raise max_iter"
-                )
+                return state, True
             # lazy checkpoint: without it the settled map's plan nests one
             # anti-join per round and every later round re-executes the
             # whole chain — O(rounds^2) join work (measured 22.2s for a
@@ -612,11 +610,9 @@ def sssp_distances(
                 .unionByName(improved)
                 .localCheckpoint(eager=False)
             )
-            frontier = improved
-    finally:
-        # a job failure mid-loop must not leak the cached edge table
-        ed.unpersist()
-    return dist
+            return (dist, improved), False
+
+        return _converge("sssp_distances", max_iter, relax, (dist, dist))[0]
 
 
 def graph_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,19 +653,75 @@ def graph_sssp_sql() -> str:
     """
 
 
-# --- standalone connected-components gate ------------------------------------
+# --- connected components (min-label propagation) ---------------------------
+
+CC_MAX_ITER = 25
+
+
+def min_label_components(
+    edges: DataFrame, label: Optional[Column] = None, max_iter: int = CC_MAX_ITER
+) -> DataFrame:
+    """Undirected connected components of an ``(a, b)`` edge table ->
+    ``(node, label)``: every node carries its component's minimum
+    ``label``, an expression over the node column ``node`` (default: the
+    node itself). Callers choose the label's type: the entity
+    canonicalizer a ``(rank, node)`` struct so preferred IRIs win, the
+    near-dup clusterer a plain 8-byte doc id.
+
+    Convergence is checked by EDGE CONSISTENCY — the count of edges whose
+    endpoints carry different labels — not by label change between
+    rounds. Labels only ever decrease and are always drawn from the
+    component's initial labels, so "every edge agrees" is exactly the
+    fixpoint (each component uniform on its min), and it holds the moment
+    the last hop lands rather than one no-op round later. A round is two
+    lazy propagation hops fused into one plan, a lazy checkpoint of the
+    labels and one straddle count that materializes both — one driver
+    barrier. Star
+    components (entity links mention -> definition, LSH bucket-min stars)
+    have diameter 2, so the common case is ONE round; rounds only grow
+    when components genuinely chain. The input edges are checkpointed
+    once (lazily: the first round fills it), so every round reads them
+    without re-running their plan; the straddle count runs over them, not
+    over both directions. Labels stay hash-partitioned by node, so a
+    mega-component spreads across partitions and only (node, label) rows
+    shuffle. ``max_iter`` bounds the rounds (2 hops each).
+    """
+    edges = edges.select("a", "b").localCheckpoint(eager=False)
+    sym = edges.unionByName(
+        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    )
+    nodes = sym.select(F.col("a").alias("node")).distinct()
+    labels = nodes.select(
+        "node", (F.col("node") if label is None else label).alias("label")
+    )
+
+    def propagate(lab, _rnd):
+        for _hop in range(2):
+            neighbor = sym.join(lab, sym["a"] == lab["node"]).select(
+                F.col("b").alias("node"), F.col("label")
+            )
+            lab = (
+                lab.unionByName(neighbor)
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
+            )
+        lab = lab.localCheckpoint(eager=False)
+        la = lab.select(F.col("node").alias("a"), F.col("label").alias("__la"))
+        lb = lab.select(F.col("node").alias("b"), F.col("label").alias("__lb"))
+        straddling = (
+            edges.join(la, "a").join(lb, "b").filter(F.col("__la") != F.col("__lb"))
+        )
+        return lab, straddling.count() == 0
+
+    return _converge("min_label_components", max_iter, propagate, labels)
 
 
 def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate query: the canonicalization engine's undirected
-    connected components (extract/canonicalize.connected_components —
-    min-label propagation with edge-consistency convergence) exposed as
-    a first-class graph op, over a 25-component star graph: every
+    """Gate query: undirected connected components
+    (:func:`min_label_components`) over a 25-component star graph: every
     customer links to its nation's anchor customer. The canon is the
-    component's lexicographic-min node, which the oracle reproduces as
-    a per-nation string MIN."""
-    from ..extract.canonicalize import connected_components
-
+    component's lexicographic-min node, which the oracle reproduces as a
+    per-nation string MIN."""
     cust = spark.read.parquet(f"{sf_dir.rstrip('/')}/customer.parquet")
     anchor = cust.groupBy("c_nationkey").agg(
         F.min("c_custkey").alias("_anchor")
@@ -678,7 +730,9 @@ def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("cust:"), F.col("c_custkey")).alias("a"),
         F.concat(F.lit("cust:"), F.col("_anchor")).alias("b"),
     )
-    return connected_components(edges)
+    return min_label_components(edges).select(
+        "node", F.col("label").alias("canon")
+    )
 
 
 def graph_components_sql() -> str:
@@ -718,34 +772,25 @@ def kcore(edges: DataFrame, k: int, max_iter: int = KCORE_MAX_ITER) -> DataFrame
     """
     if k < 1:
         raise ValueError("k-core requires k >= 1")
-    spark = edges.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
     fwd = edges.select("s", "o").filter(
         F.col("s").isNotNull()
         & F.col("o").isNotNull()
         & (F.col("s") != F.col("o"))
     )
-    ed = (
-        fwd.unionByName(
-            fwd.select(F.col("o").alias("s"), F.col("s").alias("o"))
-        )
-        .dropDuplicates(["s", "o"])
-        .repartition(width, "s")
-        .persist()
-    )
-    ed.count()
-    try:
+    sym = fwd.unionByName(
+        fwd.select(F.col("o").alias("s"), F.col("s").alias("o"))
+    ).dropDuplicates(["s", "o"])
+    with _cached(sym, "s") as ed:
         deg = (
             ed.groupBy(F.col("s").alias("node"))
             .agg(F.count("*").cast("long").alias("deg"))
             .localCheckpoint()
         )
-        converged = False
-        for _ in range(max_iter):
+
+        def peel(deg, _rnd):
             removed = deg.filter(F.col("deg") < k).select("node")
             if not removed.take(1):
-                converged = True
-                break
+                return deg, True
             # neighbors of newly-removed nodes, read from the removed side's
             # OUT-edges (symmetric table: identical to in-edges) so the join
             # key is the edge cache's own partitioning column `s` — the
@@ -766,19 +811,11 @@ def kcore(edges: DataFrame, k: int, max_iter: int = KCORE_MAX_ITER) -> DataFrame
                 )
                 .localCheckpoint()
             )
-        if not converged and deg.filter(F.col("deg") < k).take(1):
-            # a partially-peeled table is NOT the k-core — nodes below k
-            # are still present. Exhausting the round budget is an error,
-            # never a silently wrong answer (adversarial peel depths, e.g.
-            # a path graph at k=2, peel in O(n) layers).
-            raise RuntimeError(
-                f"kcore did not converge within max_iter={max_iter} peel "
-                f"rounds (nodes of degree < {k} remain); raise max_iter — "
-                f"peel depth can reach O(n) on path-like graphs"
-            )
-    finally:
-        ed.unpersist()
-    return deg
+            return deg, False
+
+        # a partially-peeled table is NOT the k-core (nodes below k are
+        # still present): past the budget the call raises, never returns it
+        return _converge("kcore", max_iter, peel, deg)
 
 
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,6 +26,7 @@ from typing import Mapping, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import shuffle_width
 from .dedup import _H28_SPARK, _H28_SQL
 
 H28_MAX = 1 << 28
@@ -115,7 +116,7 @@ def docs_shuffle_rank(
     permutation is itself a checkable, hash-exact artifact.
     """
     spark = docs.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    width = shuffle_width(spark)
     key = F.md5(
         F.concat(
             F.lit(seed), F.lit(":"), F.col("doc_id").cast("string")

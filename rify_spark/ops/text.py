@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import shuffle_width
 from .params import (
     CHUNK_OVERLAP,
     CHUNK_TOKENS,
@@ -380,7 +381,7 @@ def pack_offsets(docs: DataFrame, budget: int = PACK_SEQ_TOKENS) -> DataFrame:
     from pyspark.sql import Window
 
     spark = docs.sparkSession
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    width = shuffle_width(spark)
     n = F.size(F.split("text", " ")).cast("long")
     ranged = (
         docs.select("doc_id", n.alias("n_tokens"))

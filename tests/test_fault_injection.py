@@ -1,19 +1,31 @@
-"""Fault injection: every loop that scopes session confs restores them on
-the exception path too.
+"""Fault injection: every loop restores what it changed on the exception
+path too.
 
-``FactStore.stage_block`` is made to raise on its second call, i.e. in
-the middle of round 2, after the round's conf regime (codegen, AQE,
-width, constraint propagation) has been applied. The original exception
-must propagate and each conf must read exactly as before the call — a
-key that was unset before must be unset again.
+Fixpoint loops: ``FactStore.stage_block`` is made to raise on its second
+call, i.e. in the middle of round 2, after the round's conf regime
+(codegen, AQE, width, constraint propagation) has been applied. The
+original exception must propagate and each conf must read exactly as
+before the call — a key that was unset before must be unset again.
+
+Graph loops: a DataFrame method the loop calls once per round is made to
+raise in round 2. The original exception must propagate and every
+DataFrame the call persisted must be unpersisted again.
 """
 
 import pytest
+from pyspark import StorageLevel
 
 from rify_spark import Bound as B, Rule, Unbound as U
 from rify_spark.api import infer_df
 from rify_spark.extract import code_files_df
 from rify_spark.infer import FactStore
+from rify_spark.ops.graph import (
+    bfs_levels,
+    kcore,
+    min_label_components,
+    pagerank,
+    sssp_distances,
+)
 from rify_spark.pipeline import run_pipeline
 
 KEYS = (
@@ -101,3 +113,78 @@ def test_confs_restored_when_round_raises(spark, fail_second_stage_block, run, w
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def _path(spark, n, cols="s string, o string"):
+    return spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(n)], cols
+    )
+
+
+def _source(spark):
+    return spark.createDataFrame([("n0",)], "node string")
+
+
+# (loop, DataFrame method it calls once per round, the call that is in
+# round 2, DataFrames it persists). BFS, SSSP and k-core test their
+# round's frontier with one take(1) and cache their edge table; the CC
+# kernel counts straddling edges once per round and only checkpoints;
+# pagerank caches its node and edge tables, joins once before the loop
+# and twice per iteration.
+GRAPH_LOOPS = [
+    ("bfs_levels", lambda s: bfs_levels(_path(s, 6), _source(s)), "take", 2, 1),
+    (
+        "sssp_distances",
+        lambda s: sssp_distances(
+            _path(s, 6).selectExpr("s", "o", "1 AS w"), _source(s)
+        ),
+        "take",
+        2,
+        1,
+    ),
+    ("kcore", lambda s: kcore(_path(s, 6), 2), "take", 2, 1),
+    (
+        "min_label_components",
+        lambda s: min_label_components(_path(s, 12, "a string, b string")),
+        "count",
+        2,
+        0,
+    ),
+    ("pagerank", lambda s: pagerank(_path(s, 6)), "join", 4, 2),
+]
+
+
+@pytest.mark.parametrize(
+    "run, method, nth, n_persisted",
+    [c[1:] for c in GRAPH_LOOPS],
+    ids=[c[0] for c in GRAPH_LOOPS],
+)
+def test_graph_loop_unpersists_when_round_raises(
+    spark, monkeypatch, run, method, nth, n_persisted
+):
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is its
+    # abstract base, so patching that would miss every call)
+    DataFrame = type(spark.range(1))
+    persisted = []
+    real_persist = DataFrame.persist
+
+    def persist(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    real = getattr(DataFrame, method)
+    calls = []
+
+    def fail_in_round_2(self, *args, **kwargs):
+        calls.append(1)
+        if len(calls) == nth:
+            raise InjectedFault(f"injected: {method} call {nth}")
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "persist", persist)
+    monkeypatch.setattr(DataFrame, method, fail_in_round_2)
+    with pytest.raises(InjectedFault):
+        run(spark)
+    assert len(calls) == nth
+    assert len(persisted) == n_persisted
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)

@@ -5,6 +5,8 @@ tests/test_entry.py's gate sweep)."""
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rify_spark.ops.graph import (  # noqa: E402
@@ -280,6 +282,44 @@ def test_kcore_rejects_k0(spark):
 
     with pytest.raises(ValueError, match="k >= 1"):
         kcore(_edges(spark, [("a", "b")]), 0)
+
+
+# --- connected components (min-label kernel) ---------------------------------
+
+
+def _string_components(spark, pairs, **kw):
+    # the entity canonicalizer: (rank, node) struct labels over strings
+    from rify_spark.extract import connected_components
+
+    edges = spark.createDataFrame(
+        [(f"n{a:02d}", f"n{b:02d}") for a, b in pairs], "a string, b string"
+    )
+    return {r.node: r.canon for r in connected_components(edges, **kw).collect()}
+
+
+def _long_components(spark, pairs, **kw):
+    # the near-dup clusterer's shape: plain long labels
+    from rify_spark.ops.graph import min_label_components
+
+    edges = spark.createDataFrame(pairs, "a long, b long")
+    return {r.node: r.label for r in min_label_components(edges, **kw).collect()}
+
+
+@pytest.mark.parametrize(
+    "components, canon",
+    [(_string_components, "n00"), (_long_components, 0)],
+    ids=["struct_label", "long_label"],
+)
+def test_min_label_components_contract(spark, components, canon):
+    # a 40-node path has diameter 39: 20 two-hop rounds. A 2-round budget
+    # must raise, never return a split mapping; the default budget maps
+    # every node onto the path's min; no edges is an empty mapping
+    path = [(i, i + 1) for i in range(39)]
+    with pytest.raises(RuntimeError, match="did not converge"):
+        components(spark, path, max_iter=2)
+    got = components(spark, path)
+    assert len(got) == 40 and set(got.values()) == {canon}
+    assert components(spark, []) == {}
 
 
 # --- degree histogram --------------------------------------------------------
