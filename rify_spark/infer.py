@@ -702,9 +702,10 @@ def fixpoint(
     ``reuse_store``: an already-seeded live :class:`FactStore` (streaming
     IVM keeps one across micro-batches so per-batch cost reads cached
     blocks, never the full persisted store). When given, ``facts0`` is
-    ignored apart from its schema and ``delta0`` MUST carry the novel
-    quads (already present in the store); new derivations are appended to
-    the store in place.
+    ignored apart from its schema and ``delta0`` MUST be the checkpoint the
+    store's newest block was staged from (the novel quads); it is used as
+    is and its row count read from ``block_rows[-1]``. New derivations are
+    appended to the store in place.
     """
     cfg = cfg or InferConfig()
     rewrites: list = []
@@ -848,8 +849,8 @@ def fixpoint(
             delta_rows = facts_rows
             facts_old = seed_lc.limit(0)
         else:
-            delta = delta0.localCheckpoint(eager=True)
-            delta_rows = delta.count()
+            delta = delta0
+            delta_rows = store.block_rows[-1]
             # the caller appended the delta as the store's newest block, so
             # the semi-naive F_old is exactly the cached block prefix — no
             # O(store) anti-join/checkpoint per micro-batch

@@ -84,7 +84,9 @@ def main() -> None:
         app_name="rify-random-walk-soak",
         shuffle_partitions=2 * CPUS,
     )
-    store_dir = tempfile.mkdtemp(prefix="rify-walk-")
+    # the store's premise directory and layout record sit beside it
+    base = tempfile.mkdtemp(prefix="rify-walk-")
+    store_dir = os.path.join(base, "store")
     r = IncrementalReasoner(spark, rules, store_dir)
     premises: set = set()
     walls = []
@@ -154,7 +156,7 @@ def main() -> None:
             json.dump(merged, f, indent=1)
         print(json.dumps({k: v for k, v in art.items() if k != "batch_walls"}))
     finally:
-        shutil.rmtree(store_dir, ignore_errors=True)
+        shutil.rmtree(base, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -80,9 +80,11 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     store_dir = "/tmp/rify_soak_store"
-    shutil.rmtree(store_dir, ignore_errors=True)
-    shutil.rmtree(store_dir + ".__old__", ignore_errors=True)
-    shutil.rmtree(store_dir + ".__compact__", ignore_errors=True)
+    # a premise directory left by an earlier run would make the new store
+    # look like existing data and open at that data's bucket count
+    for suffix in ("", ".__old__", ".__compact__", ".__premises__",
+                   ".__premises__.__old__", ".__premises__.__compact__"):
+        shutil.rmtree(store_dir + suffix, ignore_errors=True)
 
     rules = [
         Rule.create(

@@ -140,14 +140,16 @@ def test_retraction_matches_naive_oracle(spark, facts, rules, data):
         st.lists(st.sampled_from(facts), unique=True, min_size=1), label="retract"
     )
     remaining = [q for q in facts if q not in set(retract)]
-    store_dir = tempfile.mkdtemp(prefix="rify-prop-")
+    # the store's sibling directories and layout record live next to it,
+    # so the store goes one level down and the whole temp dir is removed
+    base = tempfile.mkdtemp(prefix="rify-prop-")
     try:
-        r = IncrementalReasoner(spark, rules, store_dir)
+        r = IncrementalReasoner(spark, rules, os.path.join(base, "store"))
         r.process_batch(spark.createDataFrame(facts, SCHEMA), 0)
         r.retract_batch(spark.createDataFrame(retract, SCHEMA))
         got = {tuple(row) for row in r.facts().collect()}
     finally:
-        shutil.rmtree(store_dir, ignore_errors=True)
+        shutil.rmtree(base, ignore_errors=True)
     assert got == _naive_closure(remaining, rules)
 
 

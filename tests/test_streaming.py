@@ -36,6 +36,19 @@ def _store_set(reasoner):
     return {tuple(r) for r in reasoner.facts().collect()}
 
 
+def _closure(premises):
+    """Closed form of ``_rules()``: the premises plus every ``anc`` pair
+    along their ``parent`` links."""
+    up = {(s, o) for s, p, o, g in premises if p == "parent"}
+    pairs = set(up)
+    while True:
+        more = {(a, c) for a, b in pairs for b2, c in up if b == b2} - pairs
+        if not more:
+            break
+        pairs |= more
+    return set(premises) | {(a, "anc", b, DG) for a, b in pairs}
+
+
 def test_incremental_stream_maintains_closure(spark, tmp_path):
     src = str(tmp_path / "src")
     store = str(tmp_path / "store")
@@ -194,6 +207,32 @@ def test_failed_batch_rolls_back_live_store(spark, tmp_path):
     assert len(s) == 5
 
 
+def test_failed_first_batch_rolls_back_unseeded_store(spark, tmp_path):
+    """The first batch of a fresh reasoner fails at the durable store
+    append while no block was seeded before it: the rollback must drop the
+    store it seeded mid-batch, and the replay must produce the closed
+    form."""
+    rows = [("a", "parent", "b", DG), ("b", "parent", "c", DG)]
+    r = IncrementalReasoner(spark, _rules(), str(tmp_path / "store"))
+    orig_append = r._append_parquet
+
+    def failing_append(df, target=None):
+        if target is None:
+            raise RuntimeError("injected append failure")
+        orig_append(df, target)
+
+    r._append_parquet = failing_append
+    batch = spark.createDataFrame(rows, SCHEMA)
+    with pytest.raises(RuntimeError, match="injected"):
+        r.process_batch(batch, 0)
+    assert r._store is None
+    assert r.facts().count() == 0
+
+    r._append_parquet = orig_append
+    r.process_batch(batch, 0)
+    assert _store_set(r) == _closure(rows)
+
+
 def test_compaction_crash_window_recovered(spark, tmp_path):
     """Crash between compact_store's two renames leaves the data in
     '.__old__' and no store directory; a new reasoner must heal it instead
@@ -241,6 +280,102 @@ def test_cold_start_reseeds_width_from_first_batch(spark, tmp_path):
         assert ("n0", "anc", "n2", DG) not in s  # pairs are disconnected
     finally:
         inf.FactStore.__init__ = orig
+
+
+def _layout(store):
+    import json
+
+    with open(store + ".__layout__.json") as f:
+        return json.load(f)["n_buckets"]
+
+
+def _legacy_store(spark, tmp_path, rows):
+    """A store written at 64 buckets, the default before the layout
+    record existed."""
+    store = str(tmp_path / "store")
+    r = IncrementalReasoner(spark, _rules(), store, n_buckets=64)
+    r.process_batch(spark.createDataFrame(rows, SCHEMA), 0)
+    return store
+
+
+def test_layout_record_keeps_bucket_count_on_reopen(spark, tmp_path):
+    """Reopened with the default count, a 64-bucket store stays at 64, and
+    a DRed retraction's bucket rewrites land in the buckets the rows were
+    written to."""
+    from pyspark.sql import functions as F
+
+    chain = [(x, "parent", y, DG) for x, y in zip("abcdef", "bcdefg")]
+    store = _legacy_store(spark, tmp_path, chain)
+    r = IncrementalReasoner(spark, _rules(), store)
+    assert r.n_buckets == 64 and _layout(store) == 64
+    cut = ("c", "parent", "d", DG)
+    r.retract_batch(spark.createDataFrame([cut], SCHEMA))
+    assert _store_set(r) == _closure([q for q in chain if q != cut])
+    for d in (store, r.premises_dir):
+        misplaced = (
+            spark.read.parquet(d)
+            .filter(F.col("bucket") != F.pmod(F.xxhash64("s"), F.lit(64)))
+            .count()
+        )
+        assert misplaced == 0, d
+
+
+def test_layout_record_rejects_other_bucket_count(spark, tmp_path):
+    store = _legacy_store(spark, tmp_path, [("a", "parent", "b", DG)])
+    with pytest.raises(ValueError, match="64 buckets"):
+        IncrementalReasoner(spark, _rules(), store, n_buckets=16)
+
+
+def test_store_without_layout_record_opens_at_legacy_count(spark, tmp_path):
+    store = _legacy_store(spark, tmp_path, [("a", "parent", "b", DG)])
+    os.remove(store + ".__layout__.json")
+    r = IncrementalReasoner(spark, _rules(), store)
+    assert r.n_buckets == 64 and _layout(store) == 64
+
+
+def test_new_store_records_default_bucket_count(spark, tmp_path):
+    store = str(tmp_path / "store")
+    r = IncrementalReasoner(spark, _rules(), store)
+    assert r.n_buckets == 16 and _layout(store) == 16
+
+
+def test_batch_append_fan_out_and_read_listing(spark, tmp_path):
+    """One batch over 500 subjects writes at most one file per bucket in
+    the store and in the premise directory, and ``facts()`` lists the
+    bucket directories on the driver: building it starts no Spark job."""
+    import glob
+    import time
+
+    r = IncrementalReasoner(spark, _rules(), str(tmp_path / "store"))
+    rows = [(f"n{i}", "parent", f"m{i}", DG) for i in range(500)]
+    r.process_batch(spark.createDataFrame(rows, SCHEMA), 0)
+    for d in (r.store_dir, r.premises_dir):
+        files = glob.glob(os.path.join(d, "bucket=*", "*.parquet"))
+        assert 0 < len(files) <= 16, (d, len(files))
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    r.facts()
+    time.sleep(1)  # job events reach the status store asynchronously
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+
+def test_first_batch_seeds_live_store_once(spark, tmp_path, monkeypatch):
+    from rify_spark.infer import FactStore
+
+    calls = []
+    orig = FactStore.seed
+
+    def spy(self, *a, **kw):
+        calls.append(1)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(FactStore, "seed", spy)
+    r = IncrementalReasoner(spark, _rules(), str(tmp_path / "store"))
+    rows = [("a", "parent", "b", DG), ("b", "parent", "c", DG)]
+    r.process_batch(spark.createDataFrame(rows, SCHEMA), 0)
+    assert len(calls) == 1
+    assert _store_set(r) == _closure(rows)
 
 
 def _write_nq_file(src, name, lines):
