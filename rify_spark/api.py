@@ -127,10 +127,7 @@ def _lower_inputs(
         const_ids = D.hash_terms(spark, bound_strs)
         facts_in = D.encode_quads(premises_df)
         dict_df = D.build_dict_audited(
-            spark,
-            premises_df if prem_str else None,
-            bound_strs,
-            audit=cfg.collision_audit,
+            spark, premises_df if prem_str else None, bound_strs
         )
         lrules = [
             lower_rule(r, i, lambda t: const_ids[codec.encode(t)])
@@ -202,21 +199,20 @@ def infer_df(
         # otherwise-idle slots, at low counts it fair-shares). Joined —
         # and re-raised — before decode reads the dictionary.
         dict_df, audit_fn = D.build_dict_deferred(spark, facts_df, bound_strs)
-        if cfg.collision_audit:
-            # InheritableThread, not threading.Thread: it propagates the
-            # py4j thread-local connection / local properties and cleans up
-            # the paired JVM thread on exit (a bare Thread leaks JVM threads
-            # under pinned-thread mode)
-            from pyspark import InheritableThread
+        # InheritableThread, not threading.Thread: it propagates the py4j
+        # thread-local connection / local properties and cleans up the
+        # paired JVM thread on exit (a bare Thread leaks JVM threads under
+        # pinned-thread mode)
+        from pyspark import InheritableThread
 
-            def _run_audit() -> None:
-                try:
-                    audit_fn()
-                except Exception as e:  # noqa: BLE001 — re-raised at join
-                    audit_err.append(e)
+        def _run_audit() -> None:
+            try:
+                audit_fn()
+            except Exception as e:  # noqa: BLE001 — re-raised at join
+                audit_err.append(e)
 
-            audit_thread = InheritableThread(target=_run_audit, daemon=True)
-            audit_thread.start()
+        audit_thread = InheritableThread(target=_run_audit, daemon=True)
+        audit_thread.start()
         lrules = [lower_rule(r, i, lambda t: const_ids[t]) for i, r in enumerate(rules)]
         dtype_str = D.ID_TYPE
     else:
@@ -295,7 +291,7 @@ def prove(
         raise ExhaustedSearchSpace()
 
     args = collect_reachable_arguments(
-        spark, res.arguments, goal_quads, low.lrules, cfg, low.dtype_str
+        spark, res.arguments, goal_quads, low.lrules, low.dtype_str
     )
     lproof = recall_proof(goal_quads, args, low.lrules)
 

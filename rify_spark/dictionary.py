@@ -132,7 +132,6 @@ def build_dict_audited(
     spark: SparkSession,
     facts: DataFrame | None = None,
     extra_terms: Iterable[str] = (),
-    audit: bool = True,
 ) -> DataFrame:
     """One-shuffle, persisted, collision-audited dictionary.
 
@@ -146,13 +145,9 @@ def build_dict_audited(
     (MEMORY_AND_DISK), so the audit's materialization is what every decode
     join reads: total one wide shuffle for dictionary + audit + decode,
     instead of three.
-
-    With ``audit=False`` nothing is materialized here; the persisted plan
-    fills inside the first decode that reads it.
     """
     dict_df, audit_fn = build_dict_deferred(spark, facts, extra_terms)
-    if audit:
-        audit_fn()
+    audit_fn()
     return dict_df
 
 

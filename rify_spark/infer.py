@@ -60,6 +60,15 @@ from .rules import LoweredRule
 from .session import floor_regime, scoped_conf, shuffle_width
 
 SPOG = ["s", "p", "o", "g"]
+# predicate-vocabulary cap of the driver-side statistics: join-order stats
+# and seed-plan pruning switch off for a relation with more distinct
+# predicates (one extra row is collected to detect the overflow)
+STATS_MAX_PREDICATES = 10_000
+# hot-key detection keeps the HOT_VALUE_TOP most frequent s/o values of a
+# ~HOT_SCAN_SAMPLE_ROWS occurrence sample; a key at the 0.2 share threshold
+# appears ~200k times in a 1M sample, so sampling error is negligible
+HOT_VALUE_TOP = 5
+HOT_SCAN_SAMPLE_ROWS = 1_000_000
 
 
 class FactStore:
@@ -147,9 +156,9 @@ class FactStore:
     def seed(self, df: DataFrame, rows_hint: Optional[int] = None) -> tuple:
         """Initial store contents (one block); fixes the store partition
         count from the seed size (the fixpoint typically grows the store
-        ~10x, so the sizing allows for growth; pass cfg.store_partitions to
-        pin it on clusters). The seed plan is checkpointed BEFORE sizing so
-        an expensive input (e.g. an extraction pipeline) computes once.
+        ~10x, so the sizing allows for growth; ``fixed_partitions`` pins
+        it). The seed plan is checkpointed BEFORE sizing so an expensive
+        input (e.g. an extraction pipeline) computes once.
         Returns (seed checkpoint df, row count). The checkpoint is lazy —
         the sizing count (or, under rows_hint, the first consumer)
         materializes it, one job instead of two."""
@@ -330,7 +339,6 @@ class FactStore:
 @dataclass
 class InferConfig:
     encode_terms: bool = True
-    collision_audit: bool = True
     # caller guarantees the input quads are already SPOG-unique (e.g. the
     # KG pipeline's canonical stage ends in dropDuplicates): skips the
     # seed-time dedup shuffle
@@ -357,34 +365,19 @@ class InferConfig:
     checkpoint_retain_history: bool = False
     max_iterations: Optional[int] = None
     # per-predicate cardinality stats for join ordering; disabled when the
-    # predicate vocabulary is unexpectedly large
+    # predicate vocabulary exceeds STATS_MAX_PREDICATES
     use_stats: bool = True
-    stats_max_predicates: int = 10_000
-    # collect threshold for driver-side proof argument recall
-    collect_arguments_max_rows: int = 1_000_000
     # fact-store block chain length before prefix compaction; also the
     # cadence (in iterations) of full-facts checkpoint bases in parquet mode
     store_compact_every: int = 8
-    # partition count of the bucketed fact store; None -> shuffle partitions
-    store_partitions: Optional[int] = None
     # explicit hot-key salting for shuffle-joined iterations: term values
     # holding >= hot_value_min_share of the seed's s/o occurrences are
     # salted in every single-variable bindings join (skew.py). Broadcast
     # iterations are skew-immune and skip it; AQE skew-join still covers
-    # undetected / emergent hot keys.
+    # undetected / emergent hot keys (and every store compaction re-detects,
+    # see _seed_scan).
     salt_hot_values: bool = True
     hot_value_min_share: float = 0.2
-    hot_value_top: int = 5
-    hot_salt_n: int = 8
-    # re-detect hot keys when the store compacts (every store_compact_every
-    # iterations): a key that becomes hot mid-fixpoint (e.g. a hub node the
-    # closure keeps reaching) is picked up without paying a per-iteration
-    # scan. Detection samples the store, so the rescan is O(sample), not
-    # O(store).
-    rescan_hot_on_compact: bool = True
-    # occurrence-sample target for hot-key detection; a >=20%-share key is
-    # detected from ~1M sampled occurrences with overwhelming probability
-    hot_scan_sample_rows: int = 1_000_000
     # rewrite linear transitive recursions (H <- B; H(x,z) <- B(x,y),H(y,z))
     # to the LFP-identical doubling form (H(x,z) <- H(x,y),H(y,z)) so a
     # k-deep chain closes in O(log k) iterations instead of O(k) — the
@@ -398,14 +391,6 @@ class InferConfig:
     # (big_closure, resume_soak) use, so they measure the same ~O(log depth)
     # doubled program their historical artifacts did, minus the strategy.
     smart_tc: bool = True
-    # predicate-level semi-naive refinement: skip delta-seeded join plans
-    # whose seed atom has a constant predicate absent from this iteration's
-    # delta (they are empty by construction). Costs one tiny distinct-p scan
-    # of the checkpointed delta per iteration; saves whole join plans —
-    # after round 1 of the KG pipeline the delta is all `depends_on`, so 4
-    # of 6 seeded plans vanish. Disabled when the delta's predicate
-    # vocabulary exceeds stats_max_predicates.
-    prune_seed_plans: bool = True
 
 
 @dataclass
@@ -471,45 +456,6 @@ def _broadcast_cutoff_rows(spark: SparkSession, cfg: InferConfig) -> int:
     return min(cfg.broadcast_delta_max_rows, _heap_mb(spark) * 500, cores_cap)
 
 
-def _hot_values(facts: DataFrame, facts_rows: int, cfg: InferConfig) -> list:
-    """Driver-side list of hot term literals: values holding at least
-    ``hot_value_min_share`` of the facts' join-position (s/o) occurrences.
-    Run at seed time and (when ``rescan_hot_on_compact``) at every store
-    compaction; the result feeds ``matcher.bindings``'s targeted salting
-    for iterations whose delta is too large to broadcast. Keys that turn
-    hot between rescans are AQE skew-join's job.
-
-    Detection samples down to ~``hot_scan_sample_rows`` occurrences when the
-    store is large, so a rescan never shuffles the full store: a key at the
-    0.2 share threshold appears ~200k times in a 1M sample (sampling error
-    is negligible at that scale)."""
-    from .matcher import term_lit
-
-    if not cfg.salt_hot_values:
-        return []
-    dtype = facts.schema["s"].dataType
-    occ = facts.select(F.col("s").alias("k")).unionByName(
-        facts.select(F.col("o").alias("k"))
-    )
-    occ_rows = 2 * max(facts_rows, 1)
-    frac = min(1.0, cfg.hot_scan_sample_rows / occ_rows)
-    if frac < 1.0:
-        occ = occ.sample(fraction=frac, seed=7)
-    top = (
-        occ.groupBy("k")
-        .count()
-        .orderBy(F.desc("count"))
-        .limit(cfg.hot_value_top)
-        .collect()
-    )
-    total = max(int(occ_rows * frac), 1)
-    hot = [r["k"] for r in top if r["count"] / total >= cfg.hot_value_min_share]
-    return [
-        (term_lit(tuple(v) if not isinstance(v, (str, int)) else v, dtype),)
-        for v in hot
-    ]
-
-
 def _norm_term(v):
     """Hashable driver-side form of a collected term value (128-bit struct
     ids arrive as Rows; lowered rule constants are tuples)."""
@@ -534,32 +480,16 @@ def _limited_collect(df: DataFrame, n: int) -> list:
         return df.limit(n).collect()
 
 
-def _delta_predicates(delta: DataFrame, cfg: InferConfig) -> Optional[set]:
-    """The set of predicate values present in the (checkpointed) delta, or
-    None when pruning is off / the vocabulary is too large to collect."""
-    if not cfg.prune_seed_plans:
-        return None
-    rows = _limited_collect(
-        delta.select("p").distinct(), cfg.stats_max_predicates + 1
-    )
-    if len(rows) > cfg.stats_max_predicates:
-        return None
-    return {_norm_term(r["p"]) for r in rows}
-
-
-def _count_and_preds(df: DataFrame, cfg: InferConfig) -> tuple:
+def _count_and_preds(df: DataFrame) -> tuple:
     """(row count, predicate set|None) of a checkpoint-backed delta in ONE
     Spark job in the common case: the per-predicate counts give both, so
     fusing the novelty count with the next iteration's prune set removes a
-    driver barrier per iteration. With pruning off a plain count runs
-    instead (still one job). Only the rare overflow case — more than
-    stats_max_predicates distinct predicates in the delta — pays a second
-    job (the truncated groupBy, then a plain count), once per overflowing
-    iteration."""
-    if not cfg.prune_seed_plans:
-        return df.count(), None
-    rows = _limited_collect(df.groupBy("p").count(), cfg.stats_max_predicates + 1)
-    if len(rows) > cfg.stats_max_predicates:
+    driver barrier per iteration. Only the rare overflow case — more than
+    STATS_MAX_PREDICATES distinct predicates in the delta (pruning then
+    stays off for that iteration) — pays a second job (the truncated
+    groupBy, then a plain count)."""
+    rows = _limited_collect(df.groupBy("p").count(), STATS_MAX_PREDICATES + 1)
+    if len(rows) > STATS_MAX_PREDICATES:
         return df.count(), None
     return sum(r["count"] for r in rows), {_norm_term(r["p"]) for r in rows}
 
@@ -574,18 +504,9 @@ def _seed_plan_live(atom, delta_preds: Optional[set]) -> bool:
     return kind != "c" or _norm_term(val) in delta_preds
 
 
-def _predicate_stats(facts: DataFrame, cfg: InferConfig) -> Optional[dict]:
-    if not cfg.use_stats:
-        return None
-    rows = _limited_collect(
-        facts.groupBy("p").count(), cfg.stats_max_predicates + 1
-    )
-    if len(rows) > cfg.stats_max_predicates:
-        return None
-    return {r["p"]: r["count"] for r in rows}
-
-
-def _seed_scan(facts: DataFrame, facts_rows: int, cfg: InferConfig) -> tuple:
+def _seed_scan(
+    facts: DataFrame, facts_rows: int, cfg: InferConfig, hot_only: bool = False
+) -> tuple:
     """Join-order predicate stats AND hot-key detection in ONE Spark job.
 
     Run separately these are two full passes over the seed with two driver
@@ -594,11 +515,20 @@ def _seed_scan(facts: DataFrame, facts_rows: int, cfg: InferConfig) -> tuple:
     union of (p-occurrences | sampled s/o-occurrences) tagged by kind, one
     groupBy, and the two driver-side limits read the SAME aggregation (AQE
     reuses the exchange between the branches), collected in one action.
-    Semantics match :func:`_predicate_stats` + :func:`_hot_values` exactly;
-    the latter stays for the compaction-time rescan."""
+
+    Returns ``(stats, hot)``: ``{predicate: count}`` (None when
+    ``cfg.use_stats`` is off or the vocabulary exceeds
+    STATS_MAX_PREDICATES) and the driver-side literals of the hot term
+    values — those holding at least ``cfg.hot_value_min_share`` of the s/o
+    occurrences, which feed ``matcher.bindings``'s targeted salting for
+    iterations whose delta is too large to broadcast. ``hot_only`` skips
+    the stats branch: the fixpoint re-detects hot keys that way at every
+    store compaction (keys that turn hot between rescans are AQE
+    skew-join's job). Detection samples down to ~HOT_SCAN_SAMPLE_ROWS
+    occurrences, so a rescan never shuffles the full store."""
     from .matcher import term_lit
 
-    want_stats = cfg.use_stats
+    want_stats = cfg.use_stats and not hot_only
     want_hot = cfg.salt_hot_values
     if not (want_stats or want_hot):
         return None, []
@@ -614,23 +544,23 @@ def _seed_scan(facts: DataFrame, facts_rows: int, cfg: InferConfig) -> tuple:
         occ = facts.select(F.col("s").alias("k")).unionByName(
             facts.select(F.col("o").alias("k"))
         )
-        frac = min(1.0, cfg.hot_scan_sample_rows / occ_rows)
+        frac = min(1.0, HOT_SCAN_SAMPLE_ROWS / occ_rows)
         if frac < 1.0:
             occ = occ.sample(fraction=frac, seed=7)
         branches.append(occ.select(F.lit(True).alias("so"), "k"))
     cnt = _union_all(branches).groupBy("so", "k").count()
     parts = []
     if want_stats:
-        parts.append(cnt.filter(~F.col("so")).limit(cfg.stats_max_predicates + 1))
+        parts.append(cnt.filter(~F.col("so")).limit(STATS_MAX_PREDICATES + 1))
     if want_hot:
         parts.append(
-            cnt.filter(F.col("so")).orderBy(F.desc("count")).limit(cfg.hot_value_top)
+            cnt.filter(F.col("so")).orderBy(F.desc("count")).limit(HOT_VALUE_TOP)
         )
     rows = _union_all(parts).collect()
     stats = None
     if want_stats:
         prows = [r for r in rows if not r["so"]]
-        if len(prows) <= cfg.stats_max_predicates:
+        if len(prows) <= STATS_MAX_PREDICATES:
             stats = {r["k"]: r["count"] for r in prows}
     hot = []
     if want_hot:
@@ -638,7 +568,7 @@ def _seed_scan(facts: DataFrame, facts_rows: int, cfg: InferConfig) -> tuple:
         hrows = sorted((r for r in rows if r["so"]), key=lambda r: -r["count"])
         hot = [
             (term_lit(_norm_term(r["k"]), dtype),)
-            for r in hrows[: cfg.hot_value_top]
+            for r in hrows[:HOT_VALUE_TOP]
             if r["count"] / total >= cfg.hot_value_min_share
         ]
     return stats, hot
@@ -814,11 +744,7 @@ def fixpoint(
     metrics: list = []
     arguments: Optional[DataFrame] = None
     it = 0
-    store = reuse_store or FactStore(
-        spark,
-        fixed_partitions=cfg.store_partitions,
-        compact_every=cfg.store_compact_every,
-    )
+    store = reuse_store or FactStore(spark, compact_every=cfg.store_compact_every)
     last_base = 0  # iteration of the newest full-facts parquet base
 
     # prove-mode lineage accumulates as a list of checkpoint-backed blocks
@@ -901,10 +827,10 @@ def fixpoint(
     # predicate set — reuse instead of paying another scan.
     if not cond_rules:
         delta_preds = None
-    elif delta is seed_lc and stats is not None and cfg.prune_seed_plans:
+    elif delta is seed_lc and stats is not None:
         delta_preds = {_norm_term(p) for p in stats}
     else:
-        delta_preds = _delta_predicates(delta, cfg)
+        delta_preds = _count_and_preds(delta)[1]
 
     with scoped_conf(spark) as set_conf:
         # constraint propagation walks every operator's expression set at
@@ -949,7 +875,6 @@ def fixpoint(
                         stats=stats,
                         facts_old=facts_old,
                         hot_values=hot,
-                        salt_n=cfg.hot_salt_n,
                     )
                     plans.append(project_heads(b, r, dtype, extra))
             if not plans:
@@ -990,7 +915,7 @@ def fixpoint(
             # yields the count + next prune set. Eager checkpoint + separate
             # count + separate block fill was three driver barriers.
             block = store.stage_block(new)
-            delta_rows, delta_preds = _count_and_preds(block, cfg)
+            delta_rows, delta_preds = _count_and_preds(block)
             if lineage and delta_rows:
                 arg_blocks.append(new_full)
                 arguments = _union_all(arg_blocks)
@@ -1008,10 +933,10 @@ def fixpoint(
             facts_old = store.union_except_last()
             facts_rows += delta_rows
             delta = new
-            if store.just_compacted and cfg.rescan_hot_on_compact:
+            if store.just_compacted:
                 # emergent hot keys: re-detect on the compacted store (sampled —
-                # O(hot_scan_sample_rows), amortized 1/store_compact_every)
-                hot_lits = _hot_values(store.union(), facts_rows, cfg)
+                # O(HOT_SCAN_SAMPLE_ROWS), amortized 1/store_compact_every)
+                hot_lits = _seed_scan(store.union(), facts_rows, cfg, hot_only=True)[1]
             metrics.append({
                 "iteration": it,
                 "delta_rows": delta_rows,

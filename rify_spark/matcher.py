@@ -165,7 +165,7 @@ def bindings(
     fewer candidate rows through the dedup/anti-join shuffles.
 
     With ``hot_values`` (driver-detected hot term ids, see
-    ``infer._hot_values``) every single-variable inner join is a
+    ``infer._seed_scan``) every single-variable inner join is a
     :func:`rify_spark.skew.targeted_salted_join`: the facts-atom side is
     salted, the accumulated (delta-seeded, smaller) side's hot rows are
     exploded over ``salt_n`` salts — the explicit "skew-salted joins on hot

@@ -63,11 +63,6 @@ def vertices_table(quads: DataFrame) -> DataFrame:
     )
 
 
-def materialize_graph(quads: DataFrame) -> tuple:
-    """(vertices, edges) of the quad store — the publishable KG shape."""
-    return vertices_table(quads), edges_table(quads)
-
-
 # --- the iterative-loop skeleton ---------------------------------------------
 #
 # rify's engine is one loop — apply the rules to the new facts until none

@@ -833,7 +833,6 @@ def skew_salted_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
         broadcast_delta_max_rows=0,  # force the shuffle-join (salted) path
         salt_hot_values=True,
         hot_value_min_share=0.1,
-        hot_salt_n=8,
     )
     derived, _ = infer_df(spark, edges, rules, cfg)
     return derived

@@ -326,38 +326,6 @@ def knn_lsh_recall_sql() -> str:
     """
 
 
-def cosine_topk(emb: DataFrame, n_queries: int = KNN_N_QUERIES, k: int = KNN_K) -> DataFrame:
-    """Float cosine top-k for API users (not oracle-checked: float sum order
-    is engine-specific)."""
-    dot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    scored = emb.crossJoin(F.broadcast(q)).filter(
-        F.col("vec_id") != F.col("query_id")
-    )
-    scored = scored.select(
-        "query_id",
-        "vec_id",
-        (
-            dot(F.col("embedding"), F.col("qe"))
-            / (
-                F.sqrt(dot(F.col("embedding"), F.col("embedding")))
-                * F.sqrt(dot(F.col("qe"), F.col("qe")))
-            )
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 # --- IVF (inverted-file) ANN: coarse-quantizer cells + nprobe search ---------
 # The second scale path beside sign-LSH. Index build: every vector is
 # assigned to its nearest coarse centroid (one broadcast of NLIST centroids

@@ -29,6 +29,10 @@ from pyspark.sql import DataFrame, SparkSession
 from .infer import SPOG, InferConfig, FixpointResult, fixpoint, unconditional_heads
 from .rules import LoweredRule
 
+# argument tables up to this many rows are collected outright; larger ones
+# are walked level by level from the goals (collect_reachable_arguments)
+COLLECT_ARGUMENTS_MAX_ROWS = 1_000_000
+
 
 @dataclass(frozen=True)
 class LowApplication:
@@ -102,15 +106,15 @@ def collect_reachable_arguments(
     args_df: DataFrame,
     goal_quads: list,
     lrules: list,
-    cfg: InferConfig,
     dtype_str: str = "long",
     metrics: Optional[dict] = None,
 ) -> dict:
     """quad -> LowApplication for every argument reachable from the goals.
 
-    Small argument tables are collected outright; large ones are walked with
-    an iterative frontier join (one tiny broadcast join per proof-DAG level),
-    so driver memory is bounded by the reachable proof slice, not the corpus.
+    Argument tables up to COLLECT_ARGUMENTS_MAX_ROWS rows are collected
+    outright; larger ones are walked with an iterative frontier join (one
+    tiny broadcast join per proof-DAG level), so driver memory is bounded
+    by the reachable proof slice, not the corpus.
 
     ``metrics`` (optional, filled in place): ``path`` ("collect"/"frontier"),
     ``total_argument_rows``, and per-level ``frontier_levels`` entries
@@ -121,8 +125,8 @@ def collect_reachable_arguments(
     by_index = {r.index: r for r in lrules}
     if metrics is not None:
         metrics["total_argument_rows"] = total
-        metrics["threshold"] = cfg.collect_arguments_max_rows
-    if total <= cfg.collect_arguments_max_rows:
+        metrics["threshold"] = COLLECT_ARGUMENTS_MAX_ROWS
+    if total <= COLLECT_ARGUMENTS_MAX_ROWS:
         if metrics is not None:
             metrics["path"] = "collect"
         rows = args_df.collect()

@@ -34,7 +34,9 @@ Scale design (what keeps per-batch wall flat in store size):
     starting a listing job;
   * appends accumulate small files; :meth:`compact_store` rewrites each
     bucket into one file (atomic directory swap), auto-triggered every
-    ``compact_files_every`` batches — amortized O(store / interval);
+    ``compact_files_every`` batches — amortized O(store / interval). The
+    cadence survives restarts: a reopened store resumes the count from the
+    files already in its buckets;
   * per-batch join-order stats / hot-key scans are OFF by default here:
     they re-scan the whole store each fixpoint call, which is exactly the
     per-batch O(store) work this design removes (streaming rule sets are
@@ -101,7 +103,6 @@ class IncrementalReasoner:
         self.rules = list(rules)
         self.store_dir = store_dir
         self.compact_files_every = max(1, compact_files_every)
-        self._batches_since_compact = 0
         # premise tracking makes retraction well-defined (a fact survives a
         # retraction iff it is still a premise or still derivable); costs
         # one O(batch) parquet append per batch. Disable for insert-only
@@ -123,6 +124,7 @@ class IncrementalReasoner:
         self._recover_compaction()
         self.n_buckets = self._resolve_layout(n_buckets)
         self._recover_retraction()
+        self._batches_since_compact = self._most_files_per_bucket()
 
     # --- durable bucketed parquet ----------------------------------------
 
@@ -192,6 +194,24 @@ class IncrementalReasoner:
         return os.path.isdir(base) and any(
             not e.startswith(".") for e in os.listdir(base)
         )
+
+    def _most_files_per_bucket(self) -> int:
+        """Largest data-file count of any ``bucket=`` directory of the store
+        or the premise directory. An append adds at most one file per
+        bucket and compaction leaves one, so this bounds the appends since
+        the last compaction: a reopened store resumes its compaction
+        cadence instead of restarting it at 0, which would let a stream
+        restarted more often than every ``compact_files_every`` batches
+        grow its files per bucket without bound."""
+        most = 0
+        for base in (self.store_dir, self.premises_dir):
+            if not os.path.isdir(base):
+                continue
+            for d in os.scandir(base):
+                if d.is_dir() and d.name.startswith(BUCKET_COL + "="):
+                    n = sum(1 for f in os.listdir(d.path) if f.endswith(".parquet"))
+                    most = max(most, n)
+        return most
 
     def facts(self) -> DataFrame:
         """The durable store (cold-read path: restart recovery / offline
@@ -277,9 +297,7 @@ class IncrementalReasoner:
         first batch seeds it."""
         if self._store is None:
             self._store = FactStore(
-                self.spark,
-                fixed_partitions=self.cfg.store_partitions,
-                compact_every=self.cfg.store_compact_every,
+                self.spark, compact_every=self.cfg.store_compact_every
             )
             if self._has_parquet():
                 self._store.seed(self.facts())

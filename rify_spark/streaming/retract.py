@@ -96,7 +96,7 @@ def overdelete(
         for r in cond:
             for i in range(len(r.body)):
                 b = bindings(facts_pre, r, delta=delta_src, seed_pos=i)
-                plans.append(_project_head_quads(b, r, dtype))
+                plans.append(project_heads(b, r, dtype))
         cand = _union_all(plans).dropDuplicates(SPOG)
         for db, dbn in zip(blocks, rows):
             cand = cand.join(_maybe_broadcast(db, dbn), SPOG, "left_anti")
@@ -107,12 +107,6 @@ def overdelete(
             rows.append(delta_rows)
             delta = new
     return _union_all(blocks), sum(rows), rounds
-
-
-def _project_head_quads(binding_df: DataFrame, lrule, dtype) -> DataFrame:
-    """Head projection without lineage extras — matcher.project_heads with
-    its default ``extra=()`` does exactly this."""
-    return project_heads(binding_df, lrule, dtype)
 
 
 def _head_bindings(D: DataFrame, head_atom, dtype) -> tuple:

@@ -93,11 +93,7 @@ def smart_tc_fixpoint(
     b_lit = term_lit(rec["edge_predicate"], dtype)
     prepend = rec["direction"] == "prepend"
 
-    store = FactStore(
-        spark,
-        fixed_partitions=cfg.store_partitions,
-        compact_every=cfg.store_compact_every,
-    )
+    store = FactStore(spark, compact_every=cfg.store_compact_every)
     ckpt = (
         CheckpointManager(
             spark,

@@ -49,7 +49,7 @@ def main() -> None:
     bound_strs = list(dict.fromkeys(s for r in rules for s in r.bound_terms()))
     const_ids = D.hash_terms(spark, bound_strs)
     facts_in = D.encode_quads(canonical)
-    dict_df = D.build_dict_audited(spark, canonical, bound_strs, audit=True)
+    dict_df = D.build_dict_audited(spark, canonical, bound_strs)
     t4 = time.time(); t["dict_audit"] = t4 - t3
     lrules = [lower_rule(r, i, lambda s: const_ids[s]) for i, r in enumerate(rules)]
     facts0 = seed_facts(spark, facts_in, lrules, D.ID_TYPE, assume_deduped=True)

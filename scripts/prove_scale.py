@@ -80,7 +80,7 @@ def main() -> None:
     wall = time.time() - t0
 
     # VERDICT r4 ask #8: end-to-end proof extraction at the DEFAULT
-    # collect_arguments_max_rows — the arguments table (~19M rows) is far
+    # COLLECT_ARGUMENTS_MAX_ROWS — the arguments table (~19M rows) is far
     # above the 1M threshold, so the iterative frontier join MUST engage;
     # then replay the proof through validate() and assert it implies the
     # goal (the round-trip the unit test only exercises at threshold 0).
@@ -91,7 +91,7 @@ def main() -> None:
     t1 = time.time()
     frontier_metrics: dict = {}
     args = collect_reachable_arguments(
-        spark, res.arguments, [goal], lrules, cfg, "string",
+        spark, res.arguments, [goal], lrules, "string",
         metrics=frontier_metrics,
     )
     lproof = recall_proof([goal], args, lrules)

@@ -53,6 +53,45 @@ def test_collision_audit_detects_fabricated_collision(spark):
     assert D.audit_collisions(bad, raise_on_collision=False) == 1
 
 
+def test_collision_audit_always_runs(spark, monkeypatch):
+    """Both entry points audit the dictionary: infer_df re-raises its
+    background audit's collision after joining the audit thread, and infer
+    raises it from build_dict_audited."""
+    import threading
+
+    from rify_spark import Bound as B, Rule, Unbound as U, infer
+    from rify_spark.api import infer_df
+
+    real = D.build_dict_deferred
+    audit_threads = []
+
+    def colliding(*args, **kwargs):
+        dict_df, _ = real(*args, **kwargs)
+
+        def audit_fn():
+            audit_threads.append(threading.current_thread())
+            raise DictionaryCollision("fabricated collision")
+
+        return dict_df, audit_fn
+
+    monkeypatch.setattr(D, "build_dict_deferred", colliding)
+    rules = [
+        Rule.create(
+            [[U("a"), B("parent"), U("b"), U("g")]],
+            [[U("a"), B("anc"), U("b"), U("g")]],
+        )
+    ]
+    quads = [("x", "parent", "y", "g")]
+    with pytest.raises(DictionaryCollision, match="fabricated"):
+        infer_df(spark, spark.createDataFrame(quads, SCHEMA), rules)
+    assert len(audit_threads) == 1
+    assert audit_threads[0] is not threading.main_thread()
+    assert not audit_threads[0].is_alive()
+    with pytest.raises(DictionaryCollision, match="fabricated"):
+        infer(spark, quads, rules)
+    assert len(audit_threads) == 2
+
+
 def test_hash_terms_matches_spark_hash(spark):
     terms = ["alpha", "beta", "gamma"]
     m = D.hash_terms(spark, terms)

@@ -295,7 +295,7 @@ def test_seed_plan_pruning_preserves_fixpoint(spark):
     set: once the delta is all `anc`, the parent-seeded and likes-seeded
     plans must not be built."""
     from rify_spark.api import infer_df
-    from rify_spark.infer import InferConfig
+    from rify_spark.reference import naive_closure
     from rify_spark.rules import Bound as B, Rule, Unbound as U
 
     edges = [(f"n{i}", "parent", f"n{i // 2}", "g") for i in range(1, 32)] + [
@@ -319,31 +319,31 @@ def test_seed_plan_pruning_preserves_fixpoint(spark):
             [[U("b"), B("liked_by"), U("a"), U("g")]],
         ),
     ]
-    df_on, fx_on = infer_df(
-        spark, facts, rules, config=InferConfig(prune_seed_plans=True)
+    df, fx = infer_df(spark, facts, rules)
+    assert sorted(map(tuple, df.collect())) == sorted(
+        naive_closure(edges, rules) - set(edges)
     )
-    df_off, fx_off = infer_df(
-        spark, facts, rules, config=InferConfig(prune_seed_plans=False)
-    )
-    assert sorted(map(tuple, df_on.collect())) == sorted(map(tuple, df_off.collect()))
-    # 4 seed plans exist (1 + 2 + 1); after iteration 1 the delta carries
-    # only anc (+liked_by in it1's output), so later iterations build fewer
-    on_plans = [m["plans_built"] for m in fx_on.metrics if "plans_built" in m]
-    off_plans = [m["plans_built"] for m in fx_off.metrics if "plans_built" in m]
-    assert off_plans and all(p == 4 for p in off_plans)
-    # iteration 1: seed delta has {parent, likes} but no anc yet -> the two
-    # anc-seeded plans are dead (2 live); iteration 2+: delta is anc (+
-    # liked_by once) -> parent/likes-seeded plans are dead (2 live)
-    assert on_plans and all(0 < p < 4 for p in on_plans)
-    assert sum(on_plans) < sum(off_plans)
+    # 4 seed plans exist (1 + 2 + 1). Iteration 1: seed delta has {parent,
+    # likes} but no anc yet -> the two anc-seeded plans are dead (2 live);
+    # iteration 2+: delta is anc (+ liked_by once) -> parent/likes-seeded
+    # plans are dead (2 live)
+    plans = [m["plans_built"] for m in fx.metrics if "plans_built" in m]
+    assert plans and all(0 < p < 4 for p in plans)
+    assert sum(plans) < 4 * len(plans)
 
 
-def test_hot_values_sampled_detection(spark):
-    """_hot_values must find a dominant key even when sampling kicks in
-    (hot_scan_sample_rows << occurrence count)."""
+def test_hot_values_sampled_detection(spark, monkeypatch):
+    """_seed_scan must find a dominant key even when sampling kicks in
+    (HOT_SCAN_SAMPLE_ROWS << occurrence count)."""
+    import importlib
+
     from pyspark.sql import functions as F
 
-    from rify_spark.infer import InferConfig, _hot_values
+    from rify_spark.infer import InferConfig, _seed_scan
+
+    # the package re-exports the infer() function under the module's name
+    infer_mod = importlib.import_module("rify_spark.infer")
+    monkeypatch.setattr(infer_mod, "HOT_SCAN_SAMPLE_ROWS", 500)
 
     n = 4000
     facts = spark.range(n).select(
@@ -354,11 +354,12 @@ def test_hot_values_sampled_detection(spark):
         .alias("o"),
         F.lit("g").alias("g"),
     )
-    cfg = InferConfig(hot_value_min_share=0.2, hot_scan_sample_rows=500)
-    hot = _hot_values(facts, n, cfg)
+    cfg = InferConfig(hot_value_min_share=0.2)
+    stats, hot = _seed_scan(facts, n, cfg, hot_only=True)
+    assert stats is None
     assert len(hot) == 1  # "hub" holds 25% of s/o occurrences; no one else is close
     cfg_off = InferConfig(salt_hot_values=False)
-    assert _hot_values(facts, n, cfg_off) == []
+    assert _seed_scan(facts, n, cfg_off, hot_only=True) == (None, [])
 
 
 def test_fixpoint_rescan_hot_on_compact_preserves_results(spark):
@@ -387,9 +388,7 @@ def test_fixpoint_rescan_hot_on_compact_preserves_results(spark):
     cfg = InferConfig(
         broadcast_delta_max_rows=0,
         store_compact_every=2,
-        rescan_hot_on_compact=True,
         hot_value_min_share=0.05,
-        hot_salt_n=4,
         # this test needs the GENERIC loop to run one iteration per link so
         # compaction + hot-rescan actually trigger; the doubling rewrite
         # would close the chain in O(log n) rounds via tc.py

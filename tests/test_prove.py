@@ -347,11 +347,14 @@ def test_loading_of_rules_works(spark):
     validate(rules, [])
 
 
-def test_prove_frontier_walk_matches_collect_path(spark):
+def test_prove_frontier_walk_matches_collect_path(spark, monkeypatch):
     """collect_reachable_arguments falls back to an iterative frontier join
-    above collect_arguments_max_rows; with the threshold forced to 0 the
+    above COLLECT_ARGUMENTS_MAX_ROWS; with the threshold forced to 0 the
     frontier branch must produce the identical proof (and validate)."""
-    from rify_spark.infer import InferConfig
+    import importlib
+
+    # the package re-exports the prove() function under the module's name
+    prove_mod = importlib.import_module("rify_spark.prove")
 
     rules = decl_rules(FRIENDSHIP_RULES)
     composite_claims = [
@@ -359,13 +362,8 @@ def test_prove_frontier_walk_matches_collect_path(spark):
         ("nick", "is", "awesome", DG),
     ]
     baseline = prove(spark, FRIENDSHIP_FACTS, composite_claims, rules)
-    frontier = prove(
-        spark,
-        FRIENDSHIP_FACTS,
-        composite_claims,
-        rules,
-        config=InferConfig(collect_arguments_max_rows=0),
-    )
+    monkeypatch.setattr(prove_mod, "COLLECT_ARGUMENTS_MAX_ROWS", 0)
+    frontier = prove(spark, FRIENDSHIP_FACTS, composite_claims, rules)
     assert frontier == baseline
     valid = validate(rules, frontier)
     for claim in composite_claims:

@@ -137,7 +137,6 @@ def test_fixpoint_salted_equals_unsalted(spark):
             broadcast_delta_max_rows=0,
             salt_hot_values=salt,
             hot_value_min_share=0.1,
-            hot_salt_n=4,
         )
         df, fx = infer_df(spark, facts, rules, config=cfg)
         return sorted(map(tuple, df.collect()))

@@ -166,6 +166,26 @@ def test_store_compaction_bounds_files(spark, tmp_path):
         assert len(files) <= 1, f"{bdir} not compacted: {files}"
 
 
+def test_compaction_cadence_survives_restarts(spark, tmp_path):
+    """A store reopened after every batch still compacts: each reasoner
+    resumes the batch count from the files already in the buckets, so with
+    compact_files_every=2 three one-batch reasoners leave one file per
+    bucket (a count restarted at 0 never reaches 2 and leaves three files
+    in the bucket of ``a``, whose ``anc`` row every batch extends)."""
+    import glob
+
+    store = str(tmp_path / "store")
+    edges = [(x, "parent", y, DG) for x, y in ("ab", "bc", "cd")]
+    for i, edge in enumerate(edges):
+        r = IncrementalReasoner(spark, _rules(), store, compact_files_every=2)
+        r.process_batch(spark.createDataFrame([edge], SCHEMA), i)
+    for base in (r.store_dir, r.premises_dir):
+        for bdir in glob.glob(os.path.join(base, "bucket=*")):
+            files = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
+            assert len(files) == 1, f"{bdir} not compacted: {files}"
+    assert _store_set(r) == _closure(edges)
+
+
 def test_failed_batch_rolls_back_live_store(spark, tmp_path):
     """A batch that fails after mutating the live store must not poison a
     replay: the rollback drops the live store, so the retried batch re-seeds
