@@ -607,6 +607,20 @@ def unconditional_heads(lrules: list) -> list:
     return out
 
 
+def unconditional_heads_df(
+    spark: SparkSession, lrules: list, dtype_str: str
+) -> Optional[DataFrame]:
+    """:func:`unconditional_heads` as an SPOG quad DataFrame, or None when
+    no rule is unconditional. These quads hold in every store (they are
+    never deletable, and every seed includes them)."""
+    heads = unconditional_heads(lrules)
+    if not heads:
+        return None
+    return spark.createDataFrame(
+        [h[:4] for h in heads], ", ".join(f"{c} {dtype_str}" for c in SPOG)
+    )
+
+
 def fixpoint(
     spark: SparkSession,
     facts0: DataFrame,
@@ -615,7 +629,6 @@ def fixpoint(
     lineage: bool = False,
     goals: Optional[DataFrame] = None,
     initial_arguments: Optional[DataFrame] = None,
-    delta0: Optional[DataFrame] = None,
     reuse_store: Optional[FactStore] = None,
     track_deltas: bool = False,
 ) -> FixpointResult:
@@ -624,18 +637,16 @@ def fixpoint(
     ``facts0`` must be deduplicated and already include unconditional-rule
     heads (see :func:`seed_facts`). With ``lineage=True`` a first-wins
     arguments table is maintained; with ``goals`` the loop exits early once
-    every goal quad is present (src/prove.rs:124). ``delta0`` restricts the
-    first round's worklist (incremental mode: ``facts0`` minus ``delta0``
-    is already a fixpoint, so only derivations touching ``delta0`` can be
-    new); by default the whole of ``facts0`` is the first worklist.
+    every goal quad is present (src/prove.rs:124). The whole of ``facts0``
+    is the first worklist.
 
     ``reuse_store``: an already-seeded live :class:`FactStore` (streaming
     IVM keeps one across micro-batches so per-batch cost reads cached
     blocks, never the full persisted store). When given, ``facts0`` is
-    ignored apart from its schema and ``delta0`` MUST be the checkpoint the
-    store's newest block was staged from (the novel quads); it is used as
-    is and its row count read from ``block_rows[-1]``. New derivations are
-    appended to the store in place.
+    ignored apart from its schema, and the first worklist is the store's
+    newest block (its ``last_src`` checkpoint — the novel quads the caller
+    just appended; the blocks before it are already a fixpoint). New
+    derivations are appended to the store in place.
     """
     cfg = cfg or InferConfig()
     rewrites: list = []
@@ -653,7 +664,6 @@ def fixpoint(
             cfg.smart_tc
             and len(rewrites) == 1
             and rewrites[0]["smart_eligible"]
-            and delta0 is None
             and reuse_store is None
             and initial_arguments is None
         )
@@ -770,29 +780,17 @@ def fixpoint(
     elif reuse_store is not None:
         seed_lc = store.union()
         facts_rows = store.total_rows
-        if delta0 is None:
-            delta = seed_lc
-            delta_rows = facts_rows
-            facts_old = seed_lc.limit(0)
-        else:
-            delta = delta0
-            delta_rows = store.block_rows[-1]
-            # the caller appended the delta as the store's newest block, so
-            # the semi-naive F_old is exactly the cached block prefix — no
-            # O(store) anti-join/checkpoint per micro-batch
-            facts_old = store.union_except_last()
+        delta = store.last_src
+        delta_rows = store.block_rows[-1]
+        # the delta is the store's newest block, so the semi-naive F_old is
+        # exactly the cached block prefix — no O(store) anti-join/checkpoint
+        # per micro-batch
+        facts_old = store.union_except_last()
     else:
         seed_lc, facts_rows = store.seed(facts0)
-        if delta0 is not None:
-            delta = delta0.localCheckpoint(eager=True)
-            delta_rows = delta.count()
-            facts_old = seed_lc.join(delta, SPOG, "left_anti").localCheckpoint(
-                eager=True
-            )
-        else:
-            delta = seed_lc
-            delta_rows = facts_rows
-            facts_old = seed_lc.limit(0)
+        delta = seed_lc
+        delta_rows = facts_rows
+        facts_old = seed_lc.limit(0)
         if lineage:
             # iteration-0 arguments (unconditional-rule heads) come from the
             # caller; see prove.py.
@@ -1011,12 +1009,8 @@ def seed_facts(
     regardless — heads may repeat premises.
     """
     facts = premises if assume_deduped else premises.dropDuplicates(SPOG)
-    heads = unconditional_heads(lrules)
-    if heads:
-        hdf = spark.createDataFrame(
-            [h[:4] for h in heads],
-            f"s {dtype_str}, p {dtype_str}, o {dtype_str}, g {dtype_str}",
-        )
+    hdf = unconditional_heads_df(spark, lrules, dtype_str)
+    if hdf is not None:
         facts = facts.unionByName(hdf).dropDuplicates(SPOG)
     return facts
 
@@ -1041,31 +1035,20 @@ def derived_facts(
     if res.resumed:
         return res.facts.join(premises_dedup, SPOG, "left_anti")
     parts = list(res.delta_dfs)
-    heads = unconditional_heads(lrules)
-    if heads:
-        hdf = spark.createDataFrame(
-            [h[:4] for h in heads],
-            f"s {dtype_str}, p {dtype_str}, o {dtype_str}, g {dtype_str}",
-        )
+    hdf = unconditional_heads_df(spark, lrules, dtype_str)
+    if hdf is not None:
         # heads ∖ premises with the SMALL side as the broadcast build:
         # stream the premises once for the tiny intersection, subtract
         # driver-side (an anti-join would hash-build the large premises)
-        from pyspark.sql import functions as F  # local alias for clarity
-
         present = {
             tuple(r)
             for r in premises_dedup.join(
                 F.broadcast(hdf), SPOG, "left_semi"
             ).collect()
         }
-        missing = [h[:4] for h in heads if h[:4] not in present]
+        missing = [h[:4] for h in unconditional_heads(lrules) if h[:4] not in present]
         if missing:
-            parts.append(
-                spark.createDataFrame(
-                    missing,
-                    f"s {dtype_str}, p {dtype_str}, o {dtype_str}, g {dtype_str}",
-                )
-            )
+            parts.append(spark.createDataFrame(missing, hdf.schema))
     if not parts:
         return res.facts.limit(0)
     return _union_all(parts)

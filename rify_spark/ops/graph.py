@@ -1,14 +1,12 @@
-"""Graph materialization: canonical quads -> vertex/edge tables.
+"""Graph materialization: canonical quads -> vertex table.
 
 The north rule's final pipeline stage ("graph materialize"): after
 extraction, linking, canonicalization and inference, the quad store is
-published as a property-graph-shaped pair of tables — an edge table and a
-vertex table with degree statistics — for downstream consumers. No
-reference analog (rify returns quad lists; its claim graph lives only in
-RAM, src/reasoner.rs:87-95).
+summarized as a property-graph vertex table with degree statistics for
+downstream consumers. No reference analog (rify returns quad lists; its
+claim graph lives only in RAM, src/reasoner.rs:87-95).
 
 Spark-first and 100-TB-shaped:
-  * the edge table is a pure projection (no shuffle, column-pruned);
   * vertex degrees use ONE shuffle: s- and o-occurrences are unioned as
     (node, out, in) indicator rows and summed in a single groupBy — not a
     groupBy-per-side + outer join (two shuffles + a join);
@@ -26,16 +24,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..session import shuffle_width
-
-
-def edges_table(quads: DataFrame) -> DataFrame:
-    """Quads as a property-graph edge table (src, rel, dst, graph)."""
-    return quads.select(
-        F.col("s").alias("src"),
-        F.col("p").alias("rel"),
-        F.col("o").alias("dst"),
-        F.col("g").alias("graph"),
-    )
 
 
 def vertices_table(quads: DataFrame) -> DataFrame:

@@ -69,7 +69,15 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..infer import SPOG, FactStore, InferConfig, _union_all, fixpoint, seed_facts
+from ..infer import (
+    SPOG,
+    FactStore,
+    InferConfig,
+    _union_all,
+    fixpoint,
+    seed_facts,
+    unconditional_heads_df,
+)
 from ..rules import Rule, lower_rule
 from ..session import scoped_conf
 
@@ -320,7 +328,7 @@ class IncrementalReasoner:
         Failure atomicity: the live store is mutated (novel block appended,
         fixpoint derivations added) BEFORE the durable parquet append — if
         any step fails mid-batch, a replay against the mutated store would
-        find the batch's premises already present, return early, and the
+        find the batch's premises already present, derive nothing, and the
         batch's closure would never be computed nor persisted. The except
         path therefore rolls the live store back to the committed state by
         dropping it (re-seeded from parquet on the next call)."""
@@ -329,7 +337,7 @@ class IncrementalReasoner:
         try:
             if self.track_premises:
                 # record the batch's premises FIRST (before any store
-                # mutation and before the all-duplicates early return):
+                # mutation, and also for an all-duplicates batch):
                 # retraction semantics need every asserted premise on
                 # record, including re-assertions of already-derived quads.
                 # Appends are dedup-free (O(batch), no store read) —
@@ -349,8 +357,6 @@ class IncrementalReasoner:
                     b.unpersist()
                 seed = seed_facts(self.spark, batch, self.lrules, "string")
                 novel, n_novel = store.seed(seed)
-                if n_novel == 0:
-                    return
             else:
                 # novelty against cached blocks (arrivals may repeat facts
                 # already present or derived) — no parquet re-read
@@ -359,35 +365,38 @@ class IncrementalReasoner:
                 ).localCheckpoint(eager=True)
                 blk = store.stage_block(novel)
                 n_novel = blk.count()
-                if n_novel == 0:
+                if n_novel:
+                    store.add_block(blk, rows=n_novel, src=novel)
+                else:
                     blk.unpersist()
-                    return
-                store.add_block(blk, rows=n_novel, src=novel)
-            res = fixpoint(
-                self.spark,
-                novel,  # schema source only (reuse_store is authoritative)
-                self.lrules,
-                self.cfg,
-                delta0=novel,
-                reuse_store=store,
-                track_deltas=True,
-            )
-            # durable append: exactly this batch's additions (novel premises
-            # + tracked per-iteration deltas) — O(delta), never O(store)
-            self._append_parquet(_union_all([novel] + res.delta_dfs))
+            # an all-duplicates batch derives and persists nothing, but it
+            # still counts toward compaction: its premises were appended
+            if n_novel:
+                res = fixpoint(
+                    self.spark,
+                    novel,  # schema source only (reuse_store is authoritative)
+                    self.lrules,
+                    self.cfg,
+                    reuse_store=store,
+                    track_deltas=True,
+                )
+                # durable append: exactly this batch's additions (novel
+                # premises + tracked per-iteration deltas) — O(delta), never
+                # O(store)
+                self._append_parquet(_union_all([novel] + res.delta_dfs))
+                # long-running stream: once the store dwarfs the typical
+                # batch, the small-store single-anti path re-broadcasts the
+                # WHOLE store union every batch (a serial HashedRelation
+                # build growing with the store). Force the chained per-block
+                # anti from then on — the facts side stays in place and
+                # per-batch cost tracks the batch, not the store.
+                if store.total_rows > 10 * n_novel and store.total_rows > 100_000:
+                    store.single_anti_max_rows = min(
+                        store.single_anti_max_rows, 100_000
+                    )
         except BaseException:
             self._reset_live_store()
             raise
-        # long-running stream: once the store dwarfs the typical batch, the
-        # small-store single-anti path re-broadcasts the WHOLE store union
-        # every batch (a serial HashedRelation build growing with the store).
-        # Force the chained per-block anti from then on — the facts side
-        # stays in place and per-batch cost tracks the batch, not the store.
-        if (
-            store.total_rows > 10 * max(n_novel, 1)
-            and store.total_rows > 100_000
-        ):
-            store.single_anti_max_rows = min(store.single_anti_max_rows, 100_000)
         self._batches_since_compact += 1
         if self._batches_since_compact >= self.compact_files_every:
             self.compact_store()
@@ -433,7 +442,6 @@ class IncrementalReasoner:
             overdelete,
             rederive,
             store_subtract,
-            unconditional_head_quads,
         )
 
         store = self._live_store()
@@ -474,12 +482,12 @@ class IncrementalReasoner:
             # and an unconditional head appears in both arms, and nothing
             # downstream dedups (stage_block and the journal keep rows as-is)
             p_rest = premises.join(_maybe_broadcast(x, x_rows), SPOG, "left_anti")
-            uncond = unconditional_head_quads(self.spark, self.lrules, QUAD_SCHEMA)
-            reseed = (
-                cone.join(p_rest, SPOG, "left_semi")
-                .unionByName(uncond.join(cone, SPOG, "left_semi"))
-                .dropDuplicates(SPOG)
-            )
+            reseed = cone.join(p_rest, SPOG, "left_semi")
+            uncond = unconditional_heads_df(self.spark, self.lrules, "string")
+            if uncond is not None:
+                reseed = reseed.unionByName(
+                    uncond.join(cone, SPOG, "left_semi")
+                ).dropDuplicates(SPOG)
             # 3. subtract, then re-derive survivors
             store_subtract(store, cone, cone_rows)
             readded, readd_rows, m["rederive_rounds"] = rederive(

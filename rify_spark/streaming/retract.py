@@ -16,8 +16,10 @@ over the existing FactStore + matcher machinery:
    surviving facts comes back. This step is *goal-directed*: each rule
    head is unified against ``D`` first (``D`` is small — broadcast), so
    every body probe is a broadcast-keyed scan of the store, never a rule
-   re-evaluation over the full store. Iterated to closure (a re-added fact
-   can support further re-additions), delta-restricted after round 0.
+   re-evaluation over the full store. The probes are the forward
+   matcher's own join chains (``matcher.bindings``), seeded with ``D``.
+   Iterated to closure (a re-added fact can support further re-additions);
+   every round matches the still-missing cone against store ∪ re-added.
 
 Cost model (the 100-TB contract): steps 1 and 3 are O(cone) join work plus
 O(store/cores) *scan* terms (body atoms probe the store's cached blocks in
@@ -40,13 +42,14 @@ Correctness notes:
 
 from __future__ import annotations
 
+import dataclasses
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..infer import SPOG, FactStore, _union_all
-from ..matcher import _atom_vars, atom_relation, bindings, project_heads, term_lit
+from ..matcher import bindings, project_heads
 
 # above this cone size the per-block broadcast joins would OOM the driver;
 # the subtract falls back to a shuffle anti and re-derivation to shuffle
@@ -109,102 +112,24 @@ def overdelete(
     return _union_all(blocks), sum(rows), rounds
 
 
-def _head_bindings(D: DataFrame, head_atom, dtype) -> tuple:
-    """Unify one head atom against the deletion set: constant slots filter,
-    variable slots project to ``v{slot}`` (repeated variables become
-    intra-row equality filters). The result is one binding row per
-    D-member this head can emit — the goal-directed seed relation."""
-    conds = []
-    first: dict = {}
-    for colname, slot in zip(SPOG, head_atom):
-        kind, val = slot
-        if kind == "c":
-            conds.append(F.col(colname) == term_lit(val, dtype))
-        else:
-            if val in first:
-                conds.append(F.col(colname) == F.col(first[val]))
-            else:
-                first[val] = colname
-    rel = D
-    for c in conds:
-        rel = rel.filter(c)
-    if not first:
-        # fully-constant head: 0-or-1-row gate (is the quad in the cone?)
-        return rel.select(F.lit(1).alias("__h")).limit(1), []
-    sel = [F.col(cn).alias(f"v{vi}") for vi, cn in sorted(first.items())]
-    return rel.select(*sel).dropDuplicates(), sorted(first)
-
-
-def _rederive_rule(
-    facts: DataFrame,
-    lrule,
-    D: DataFrame,
-    dtype,
-    delta: Optional[DataFrame] = None,
-) -> list:
+def _rederive_rule(facts: DataFrame, lrule, D: DataFrame, dtype) -> list:
     """D-members of ``lrule``'s heads derivable from ``facts`` — one plan
-    per head atom (and, with ``delta``, per body seed position).
+    per head atom, each the forward matcher's join chain for the goal rule
+    ``atom ∧ body → atom`` seeded at position 0 with ``D``.
 
-    Goal-direction: the accumulating join STARTS from the head-unification
-    table (broadcast — O(cone) rows), so each body atom is probed with the
-    head's variable bindings already pinned; a body atom sharing no
-    variable with anything yet joined is a disconnected existence gate
-    (crossJoin of a 0/1-row relation), exactly like the forward matcher.
-    With ``delta`` (delta-restricted rounds after round 0), one body
-    position reads the freshly re-added facts instead of the store."""
+    Goal-direction: the chain STARTS from the head atom unified against
+    ``D`` (broadcast — O(cone) rows), so each body atom is probed with the
+    head's variable bindings already pinned; a fully-constant head is the
+    matcher's 0/1-row existence gate. Every emitted quad is a ``D`` row:
+    the head projection rebuilds exactly the row its bindings came from."""
     plans = []
-    for head_atom in lrule.head:
-        hb, h_vars = _head_bindings(D, head_atom, dtype)
-        seed_positions = range(len(lrule.body)) if delta is not None else (None,)
-        for seed in seed_positions:
-            # the caller size-gates the broadcast hint on D itself
-            # (_maybe_broadcast); it rides through the projection
-            acc = hb
-            acc_vars = set(h_vars)
-            order = _connected_order(lrule.body, acc_vars)
-            for tag, pos in enumerate(order):
-                src = delta if (delta is not None and pos == seed) else facts
-                rel, rel_vars = atom_relation(src, lrule.body[pos], tag)
-                shared = sorted(acc_vars & set(rel_vars))
-                if shared:
-                    acc = acc.join(rel, on=[f"v{v}" for v in shared], how="inner")
-                else:
-                    # disconnected component (vars joined by a later atom)
-                    # or a fully-constant existence gate — same as the
-                    # forward matcher's crossJoin fallback
-                    acc = acc.crossJoin(rel)
-                acc_vars |= set(rel_vars)
-            plans.append(acc.select(*_head_cols(head_atom, dtype)))
+    for atom in lrule.head:
+        goal = dataclasses.replace(lrule, body=[atom, *lrule.body], head=[atom])
+        # the caller size-gates the broadcast hint on D itself
+        # (_maybe_broadcast); it rides through the seed atom's projection
+        b = bindings(facts, goal, delta=D, seed_pos=0)
+        plans.append(project_heads(b, goal, dtype))
     return plans
-
-
-def _head_cols(head_atom, dtype) -> list:
-    """Quad column expressions for one head atom under current bindings."""
-    return [
-        (term_lit(val, dtype) if kind == "c" else F.col(f"v{val}")).alias(colname)
-        for colname, (kind, val) in zip(SPOG, head_atom)
-    ]
-
-
-def _connected_order(body, bound_vars: set) -> list:
-    """Greedy body order for the goal-directed join: prefer atoms sharing
-    variables with what is already bound (head vars first), then more
-    constants. Ordering is not semantics-bearing (same binding set)."""
-    remaining = list(range(len(body)))
-    out: list = []
-    avail = set(bound_vars)
-    while remaining:
-        remaining.sort(
-            key=lambda i: (
-                -len(_atom_vars(body[i]) & avail),
-                -sum(1 for s in body[i] if s[0] == "c"),
-                i,
-            )
-        )
-        nxt = remaining.pop(0)
-        out.append(nxt)
-        avail |= _atom_vars(body[nxt])
-    return out
 
 
 def rederive(
@@ -220,12 +145,14 @@ def rederive(
     """DRed step 3: members of the (already subtracted) cone that survive.
 
     ``reseed`` — cone members that are facts by fiat (surviving premises,
-    unconditional heads) — seeds the re-added set; round 0 then finds cone
-    members with a derivation entirely inside (store ∪ re-added); later
-    rounds are delta-restricted to derivations using the previous round's
-    re-additions. Returns (readded union DataFrame, readded rows, rounds);
-    both the per-round blocks and the remaining-cone frontier are eager
-    localCheckpoints (bounded plans, no replay).
+    unconditional heads) — seeds the re-added set; each round then finds
+    the still-missing cone members with a derivation entirely inside
+    (store ∪ re-added so far). No delta restriction is needed: a member
+    derivable without the previous round's additions was already re-added
+    in that round, so a round's plan per head atom returns exactly the
+    members the new additions unlock. Returns (readded union DataFrame,
+    readded rows, rounds); both the per-round blocks and the remaining-cone
+    frontier are eager localCheckpoints (bounded plans, no replay).
     """
     readd_blocks = []
     readd_rows = 0
@@ -241,8 +168,6 @@ def rederive(
         )
         d_rem_rows = d_rem.count()
     cond = [r for r in lrules if not r.unconditional]
-    delta: Optional[DataFrame] = None  # round 0 is unrestricted
-    delta_rows = 0
     rounds = 0
     while d_rem_rows > 0 and cond:
         if max_rounds is not None and rounds >= max_rounds:
@@ -250,24 +175,15 @@ def rederive(
         rounds += 1
         facts = _union_all([store.union()] + readd_blocks)
         d_b = _maybe_broadcast(d_rem, d_rem_rows)
-        delta_b = _maybe_broadcast(delta, delta_rows) if delta is not None else None
-        plans: list = []
-        for r in cond:
-            plans.extend(_rederive_rule(facts, r, d_b, dtype, delta=delta_b))
+        plans = [p for r in cond for p in _rederive_rule(facts, r, d_b, dtype)]
         if not plans:
             break
-        new = (
-            _union_all(plans)
-            .dropDuplicates(SPOG)
-            .join(d_b, SPOG, "left_semi")  # safety: only cone members return
-            .localCheckpoint(eager=True)
-        )
+        new = _union_all(plans).dropDuplicates(SPOG).localCheckpoint(eager=True)
         n = new.count()
         if n == 0:
             break
         readd_blocks.append(new)
         readd_rows += n
-        delta, delta_rows = new, n
         d_rem = d_rem.join(_maybe_broadcast(new, n), SPOG, "left_anti").localCheckpoint(
             eager=True
         )
@@ -310,19 +226,3 @@ def store_subtract(store: FactStore, cone: DataFrame, cone_rows: int) -> None:
     store.just_compacted = True
     for b in old:
         b.unpersist()
-
-
-def unconditional_head_quads(spark: SparkSession, lrules: list, schema: str) -> DataFrame:
-    """The (fully-constant, range-restriction-guaranteed) head quads of
-    unconditional rules — never deletable: they hold in the empty store."""
-    rows = []
-    seen = set()
-    for r in lrules:
-        if not r.unconditional:
-            continue
-        for atom in r.head:
-            quad = tuple(slot[1] for slot in atom)
-            if quad not in seen:
-                seen.add(quad)
-                rows.append(quad)
-    return spark.createDataFrame(rows, schema) if rows else spark.createDataFrame([], schema)

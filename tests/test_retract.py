@@ -231,6 +231,37 @@ def test_retract_matches_batch_engine_on_tree(spark, tmp_path):
     assert _store_set(r) == _expected(spark, remaining)
 
 
+def test_retract_three_atom_two_head_rule(spark, tmp_path):
+    """A three-atom body with two head atoms, one repeating a variable
+    (``?b mid ?b``): re-derivation probes every head atom against the cone,
+    the repeated variable as an intra-row equality. Second parents give
+    some retracted facts alternative derivations."""
+    rules = _rules() + [
+        Rule.create(
+            [
+                [U("a"), B("parent"), U("b"), B(DG)],
+                [U("b"), B("parent"), U("c"), B(DG)],
+                [U("c"), B("parent"), U("d"), B(DG)],
+            ],
+            [
+                [U("a"), B("ggp"), U("d"), B(DG)],
+                [U("b"), B("mid"), U("b"), B(DG)],
+            ],
+        )
+    ]
+    edges = [(f"n{k}", "parent", f"n{k // 2}", DG) for k in range(2, 24)]
+    second = [(f"n{k}", "parent", f"n{k // 2 + 1}", DG) for k in range(4, 24, 3)]
+    prem = edges + second + [("n5", "mid", "n5", DG)]
+    r = _reasoner(spark, tmp_path, rules=rules)
+    r.process_batch(_df(spark, prem), 0)
+
+    retract = [q for q in edges if int(q[0][1:]) % 5 == 0]
+    m = r.retract_batch(_df(spark, retract))
+    assert m["readded"] > 0 and m["rederive_rounds"] >= 1
+    remaining = [q for q in prem if q not in retract]
+    assert _store_set(r) == _expected(spark, remaining, rules)
+
+
 def test_journal_crash_window_replays(spark, tmp_path):
     """A crash after the journal commits but before it applies must replay
     idempotently on the next startup."""

@@ -186,6 +186,21 @@ def test_compaction_cadence_survives_restarts(spark, tmp_path):
     assert _store_set(r) == _closure(edges)
 
 
+def test_duplicate_batches_count_toward_compaction(spark, tmp_path):
+    """A batch whose quads are all in the store still appends its premises,
+    so it counts toward ``compact_files_every``: with a cadence of 2, one
+    batch and three repeats of it leave one file per bucket (skipping the
+    count on repeats leaves four premise files in a bucket)."""
+    edges = [("a", "parent", "b", DG), ("b", "parent", "c", DG)]
+    r = IncrementalReasoner(
+        spark, _rules(), str(tmp_path / "store"), compact_files_every=2
+    )
+    for i in range(4):
+        r.process_batch(spark.createDataFrame(edges, SCHEMA), i)
+    assert r._most_files_per_bucket() == 1
+    assert _store_set(r) == _closure(edges)
+
+
 def test_failed_batch_rolls_back_live_store(spark, tmp_path):
     """A batch that fails after mutating the live store must not poison a
     replay: the rollback drops the live store, so the retried batch re-seeds
