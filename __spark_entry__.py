@@ -864,9 +864,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "o16_validate_roundtrip": _q_validate_roundtrip,
         "o17_rule_lowering": quads.rule_lowering,
         "o18_rule_validation": quads.rule_validation,
-        # linear-recursion doubling rewrite: a 1024-link chain closure
-        # written as the O(depth) linear rule, closed in O(log depth)
-        # iterations (rewrite.py; the query raises if the rewrite skipped)
+        # a 1024-link chain closure written as the O(depth) linear rule,
+        # closed in O(log depth) rounds by smart TC (tc.py; the query
+        # raises unless a smart-TC round ran)
         "o19_linear_chain_rewrite": quads.linear_chain_closure,
         # skew: hot-key-salted shuffle joins through the whole fixpoint
         "skew_salted_closure": quads.skew_salted_closure,

@@ -114,24 +114,6 @@ class CheckpointManager:
         without one), then every ``every`` iterations."""
         return last_base == 0 or (it - last_base) >= every
 
-    def existing_fingerprint(self):
-        """Fingerprint stamped in the newest complete checkpoint, or None
-        for an empty/fresh directory — lets a caller route a resume to the
-        strategy that WROTE the directory without tripping the mismatch
-        error (no fingerprint verification happens here)."""
-        if not os.path.isdir(self.dir):
-            return None
-        newest, fp = -1, None
-        for name in os.listdir(self.dir):
-            if not name.startswith("iter="):
-                continue
-            mpath = os.path.join(self.dir, name, "meta.json")
-            it = int(name.split("=")[1])
-            if it > newest and os.path.exists(mpath):
-                with open(mpath) as f:
-                    newest, fp = it, json.load(f).get("fingerprint")
-        return fp
-
     def extra_path(self, it: int, name: str) -> str:
         """Path for a strategy-specific artifact inside iteration ``it``'s
         directory (e.g. smart TC's wavefront ``d.parquet``). Callers write

@@ -41,6 +41,11 @@ Scale design:
   * AQE (incl. skew-join splitting) is expected on; hot-predicate skew is
     additionally mitigated by the dictionary's hash ids spreading the key
     space, and per-predicate stats feed the static join order.
+
+Rules are never rewritten. The one program with its own evaluation is the
+pure transitive closure (copy rule plus one linear or nonlinear
+recursion): in batch mode it runs on smart TC (tc.py), O(log depth)
+rounds with a unique decomposition per derived pair.
 """
 
 from __future__ import annotations
@@ -58,6 +63,7 @@ from .checkpoint import CheckpointManager
 from .matcher import bindings, lineage_cols, project_heads
 from .rules import LoweredRule
 from .session import floor_regime, scoped_conf, shuffle_width
+from .tc import detect_tc, smart_tc_fixpoint
 
 SPOG = ["s", "p", "o", "g"]
 # predicate-vocabulary cap of the driver-side statistics: join-order stats
@@ -378,23 +384,14 @@ class InferConfig:
     # see _seed_scan).
     salt_hot_values: bool = True
     hot_value_min_share: float = 0.2
-    # rewrite linear transitive recursions (H <- B; H(x,z) <- B(x,y),H(y,z))
-    # to the LFP-identical doubling form (H(x,z) <- H(x,y),H(y,z)) so a
-    # k-deep chain closes in O(log k) iterations instead of O(k) — the
-    # difference between 17 jobs and 100,000 jobs on a 100k-link chain.
-    # Proof + eligibility conditions in rewrite.py; never applied in
-    # lineage or goal-directed mode.
-    rewrite_linear_recursion: bool = True
-    # delegation of the PURE two-rule TC program to the unique-decomposition
-    # doubling strategy (tc.py). False keeps the doubling REWRITE (above)
-    # on the generic loop — the knob the generic-loop acceptance harnesses
-    # (big_closure, resume_soak) use, so they measure the same ~O(log depth)
-    # doubled program their historical artifacts did, minus the strategy.
-    smart_tc: bool = True
 
 
 @dataclass
 class FixpointResult:
+    """The outcome of :func:`fixpoint`. A run that smart TC evaluated
+    (tc.py) tags every ``metrics`` record ``strategy: "smart_tc"``; the
+    generic loop's records carry no strategy."""
+
     facts: DataFrame                 # premises ∪ everything derived (deduped)
     arguments: Optional[DataFrame]   # lineage (prove mode): spog, rule_index, inst, iteration
     metrics: list = field(default_factory=list)
@@ -409,9 +406,6 @@ class FixpointResult:
     # then misses pre-restart iterations — derived-set shortcuts must fall
     # back to the facts-minus-premises anti-join)
     resumed: bool = False
-    # linear-recursion doubling rewrites applied to the rule set
-    # (rewrite.py): [{"rule_index", "predicate"}, ...]
-    rewrites: list = field(default_factory=list)
 
 
 def _union_all(dfs: list) -> DataFrame:
@@ -647,98 +641,23 @@ def fixpoint(
     newest block (its ``last_src`` checkpoint — the novel quads the caller
     just appended; the blocks before it are already a fixpoint). New
     derivations are appended to the store in place.
+
+    A program that :func:`rify_spark.tc.detect_tc` recognizes as a pure
+    transitive closure runs on smart TC instead when there is no lineage,
+    no goals and no ``reuse_store``; every other call runs the user's own
+    rules on the loop below.
     """
     cfg = cfg or InferConfig()
-    rewrites: list = []
-    if cfg.rewrite_linear_recursion and not lineage and goals is None:
-        # O(depth) -> O(log depth) iterations for linear transitive shapes;
-        # LFP-preserving (see rewrite.py). Lineage keeps the user's rules
-        # (proof steps must replay them); goal mode keeps the early-exit
-        # iteration evaluation-order-independent. Applied BEFORE the
-        # checkpoint fingerprint so resume pairs with the rewritten program.
-        from .rewrite import rewrite_linear_doubling
-
-        orig_lrules = lrules
-        lrules, rewrites = rewrite_linear_doubling(lrules)
-        delegate = (
-            cfg.smart_tc
-            and len(rewrites) == 1
-            and rewrites[0]["smart_eligible"]
-            and reuse_store is None
-            and initial_arguments is None
-        )
-        if delegate and cfg.checkpoint_dir and cfg.resume:
-            # pre-upgrade migration: a checkpoint directory written by the
-            # GENERIC loop for this same program (before smart TC took
-            # checkpoint mode, or with smart_tc=False) must keep resuming
-            # on the generic loop instead of failing the smart fingerprint
-            existing = CheckpointManager(
-                spark, cfg.checkpoint_dir
-            ).existing_fingerprint()
-            if existing is not None and not existing.startswith("smart_tc:"):
-                delegate = False
-        if delegate:
-            # Pure two-rule TC program in batch mode: delegate to the
-            # unique-decomposition doubling strategy (tc.py) — same LFP,
-            # O(log depth) rounds AND O(|closure|) total join output (the
-            # plain doubling rewrite re-derives each pair once per split
-            # point, quadratic on chains). Checkpoint mode delegates too
-            # (smart TC persists store + D wavefront per round, own
-            # fingerprint namespace); incremental/streaming modes keep the
-            # generic loop.
-            from .tc import smart_tc_fixpoint
-
+    if not lineage and goals is None and reuse_store is None:
+        # the pure transitive-closure program runs on smart TC (tc.py):
+        # O(log depth) rounds and O(|closure|) join output. Lineage keeps the
+        # generic loop (proof steps replay the user's rules), goal mode keeps
+        # its early-exit check, and a live store its per-batch worklist.
+        rec = detect_tc(lrules)
+        if rec is not None:
             return smart_tc_fixpoint(
-                spark, facts0, rewrites[0], cfg,
-                # res.rewrites reports rule MODIFICATIONS; the nonlinear
-                # record is detection-only (user's rules ran unmodified)
-                [rc for rc in rewrites if rc.get("shape") == "linear"],
-                track_deltas=track_deltas,
+                spark, facts0, rec, cfg, track_deltas=track_deltas
             )
-        # nonlinear-shape records are detection-only (no rule modified);
-        # outside the smart path they are inert — drop them so the probe
-        # below and res.rewrites reflect actual rule changes
-        rewrites = [rc for rc in rewrites if rc.get("shape") == "linear"]
-        if not rewrites:
-            lrules = orig_lrules
-        if rewrites:
-            # Generic loop would evaluate the NONLINEAR form, which composes
-            # H-facts with each other — unsound when the premises already
-            # contain H-facts: the linear LFP only B-prefixes them (B^k∘H0),
-            # it never derives H0∘H0. (Smart TC above is exact for H0 — it
-            # composes B-powers onto the store, never H∘H.) Keep the rewrite
-            # only for predicates with no premise H-fact: one pushed-filter
-            # probe job on the seed, paid only when a rewrite reaches the
-            # generic path (checkpoint mode / bystander rules).
-            import functools
-            import operator
-
-            from .matcher import term_lit
-
-            dtype_p = facts0.schema["p"].dataType
-            probe = functools.reduce(
-                operator.or_,
-                [
-                    facts0["p"] == term_lit(rc["predicate"], dtype_p)
-                    for rc in rewrites
-                ],
-            )
-            present = {
-                r[0] for r in facts0.where(probe).select("p").distinct().collect()
-            }
-            if present:
-                by_index = {r.index: r for r in orig_lrules}
-                for rc in rewrites:
-                    if rc["predicate"] in present:
-                        pos = next(
-                            i
-                            for i, r in enumerate(lrules)
-                            if r.index == rc["rule_index"]
-                        )
-                        lrules[pos] = by_index[rc["rule_index"]]
-                rewrites = [
-                    rc for rc in rewrites if rc["predicate"] not in present
-                ]
     dtype = facts0.schema["s"].dataType
     cond_rules: list = [r for r in lrules if not r.unconditional]
     ckpt = (
@@ -770,7 +689,7 @@ def fixpoint(
         it, facts_df, delta_df, arguments, meta = resumed
         seed_lc, facts_rows = store.seed(facts_df, rows_hint=meta.get("facts_rows"))
         delta = delta_df.localCheckpoint(eager=True)
-        delta_rows = meta.get("delta_rows", delta.count())
+        delta_rows = meta["delta_rows"] if "delta_rows" in meta else delta.count()
         last_base = meta.get("base_iter", it)
         # F_old for the next round (non-redundant decomposition)
         facts_old = seed_lc.join(delta, SPOG, "left_anti").localCheckpoint(
@@ -989,7 +908,6 @@ def fixpoint(
         facts_rows=facts_rows,
         delta_dfs=tracked_deltas,
         resumed=resumed is not None,
-        rewrites=rewrites,
     )
 
 

@@ -367,7 +367,7 @@ def ancestry_closure(spark: SparkSession, sf_dir: str, config=None) -> DataFrame
     return derived
 
 
-# --- O19: linear-recursion doubling rewrite (deep-chain closure) -----------
+# --- O19: linear-recursion deep-chain closure (smart TC) -------------------
 
 CHAIN_LINKS = 1024
 
@@ -376,13 +376,13 @@ def linear_chain_closure(spark: SparkSession, sf_dir: str, config=None) -> DataF
     """Deep-chain reachability written the way users write it — the LINEAR
     recursion reach(x,z) <- next(x,y), reach(y,z) — which semi-naive
     evaluation would grind through one Spark iteration PER LINK (1024 jobs
-    here; 10^5+ on real dependency chains). The doubling rewrite
-    (rewrite.py) makes it ceil(log2 n)+2 iterations with the identical
-    least fixpoint; this gate certifies both the closure (exact vs the
-    all-pairs oracle: the TC of a path graph is every ordered pair) and
-    that the rewrite actually fired. The chain fixture is the first
-    CHAIN_LINKS+1 customer keys — driver-bounded, so the unpartitioned
-    rank window is fine; the closure itself runs distributed."""
+    here; 10^5+ on real dependency chains). Smart TC (tc.py) closes the
+    same least fixpoint in ceil(log2 n)+2 rounds; this gate certifies both
+    the closure (exact vs the all-pairs oracle: the TC of a path graph is
+    every ordered pair) and that smart TC actually ran. The chain fixture
+    is the first CHAIN_LINKS+1 customer keys — driver-bounded, so the
+    unpartitioned rank window is fine; the closure itself runs
+    distributed."""
     from ..api import infer_df
     from ..infer import InferConfig
     from ..rules import Bound as B, Rule, Unbound as U
@@ -416,10 +416,8 @@ def linear_chain_closure(spark: SparkSession, sf_dir: str, config=None) -> DataF
         ),
     ]
     derived, res = infer_df(spark, edges, rules, config or InferConfig())
-    if not res.rewrites:
-        raise RuntimeError(
-            "linear-chain gate expected the doubling rewrite to fire"
-        )
+    if not any(m.get("strategy") == "smart_tc" for m in res.metrics):
+        raise RuntimeError("linear-chain gate expected smart TC to run")
     return derived
 
 

@@ -91,16 +91,19 @@ def main() -> None:
             ],
             [[U("a"), B("ancestor"), U("c"), U("g")]],
         ),
+        # generic-loop acceptance harness (row-triggered width growth, LSM
+        # store bounds): a third, inert rule (its body predicate never
+        # occurs, so its seed plans are pruned as predicate-dead) keeps the
+        # program off smart TC — the run evaluates the same ~7-round
+        # nonlinear program every historical BIGRUN/GROWTH artifact measured
+        Rule.create(
+            [[U("a"), B("inert"), U("b"), U("g")]],
+            [[U("a"), B("inert_seen"), U("b"), U("g")]],
+        ),
     ]
-    # generic-loop acceptance harness (row-triggered width growth, LSM
-    # store bounds): delegation off so the run keeps exercising the
-    # machinery it validates — but the doubling REWRITE stays on, the same
-    # ~7-round doubled program every historical BIGRUN/GROWTH artifact
-    # measured
     cfg = InferConfig(
         checkpoint_dir=CKPT,
         store_compact_every=COMPACT_EVERY,
-        smart_tc=False,
     )
     shm0 = _shm_used_gb()
     t0 = time.time()

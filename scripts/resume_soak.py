@@ -82,19 +82,26 @@ def worker() -> None:
             [[U("a"), B("ancestor"), U("c"), U("g")]],
         ),
     ]
+    if os.environ.get("RIFY_RESUME_STRATEGY") != "smart":
+        # default: the GENERIC loop. A third, inert rule (its body predicate
+        # never occurs, so its seed plans are pruned as predicate-dead)
+        # keeps the program off smart TC; the loop evaluates the same
+        # nonlinear program the historical RESUME_RUN artifacts measured.
+        # RIFY_RESUME_STRATEGY=smart runs the pure pair on smart TC (its
+        # resume protocol under kill -9).
+        rules.append(
+            Rule.create(
+                [[U("a"), B("inert"), U("b"), U("g")]],
+                [[U("a"), B("inert_seen"), U("b"), U("g")]],
+            )
+        )
     # compact_every=3 puts full-facts bases at iterations 1 and 4, so the
     # resume exercises base ∪ subsequent-deltas reconstruction, not just a
     # base read
-    # RIFY_RESUME_STRATEGY=smart leaves delegation on (smart-TC resume
-    # protocol under kill -9); default pins the GENERIC loop — with the
-    # doubling rewrite still applied, i.e. exactly the doubled program the
-    # historical RESUME_RUN artifacts measured
-    smart = os.environ.get("RIFY_RESUME_STRATEGY") == "smart"
     cfg = InferConfig(
         checkpoint_dir=ckdir,
         resume=resume,
         store_compact_every=3,
-        smart_tc=smart,
     )
     t0 = time.time()
     derived, fx = infer_df(spark, edges, rules, cfg)

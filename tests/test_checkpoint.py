@@ -3,6 +3,9 @@ resume (the north rule's per-iteration lineage/metrics requirement)."""
 
 import json
 import os
+import sys
+
+import pytest
 
 from rify_spark.infer import InferConfig, fixpoint, seed_facts
 from rify_spark.rules import Bound as B, Rule, Unbound as U, lower_rule
@@ -77,9 +80,58 @@ def test_resume_from_mid_fixpoint(spark, tmp_path):
     assert all(m["iteration"] >= 2 for m in res.metrics)
 
 
-def test_resume_refuses_mismatched_fingerprint(spark, tmp_path):
-    import pytest
+def _linear_tc_setup(spark, n=12):
+    """A linear TC pair with a variable graph slot (the smart-TC program)
+    over an n-node chain."""
+    rows = [(f"n{i}", "parent", f"n{i + 1}", DG) for i in range(n - 1)]
+    rules = [
+        Rule.create(
+            [[U("a"), B("parent"), U("b"), U("g")]],
+            [[U("a"), B("anc"), U("b"), U("g")]],
+        ),
+        Rule.create(
+            [[U("a"), B("parent"), U("b"), U("g")],
+             [U("b"), B("anc"), U("c"), U("g")]],
+            [[U("a"), B("anc"), U("c"), U("g")]],
+        ),
+    ]
+    lrules = [lower_rule(r, i, lambda t: t) for i, r in enumerate(rules)]
+    return spark.createDataFrame(rows, SCHEMA), lrules, None
 
+
+@pytest.mark.parametrize(
+    "setup, loop",
+    [(_chain_setup, "fixpoint"), (_linear_tc_setup, "smart_tc_fixpoint")],
+    ids=["generic", "smart_tc"],
+)
+def test_resume_reads_row_count_from_meta(spark, tmp_path, monkeypatch, setup, loop):
+    """A resume takes the newest iteration's row count (``delta_rows`` /
+    ``d_rows``) from meta.json: the loop itself starts no count job. The
+    resumed run stops at the same iteration cap, so it runs no round."""
+    ckdir = str(tmp_path / "ck")
+    facts, lrules, _ = setup(spark)
+    facts0 = seed_facts(spark, facts, lrules, "string")
+    cfg = InferConfig(encode_terms=False, checkpoint_dir=ckdir, max_iterations=2)
+    assert fixpoint(spark, facts0, lrules, cfg).iterations == 2
+
+    DataFrame = type(spark.range(1))
+    real_count = DataFrame.count
+    callers = []
+
+    def count(self):
+        callers.append(sys._getframe(1).f_code.co_name)
+        return real_count(self)
+
+    monkeypatch.setattr(DataFrame, "count", count)
+    cfg = InferConfig(
+        encode_terms=False, checkpoint_dir=ckdir, max_iterations=2, resume=True
+    )
+    res = fixpoint(spark, facts0, lrules, cfg)
+    assert res.resumed and res.iterations == 2
+    assert loop not in callers
+
+
+def test_resume_refuses_mismatched_fingerprint(spark, tmp_path):
     ckdir = str(tmp_path / "ck")
     facts, lrules, _ = _chain_setup(spark)
     facts0 = seed_facts(spark, facts, lrules, "string")

@@ -7,6 +7,9 @@ call, i.e. in the middle of round 2, after the round's conf regime
 original exception must propagate and each conf must read exactly as
 before the call — a key that was unset before must be unset again.
 
+With a checkpoint directory, a rerun with ``resume=True`` after such a
+fault continues from the last committed round to the exact closure.
+
 Graph loops: a DataFrame method the loop calls once per round is made to
 raise in round 2. The original exception must propagate and every
 DataFrame the call persisted must be unpersisted again.
@@ -18,7 +21,7 @@ from pyspark import StorageLevel
 from rify_spark import Bound as B, Rule, Unbound as U
 from rify_spark.api import infer_df
 from rify_spark.extract import code_files_df
-from rify_spark.infer import FactStore
+from rify_spark.infer import FactStore, InferConfig
 from rify_spark.ops.graph import (
     bfs_levels,
     kcore,
@@ -27,6 +30,7 @@ from rify_spark.ops.graph import (
     sssp_distances,
 )
 from rify_spark.pipeline import run_pipeline
+from rify_spark.reference import naive_closure
 
 KEYS = (
     "spark.sql.codegen.wholeStage",
@@ -66,21 +70,24 @@ def _generic(spark):
     infer_df(spark, facts, rules)
 
 
+CHAIN = [(f"n{i}", "p", f"n{i + 1}", "g") for i in range(6)]
+# linear TC of p into q: alone it routes to tc.smart_tc_fixpoint
+TC_RULES = [
+    Rule.create([[U("a"), B("p"), U("b"), U("g")]],
+                [[U("a"), B("q"), U("b"), U("g")]]),
+    Rule.create(
+        [[U("a"), B("p"), U("b"), U("g")], [U("b"), B("q"), U("c"), U("g")]],
+        [[U("a"), B("q"), U("c"), U("g")]],
+    ),
+]
+# a rule whose body predicate never occurs keeps TC_RULES on the generic loop
+INERT = Rule.create([[U("a"), B("inert"), U("b"), U("g")]],
+                    [[U("a"), B("inert_seen"), U("b"), U("g")]])
+
+
 def _smart_tc(spark):
-    # linear TC over a 6-edge chain routes to tc.smart_tc_fixpoint
-    facts = spark.createDataFrame(
-        [(f"n{i}", "p", f"n{i + 1}", "g") for i in range(6)],
-        "s string, p string, o string, g string",
-    )
-    rules = [
-        Rule.create([[U("a"), B("p"), U("b"), U("g")]],
-                    [[U("a"), B("q"), U("b"), U("g")]]),
-        Rule.create(
-            [[U("a"), B("p"), U("b"), U("g")], [U("b"), B("q"), U("c"), U("g")]],
-            [[U("a"), B("q"), U("c"), U("g")]],
-        ),
-    ]
-    infer_df(spark, facts, rules)
+    facts = spark.createDataFrame(CHAIN, "s string, p string, o string, g string")
+    infer_df(spark, facts, TC_RULES)
 
 
 def _pipeline(spark):
@@ -113,6 +120,28 @@ def test_confs_restored_when_round_raises(spark, fail_second_stage_block, run, w
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize(
+    "rules, smart", [(TC_RULES + [INERT], False), (TC_RULES, True)],
+    ids=["fixpoint", "smart_tc"],
+)
+def test_checkpoint_resume_after_round_fault(
+    spark, tmp_path, monkeypatch, fail_second_stage_block, rules, smart
+):
+    """A checkpointed run that raises in round 2 leaves round 1 committed;
+    a resume without the fault continues from it to the exact closure."""
+    facts = spark.createDataFrame(CHAIN, "s string, p string, o string, g string")
+    cfg = InferConfig(checkpoint_dir=str(tmp_path / "ck"))
+    with pytest.raises(InjectedFault):
+        infer_df(spark, facts, rules, cfg)
+    monkeypatch.undo()
+    cfg.resume = True
+    derived, res = infer_df(spark, facts, rules, cfg)
+    assert res.resumed and res.metrics[0]["iteration"] == 1
+    assert (res.metrics[0].get("strategy") == "smart_tc") == smart
+    got = set(CHAIN) | {tuple(r) for r in derived.collect()}
+    assert got == naive_closure(CHAIN, rules)
 
 
 def _path(spark, n, cols="s string, o string"):

@@ -384,15 +384,19 @@ def test_fixpoint_rescan_hot_on_compact_preserves_results(spark):
             ],
             [[U("a"), B("anc"), U("c"), U("g")]],
         ),
+        # this test needs the GENERIC loop to run one iteration per link so
+        # compaction + hot-rescan actually trigger; the pure pair would
+        # close the chain in O(log n) rounds on smart TC (tc.py). This
+        # inert rule (body predicate never occurs) keeps it generic.
+        Rule.create(
+            [[U("a"), B("inert"), U("b"), U("g")]],
+            [[U("a"), B("inert_seen"), U("b"), U("g")]],
+        ),
     ]
     cfg = InferConfig(
         broadcast_delta_max_rows=0,
         store_compact_every=2,
         hot_value_min_share=0.05,
-        # this test needs the GENERIC loop to run one iteration per link so
-        # compaction + hot-rescan actually trigger; the doubling rewrite
-        # would close the chain in O(log n) rounds via tc.py
-        rewrite_linear_recursion=False,
     )
     df, fx = infer_df(spark, facts, rules, config=cfg)
     got = sorted(map(tuple, df.collect()))

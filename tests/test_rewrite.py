@@ -1,9 +1,11 @@
-"""Linear-recursion doubling rewrite (rify_spark/rewrite.py).
+"""Transitive-closure programs: smart-TC detection (``tc.detect_tc``) and
+evaluation.
 
 Detection is unit-tested on lowered rules (no Spark); equivalence is pinned
 against the engine-independent naive evaluator on randomized graphs with
-cycles, multiple graphs, and bystander rules; iteration counts verify the
-actual O(log depth) win end-to-end.
+cycles, multiple graphs, and bystander rules (which keep the user's rules
+on the generic loop); iteration counts verify the O(log depth) win of smart
+TC end-to-end.
 """
 
 import random
@@ -11,7 +13,7 @@ import random
 import pytest
 
 from rify_spark.reference import naive_closure
-from rify_spark.rewrite import rewrite_linear_doubling
+from rify_spark.tc import detect_tc
 from rify_spark.rules import Bound as B, Rule, Unbound as U, lower_rule
 
 
@@ -39,13 +41,24 @@ def _linear_tc(edge="next", reach="reach", mirrored=False):
 # ---------------------------------------------------------------- detection
 
 def test_detects_both_body_orders():
-    for mirrored in (False, True):
-        low = _lower(_linear_tc(mirrored=mirrored))
-        out, rw = rewrite_linear_doubling(low)
-        assert [r["rule_index"] for r in rw] == [1]
-        preds = {a[1][1] for a in out[1].body}
-        assert preds == {"reach"}  # edge atom now recursive
-        assert out[1].head == low[1].head and out[0] is low[0]
+    for mirrored, direction in ((False, "prepend"), (True, "append")):
+        rec = detect_tc(_lower(_linear_tc(mirrored=mirrored)))
+        assert rec == {
+            "predicate": "reach",
+            "edge_predicate": "next",
+            "direction": direction,
+            "shape": "linear",
+        }
+    # the same chain with its body atoms listed in the other order
+    swapped = _linear_tc()
+    swapped[1] = Rule.create(
+        [[U("b"), B("reach"), U("c"), U("g")],
+         [U("a"), B("next"), U("b"), U("g")]],
+        [[U("a"), B("reach"), U("c"), U("g")]],
+    )
+    assert detect_tc(_lower(swapped))["direction"] == "prepend"
+    # rule order does not matter either
+    assert detect_tc(_lower(_linear_tc()[::-1]))["predicate"] == "reach"
 
 
 def test_nonlinear_rule_is_left_alone():
@@ -56,12 +69,8 @@ def test_nonlinear_rule_is_left_alone():
                      [U("b"), B("reach"), U("c"), U("g")]],
                     [[U("a"), B("reach"), U("c"), U("g")]]),
     ]
-    low = _lower(rules)
-    out, rw = rewrite_linear_doubling(low)
-    # no rule is rewritten — the pure pair only gets a detection-only
-    # record so the smart strategy can take it
-    assert out[0] is low[0] and out[1] is low[1]
-    assert [r["shape"] for r in rw] == ["nonlinear"]
+    rec = detect_tc(_lower(rules))
+    assert rec["shape"] == "nonlinear" and rec["direction"] == "prepend"
 
 
 def test_third_rule_deriving_head_blocks_rewrite():
@@ -69,8 +78,7 @@ def test_third_rule_deriving_head_blocks_rewrite():
         Rule.create([[U("a"), B("alias"), U("b"), U("g")]],
                     [[U("a"), B("reach"), U("b"), U("g")]]),
     ]
-    _, rw = rewrite_linear_doubling(_lower(rules))
-    assert rw == []
+    assert detect_tc(_lower(rules)) is None
 
 
 def test_mismatched_edge_predicates_block_rewrite():
@@ -79,8 +87,7 @@ def test_mismatched_edge_predicates_block_rewrite():
                     [[U("a"), B("reach"), U("b"), U("g")]]),
         _linear_tc()[1],
     ]
-    _, rw = rewrite_linear_doubling(_lower(rules))
-    assert rw == []
+    assert detect_tc(_lower(rules)) is None
 
 
 def test_variable_head_predicate_anywhere_blocks_rewrite():
@@ -88,8 +95,7 @@ def test_variable_head_predicate_anywhere_blocks_rewrite():
         Rule.create([[U("s"), U("p"), U("o"), U("g")]],
                     [[U("o"), U("p"), U("s"), U("g")]]),
     ]
-    _, rw = rewrite_linear_doubling(_lower(rules))
-    assert rw == []
+    assert detect_tc(_lower(rules)) is None
 
 
 def test_inverted_copy_rule_blocks_rewrite():
@@ -98,8 +104,7 @@ def test_inverted_copy_rule_blocks_rewrite():
                     [[U("b"), B("reach"), U("a"), U("g")]]),  # inverse, not copy
         _linear_tc()[1],
     ]
-    _, rw = rewrite_linear_doubling(_lower(rules))
-    assert rw == []
+    assert detect_tc(_lower(rules)) is None
 
 
 def test_graph_slot_mismatch_blocks_rewrite():
@@ -109,11 +114,12 @@ def test_graph_slot_mismatch_blocks_rewrite():
                      [U("b"), B("reach"), U("c"), U("h")]],  # g != h
                     [[U("a"), B("reach"), U("c"), U("g")]]),
     ]
-    _, rw = rewrite_linear_doubling(_lower(rules))
-    assert rw == []
+    assert detect_tc(_lower(rules)) is None
 
 
-def test_constant_graph_slot_is_eligible():
+def test_constant_graph_slot_is_not_delegated():
+    """A constant graph slot is not per-graph semantics: the program runs
+    the user's rules on the generic loop."""
     rules = [
         Rule.create([[U("a"), B("next"), U("b"), B("g0")]],
                     [[U("a"), B("reach"), U("b"), B("g0")]]),
@@ -121,8 +127,7 @@ def test_constant_graph_slot_is_eligible():
                      [U("b"), B("reach"), U("c"), B("g0")]],
                     [[U("a"), B("reach"), U("c"), B("g0")]]),
     ]
-    _, rw = rewrite_linear_doubling(_lower(rules))
-    assert [r["predicate"] for r in rw] == ["reach"]
+    assert detect_tc(_lower(rules)) is None
 
 
 def test_broken_chain_variables_block_rewrite():
@@ -132,18 +137,28 @@ def test_broken_chain_variables_block_rewrite():
                      [U("a"), B("reach"), U("c"), U("g")]],  # shares a, not b
                     [[U("a"), B("reach"), U("c"), U("g")]]),
     ]
-    _, rw = rewrite_linear_doubling(_lower(rules))
-    assert rw == []
+    assert detect_tc(_lower(rules)) is None
 
 
 # ------------------------------------------------------------- equivalence
 
-def _closure_via_engine(spark, facts, rules, flag):
+def _closure_via_engine(spark, facts, rules):
     from rify_spark.api import infer
-    from rify_spark.infer import InferConfig
 
-    derived = infer(spark, facts, rules, InferConfig(rewrite_linear_recursion=flag))
-    return set(facts) | {tuple(q) for q in derived}
+    return set(facts) | {tuple(q) for q in infer(spark, facts, rules)}
+
+
+def _inert():
+    """A rule whose body predicate never occurs: its seed plans are pruned
+    as predicate-dead, and it keeps a TC program on the generic loop."""
+    return Rule.create(
+        [[U("a"), B("inert"), U("b"), U("g")]],
+        [[U("a"), B("inert_seen"), U("b"), U("g")]],
+    )
+
+
+def _smart(res):
+    return any(m.get("strategy") == "smart_tc" for m in res.metrics)
 
 
 def test_chain_closure_parity_and_log_iterations(spark):
@@ -157,11 +172,9 @@ def test_chain_closure_parity_and_log_iterations(spark):
     oracle = naive_closure(facts, rules)
 
     d_on, res_on = infer_df(spark, edges, rules, InferConfig())
-    d_off, res_off = infer_df(
-        spark, edges, rules, InferConfig(rewrite_linear_recursion=False)
-    )
-    assert res_on.rewrites and not res_off.rewrites
-    # doubling: ceil(log2(24)) + 2 = 7; linear: one iteration per link
+    d_off, res_off = infer_df(spark, edges, rules + [_inert()], InferConfig())
+    assert _smart(res_on) and not _smart(res_off)
+    # smart TC: ceil(log2(24)) + 2 = 7; generic loop: one iteration per link
     assert res_on.iterations <= 8 < n <= res_off.iterations
     rows_on = {tuple(r) for r in d_on.collect()}
     rows_off = {tuple(r) for r in d_off.collect()}
@@ -184,7 +197,7 @@ def test_random_graphs_parity_with_bystander_rules(spark):
             }
         )
         oracle = naive_closure(facts, rules)
-        got = _closure_via_engine(spark, facts, rules, True)
+        got = _closure_via_engine(spark, facts, rules)
         assert got == oracle, f"trial {trial}"
 
 
@@ -207,7 +220,7 @@ def test_smart_tc_random_cyclic_graphs_parity(spark):
             facts = sorted(set(facts) | {(nodes[0], "next", nodes[1], "g0"),
                                          (nodes[1], "next", nodes[0], "g0")})
         oracle = naive_closure(facts, rules)
-        got = _closure_via_engine(spark, facts, rules, True)
+        got = _closure_via_engine(spark, facts, rules)
         assert got == oracle, f"trial {trial}"
 
 
@@ -224,7 +237,6 @@ def test_smart_tc_premise_reach_facts_compose(spark):
     ]
     edges = spark.createDataFrame(facts, "s string, p string, o string, g string")
     derived, res = infer_df(spark, edges, _linear_tc(), InferConfig())
-    assert res.rewrites and res.rewrites[0]["smart_eligible"]
     assert res.metrics[0]["strategy"] == "smart_tc"  # actually delegated
     got = {tuple(r) for r in derived.collect()}
     assert got == naive_closure(facts, _linear_tc()) - set(facts)
@@ -348,21 +360,18 @@ def _nonlinear_tc():
 
 
 def test_nonlinear_pair_detected_smart_only():
-    """The already-nonlinear TC pair gets a detection-only record (no rule
-    modified) so the smart strategy can take it; with a bystander rule the
-    program is not the pure pair and nothing is emitted."""
-    low = _lower(_nonlinear_tc())
-    out, rw = rewrite_linear_doubling(low)
-    assert [r["shape"] for r in rw] == ["nonlinear"]
-    assert rw[0]["smart_eligible"] and rw[0]["predicate"] == "anc"
-    assert out[0] is low[0] and out[1] is low[1]  # rules untouched
+    """The nonlinear TC pair is detected so the smart strategy can take it;
+    with a bystander rule the program is not the pure pair and nothing is
+    detected."""
+    rec = detect_tc(_lower(_nonlinear_tc()))
+    assert rec["shape"] == "nonlinear"
+    assert rec["predicate"] == "anc" and rec["edge_predicate"] == "parent"
 
     bystander = Rule.create(
         [[U("a"), B("anc"), U("b"), U("g")]],
         [[U("b"), B("desc"), U("a"), U("g")]],
     )
-    _, rw2 = rewrite_linear_doubling(_lower(_nonlinear_tc() + [bystander]))
-    assert rw2 == []
+    assert detect_tc(_lower(_nonlinear_tc() + [bystander])) is None
 
 
 def test_nonlinear_smart_tc_random_parity_with_premise_h(spark):
@@ -384,7 +393,6 @@ def test_nonlinear_smart_tc_random_parity_with_premise_h(spark):
         edges = spark.createDataFrame(facts, "s string, p string, o string, g string")
         derived, res = infer_df(spark, edges, _nonlinear_tc(), InferConfig())
         assert res.metrics[0]["strategy"] == "smart_tc"
-        assert res.rewrites == []  # detection-only: no rule was modified
         got = set(facts) | {tuple(r) for r in derived.collect()}
         assert got == naive_closure(facts, _nonlinear_tc()), f"trial {trial}"
 
@@ -406,18 +414,16 @@ def test_nonlinear_pair_generic_loop_when_not_delegatable(spark, tmp_path):
         spark, edges, _nonlinear_tc() + [bystander],
         InferConfig(checkpoint_dir=str(tmp_path / "ck")),
     )
-    assert res.rewrites == []
-    assert all(m.get("strategy") != "smart_tc" for m in res.metrics)
+    assert not _smart(res)
     got = {tuple(r) for r in derived.collect()}
     assert got == naive_closure(facts, _nonlinear_tc() + [bystander]) - set(facts)
 
 
 def test_premise_h_facts_block_generic_rewrite(spark):
-    """Premises already containing composable H-facts make the nonlinear
-    form UNSOUND on the generic path (it would derive H0∘H0, which the
-    linear program never does): reach(a,b), reach(b,c) with zero next
-    edges must derive nothing reach-shaped. The bystander rule forces the
-    generic loop (smart_eligible=False)."""
+    """Premises already containing composable H-facts: the linear program
+    never derives H0∘H0, so reach(a,b), reach(b,c) with zero next edges
+    must derive nothing reach-shaped. The bystander rule forces the
+    generic loop, which runs the user's linear rule as written."""
     from rify_spark.api import infer_df
     from rify_spark.infer import InferConfig
 
@@ -429,7 +435,7 @@ def test_premise_h_facts_block_generic_rewrite(spark):
     edges = spark.createDataFrame(facts, "s string, p string, o string, g string")
     rules = _linear_tc() + [bystander]
     derived, res = infer_df(spark, edges, rules, InferConfig())
-    assert res.rewrites == []  # reverted by the premise-H probe
+    assert not _smart(res)
     got = {tuple(r) for r in derived.collect()}
     assert got == naive_closure(facts, rules) - set(facts)
     assert ("a", "reach", "c", "g0") not in got
@@ -445,14 +451,14 @@ def test_premise_h_facts_smart_path_is_exact(spark):
     facts = [("a", "reach", "b", "g0"), ("b", "reach", "c", "g0")]
     edges = spark.createDataFrame(facts, "s string, p string, o string, g string")
     derived, res = infer_df(spark, edges, _linear_tc(), InferConfig())
-    assert res.rewrites and res.rewrites[0]["smart_eligible"]
+    assert _smart(res)
     assert derived.count() == 0
 
 
 def test_premise_h_facts_block_rewrite_in_checkpoint_mode(spark, tmp_path):
-    """On the GENERIC path (bystander rule -> not delegatable) the pushed-
-    filter probe must revert the doubling rewrite when premise H-facts
-    exist — the nonlinear form would compose them with each other."""
+    """On the GENERIC path (bystander rule -> not delegatable), checkpoint
+    mode included, premise H-facts are only B-prefixed, never composed
+    with each other."""
     from rify_spark.api import infer_df
     from rify_spark.infer import InferConfig
 
@@ -472,8 +478,7 @@ def test_premise_h_facts_block_rewrite_in_checkpoint_mode(spark, tmp_path):
         spark, edges, _linear_tc() + [bystander],
         InferConfig(checkpoint_dir=str(tmp_path / "ck")),
     )
-    assert all(m.get("strategy") != "smart_tc" for m in res.metrics)
-    assert res.rewrites == []
+    assert not _smart(res)
     got = {tuple(r) for r in derived.collect()}
     assert got == naive_closure(facts, _linear_tc()) - set(facts)
     # x B-prefixes both premise H-facts; a∘c composition must be absent
@@ -534,57 +539,10 @@ def test_nonlinear_detected_with_swapped_body_atoms(spark):
                      [U("a"), B("anc"), U("b"), U("g")]],
                     [[U("a"), B("anc"), U("c"), U("g")]]),
     ]
-    _, rw = rewrite_linear_doubling(_lower(rules))
-    assert [r["shape"] for r in rw] == ["nonlinear"]
+    assert detect_tc(_lower(rules))["shape"] == "nonlinear"
     facts = [(f"n{i}", "parent", f"n{i+1}", "g0") for i in range(7)]
     e = spark.createDataFrame(facts, "s string, p string, o string, g string")
     d, res = infer_df(spark, e, rules, InferConfig())
     assert res.metrics[0]["strategy"] == "smart_tc"
     got = set(facts) | {tuple(r) for r in d.collect()}
     assert got == naive_closure(facts, rules)
-
-
-def test_smart_tc_false_keeps_rewrite_on_generic_loop(spark):
-    """smart_tc=False suppresses only the delegation: the doubling REWRITE
-    still closes the chain in O(log depth) generic rounds (the harness knob
-    big_closure/resume_soak pin)."""
-    from rify_spark.api import infer_df
-    from rify_spark.infer import InferConfig
-
-    facts = [(f"n{i}", "next", f"n{i+1}", "g0") for i in range(32)]
-    edges = spark.createDataFrame(facts, "s string, p string, o string, g string")
-    derived, res = infer_df(
-        spark, edges, _linear_tc(), InferConfig(smart_tc=False),
-    )
-    assert res.rewrites and all(
-        m.get("strategy") != "smart_tc" for m in res.metrics
-    )
-    assert res.iterations <= 8  # doubled program, not 32 linear rounds
-    got = {tuple(r) for r in derived.collect()}
-    assert got == naive_closure(facts, _linear_tc()) - set(facts)
-
-
-def test_pre_upgrade_generic_checkpoint_resumes_on_generic_loop(spark, tmp_path):
-    """A checkpoint directory written by the GENERIC loop for the pure pair
-    (pre-delegation build, here produced via smart_tc=False) must resume on
-    the generic loop instead of failing smart TC's fingerprint check."""
-    from rify_spark.api import infer_df
-    from rify_spark.infer import InferConfig
-
-    facts = [(f"n{i}", "next", f"n{i+1}", "g0") for i in range(64)]
-    edges = spark.createDataFrame(facts, "s string, p string, o string, g string")
-    ck = str(tmp_path / "ck")
-    _, r1 = infer_df(
-        spark, edges, _linear_tc(),
-        InferConfig(checkpoint_dir=ck, smart_tc=False, max_iterations=2),
-    )
-    assert r1.iterations == 2
-    # resume WITHOUT the pin: delegation must step aside by itself
-    derived, r2 = infer_df(
-        spark, edges, _linear_tc(),
-        InferConfig(checkpoint_dir=ck, resume=True),
-    )
-    assert r2.resumed
-    assert all(m.get("strategy") != "smart_tc" for m in r2.metrics)
-    got = {tuple(r) for r in derived.collect()}
-    assert got == naive_closure(facts, _linear_tc()) - set(facts)

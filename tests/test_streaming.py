@@ -413,6 +413,34 @@ def test_first_batch_seeds_live_store_once(spark, tmp_path, monkeypatch):
     assert _store_set(r) == _closure(rows)
 
 
+def test_linear_tc_batches_match_naive_closure(spark, tmp_path):
+    """The linear TC program on the live store runs the user's rules as
+    written: premise ``reach`` facts are only ``next``-prefixed, never
+    composed with each other, so batch 1's ``next(w,x)`` derives
+    ``reach(w,x)`` and ``reach(w,y)`` but not ``reach(w,z)``."""
+    from rify_spark.reference import naive_closure
+
+    rules = [
+        Rule.create(
+            [[U("a"), B("next"), U("b"), U("g")]],
+            [[U("a"), B("reach"), U("b"), U("g")]],
+        ),
+        Rule.create(
+            [[U("a"), B("next"), U("b"), U("g")],
+             [U("b"), B("reach"), U("c"), U("g")]],
+            [[U("a"), B("reach"), U("c"), U("g")]],
+        ),
+    ]
+    batches = [
+        [("x", "reach", "y", "g0"), ("y", "reach", "z", "g0")],
+        [("w", "next", "x", "g0")],
+    ]
+    r = IncrementalReasoner(spark, rules, str(tmp_path / "store"))
+    for i, rows in enumerate(batches):
+        r.process_batch(spark.createDataFrame(rows, SCHEMA), i)
+    assert _store_set(r) == naive_closure(batches[0] + batches[1], rules)
+
+
 def _write_nq_file(src, name, lines):
     os.makedirs(src, exist_ok=True)
     with open(os.path.join(src, name), "w") as f:
