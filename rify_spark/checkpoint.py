@@ -19,11 +19,12 @@ wall-clock and ``base_iter`` (the newest iteration whose directory holds a
 full facts.parquet) — resume reads that base and unions the deltas after
 it. An iteration directory without meta.json is incomplete and ignored.
 
-Storage is bounded, not historical: after each base commit the fixpoint
-prunes iteration dirs older than the base (:meth:`CheckpointManager.prune`
-— resume never reads them), so the directory holds O(store + one
-compaction interval of deltas). ``InferConfig.checkpoint_retain_history``
-keeps everything instead.
+The manager writes a base at the first saved iteration, then every
+``every`` iterations. Storage is bounded, not historical: after each base
+commit it prunes iteration dirs older than the base
+(:meth:`CheckpointManager.prune` — resume never reads them), so the
+directory holds O(store + one compaction interval of deltas).
+``retain_history`` keeps everything instead.
 """
 
 from __future__ import annotations
@@ -42,14 +43,20 @@ class CheckpointManager:
         spark: SparkSession,
         directory: str,
         fingerprint: Optional[str] = None,
+        every: int = 8,
+        retain_history: bool = False,
     ):
         """``fingerprint`` identifies the job (rules + config + input shape);
         it is stamped into every ``meta.json`` and verified on resume, so a
         stale checkpoint directory from a different job is refused instead of
-        silently restoring wrong fixpoint state."""
+        silently restoring wrong fixpoint state. ``every`` is the base
+        cadence in iterations; ``retain_history`` turns pruning off."""
         self.spark = spark
         self.dir = directory
         self.fingerprint = fingerprint
+        self.every = every
+        self.retain_history = retain_history
+        self.last_base = 0  # newest full-facts base; 0 = none written yet
         os.makedirs(directory, exist_ok=True)
 
     def _iter_dir(self, it: int) -> str:
@@ -59,30 +66,34 @@ class CheckpointManager:
         self,
         it: int,
         delta: DataFrame,
+        facts: DataFrame,
         arguments: Optional[DataFrame] = None,
-        facts: Optional[DataFrame] = None,
-        extra_meta: Optional[dict] = None,
         arguments_delta: Optional[DataFrame] = None,
-    ) -> None:
+        extra_meta: Optional[dict] = None,
+    ) -> bool:
         """Write iteration state. ``delta`` is always written; ``facts``
-        (the full store) and ``arguments`` (the full lineage table) only at
-        compaction/base points; ``arguments_delta`` (this iteration's new
-        lineage rows) at every other prove-mode iteration — per-iteration
+        (the full store) and ``arguments`` (the full lineage table, prove
+        mode) only when a base is due; ``arguments_delta`` (this iteration's
+        new lineage rows) at every other prove-mode iteration — per-iteration
         checkpoint IO stays O(delta) in both plain and prove mode, not
-        O(store)/O(lineage)."""
+        O(store)/O(lineage). A base commit prunes the iterations before it
+        unless history is retained. Returns whether a base was written."""
+        base = self.last_base == 0 or it - self.last_base >= self.every
+        if base:
+            self.last_base = it
         d = self._iter_dir(it)
         t0 = time.time()
         delta.write.mode("overwrite").parquet(os.path.join(d, "delta.parquet"))
-        if arguments is not None:
-            arguments.write.mode("overwrite").parquet(
-                os.path.join(d, "arguments.parquet")
-            )
+        if base:
+            facts.write.mode("overwrite").parquet(os.path.join(d, "facts.parquet"))
+            if arguments is not None:
+                arguments.write.mode("overwrite").parquet(
+                    os.path.join(d, "arguments.parquet")
+                )
         elif arguments_delta is not None:
             arguments_delta.write.mode("overwrite").parquet(
                 os.path.join(d, "args_delta.parquet")
             )
-        if facts is not None:
-            facts.write.mode("overwrite").parquet(os.path.join(d, "facts.parquet"))
         delta_dir = os.path.join(d, "delta.parquet")
         # partition count = written part files; counting them via listdir is
         # free, vs re-opening the parquet and converting to RDD (a plan
@@ -97,22 +108,19 @@ class CheckpointManager:
             "write_wall_s": round(time.time() - t0, 4),
             "delta_partitions": n_parts,
             "ts": time.time(),
-            "has_arguments": arguments is not None,
-            "has_args_delta": arguments is None and arguments_delta is not None,
-            "has_facts": facts is not None,
+            "has_arguments": base and arguments is not None,
+            "has_args_delta": not base and arguments_delta is not None,
+            "has_facts": base,
+            "base_iter": self.last_base,
             "fingerprint": self.fingerprint,
         }
         if extra_meta:
             meta.update(extra_meta)
         with open(os.path.join(d, "meta.json"), "w") as f:
             json.dump(meta, f)
-
-    @staticmethod
-    def base_due(it: int, last_base: int, every: int) -> bool:
-        """Full-facts base cadence, shared by both fixpoint strategies: the
-        first SAVED iteration always writes a base (latest() cannot resume
-        without one), then every ``every`` iterations."""
-        return last_base == 0 or (it - last_base) >= every
+        if base and not self.retain_history:
+            self.prune(it)
+        return base
 
     def extra_path(self, it: int, name: str) -> str:
         """Path for a strategy-specific artifact inside iteration ``it``'s
@@ -160,7 +168,8 @@ class CheckpointManager:
     def latest(self) -> Optional[tuple]:
         """(iteration, facts, delta, arguments|None, meta) of the newest
         complete checkpoint, or None. ``facts`` is reconstructed as the
-        newest base facts.parquet unioned with every delta after it."""
+        newest base facts.parquet unioned with every delta after it; the
+        base cadence continues from that base."""
         if not os.path.isdir(self.dir):
             return None
         complete = []
@@ -186,6 +195,7 @@ class CheckpointManager:
         base = meta.get("base_iter", it if meta.get("has_facts") else None)
         if base is None:
             raise ValueError(f"checkpoint at {d} has no facts base to resume from")
+        self.last_base = base
         facts = self.spark.read.parquet(
             os.path.join(self._iter_dir(base), "facts.parquet")
         )

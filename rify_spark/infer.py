@@ -79,7 +79,13 @@ HOT_SCAN_SAMPLE_ROWS = 1_000_000
 
 class FactStore:
     """The accumulated fact set as s-hash-partitioned, sorted, cached
-    blocks — the "bucketed fact store".
+    blocks — the "bucketed fact store". Callers only build candidates;
+    every write goes through :meth:`seed`, :meth:`novel` → :meth:`append`,
+    :meth:`rebuild` and :meth:`release`, which keep the invariants: one
+    width for all blocks, the newest block backed by ``last_src``,
+    ``block_rows`` summing to ``total_rows``, replaced blocks unpersisted.
+    Reads: :meth:`anti`, :meth:`union`, :meth:`union_except_last` and those
+    attributes.
 
     Why blocks instead of a grow-forever union of checkpoints:
       * every block is ``repartition(P, s).sortWithinPartitions(s,p,o,g)``
@@ -164,10 +170,12 @@ class FactStore:
         count from the seed size (the fixpoint typically grows the store
         ~10x, so the sizing allows for growth; ``fixed_partitions`` pins
         it). The seed plan is checkpointed BEFORE sizing so an expensive
-        input (e.g. an extraction pipeline) computes once.
+        input (e.g. an extraction pipeline) computes once. Blocks the store
+        already holds are released.
         Returns (seed checkpoint df, row count). The checkpoint is lazy —
         the sizing count (or, under rows_hint, the first consumer)
         materializes it, one job instead of two."""
+        self.release()
         lc = df.localCheckpoint(eager=False)
         rows = rows_hint if rows_hint is not None else lc.count()
         self.partitions = self.fixed_partitions or self._pick_partitions(
@@ -181,21 +189,55 @@ class FactStore:
         self.just_compacted = False
         return lc, rows
 
-    def stage_block(self, checkpointed_delta: DataFrame) -> DataFrame:
-        """Build (but do not append) the next block over a checkpoint-backed
-        delta. The caller runs the per-iteration novelty count ON this block
-        — one job both fills the block cache (the materialization
-        :meth:`_finalize_if_chained` used to pay a separate job for) and
-        yields the count + predicate set. An empty delta just unpersists the
-        staged block instead of appending it."""
-        return self._mk_block(checkpointed_delta)
+    def release(self) -> None:
+        """Unpersist every block; the store is empty afterwards."""
+        for b in self.blocks:
+            b.unpersist()
+        self.blocks, self.block_rows = [], []
+        self.total_rows = 0
+        self.last_src = None
 
-    def add_block(self, block: DataFrame, rows: int, src: DataFrame) -> None:
-        """Append a staged (non-empty, cache-filled) block; compact the
-        prefix when the chain grows — the newest block is never folded, so
-        :meth:`union_except_last` (the semi-naive F_old) stays a cached
-        block prefix. ``src`` is the checkpoint backing the block (kept for
-        re-blocking at a grown partition width)."""
+    def novel(self, cand: DataFrame) -> DataFrame:
+        """The distinct quads of ``cand`` the store lacks, as a lazy
+        checkpoint for :meth:`append`. Hash-partitioning ``cand`` by s at
+        the store's width is the ONE exchange: it satisfies the SPOG
+        dedup's clustering (subset satisfaction, verified: no added
+        exchange) and co-partitions the anti with every store block."""
+        return self.anti(
+            cand.repartition(self.partitions, "s").dropDuplicates(SPOG)
+        ).localCheckpoint(eager=False)
+
+    @staticmethod
+    def _count_and_preds(df: DataFrame) -> tuple:
+        """(row count, predicate set|None) of a checkpoint-backed delta in ONE
+        Spark job in the common case: the per-predicate counts give both, so
+        fusing the novelty count with the next iteration's prune set removes a
+        driver barrier per iteration. Only the rare overflow case — more than
+        STATS_MAX_PREDICATES distinct predicates in the delta (pruning then
+        stays off for that iteration) — pays a second job (the truncated
+        groupBy, then a plain count)."""
+        rows = _limited_collect(df.groupBy("p").count(), STATS_MAX_PREDICATES + 1)
+        if len(rows) > STATS_MAX_PREDICATES:
+            return df.count(), None
+        return sum(r["count"] for r in rows), {_norm_term(r["p"]) for r in rows}
+
+    def append(self, src: DataFrame, with_preds: bool = False) -> tuple:
+        """Append the checkpoint-backed quads ``src`` (disjoint from the
+        store: :meth:`novel`'s output) as the newest block, in ONE Spark job
+        that counts the block — filling its cache and, for a lazy ``src``,
+        the checkpoint. ``with_preds`` counts per predicate, which also
+        yields the predicate set. An empty block is unpersisted, not
+        appended; a non-empty one may trigger compaction, which never folds
+        the newest block (:meth:`union_except_last`, the semi-naive F_old,
+        stays a cached prefix). Returns ``(rows, predicate set | None)``."""
+        block = self._mk_block(src)
+        if with_preds:
+            rows, preds = self._count_and_preds(block)
+        else:
+            rows, preds = block.count(), None
+        if rows == 0:
+            block.unpersist()
+            return 0, preds
         self.blocks.append(block)
         self.block_rows.append(rows)
         self.total_rows += rows
@@ -224,6 +266,42 @@ class FactStore:
             # merges touch O(merged tail) rows, amortized O(log(store))
             # per appended row, and the chain stays O(log(store)) blocks.
             self._compact_tiered()
+        return rows, preds
+
+    def rebuild(self, plan: DataFrame) -> int:
+        """Replace every block with one block over ``plan`` (a query over
+        the store's own blocks, e.g. DRed's subtraction) at the current
+        width, in one Spark job. Returns the new row count."""
+        rows, src = self._fold(0, len(self.blocks), plan)
+        self.total_rows = rows
+        self.last_src = src
+        return rows
+
+    def _fold(
+        self, lo: int, hi: int, plan: Optional[DataFrame] = None,
+        rows: Optional[int] = None,
+    ) -> tuple:
+        """Replace ``blocks[lo:hi]`` with one block over ``plan`` (default:
+        their union) through a fresh lazy checkpoint, which unpins the
+        superseded checkpoints (executor memory drops back to ~O(store)).
+        Unknown ``rows`` are counted, which materializes the block now;
+        known ones leave that to :meth:`_finalize_if_chained`. Returns
+        ``(rows, checkpoint)``."""
+        old = self.blocks[lo:hi]
+        flat = (plan if plan is not None else _union_all(old)).localCheckpoint(
+            eager=False
+        )
+        merged = self._mk_block(flat)
+        if rows is None:
+            rows = merged.count()
+        else:
+            self._finalize_if_chained(merged)
+        for b in old:
+            b.unpersist()
+        self.blocks[lo:hi] = [merged]
+        self.block_rows[lo:hi] = [rows]
+        self.just_compacted = True
+        return rows, flat
 
     def _maybe_grow_partitions(self) -> bool:
         """Re-pick the block width when the store outgrew it. Seed-time
@@ -253,14 +331,8 @@ class FactStore:
         return True
 
     def _compact_prefix(self) -> None:
-        """Fold all blocks but the newest into one. The fold goes through a
-        fresh checkpoint, which unpins every superseded per-delta
-        checkpoint (executor memory drops back to ~O(store)); the old block
-        caches are unpersisted explicitly."""
-        prefix, last = self.blocks[:-1], self.blocks[-1]
-        # lazy: the merged block's finalize count (chained mode) or first
-        # consumer materializes the fold in the same job
-        flat = _union_all(prefix).localCheckpoint(eager=False)
+        """Fold all blocks but the newest into one, re-picking the width
+        first when the store outgrew it."""
         if self._maybe_grow_partitions():
             # co-partitioned joins need every block at one width, so the
             # newest block is re-built from its checkpoint at the new width
@@ -268,15 +340,11 @@ class FactStore:
             # iterations and only on growth compactions)
             relast = self._mk_block(self.last_src)
             self._finalize_if_chained(relast)
-            last.unpersist()
-            last = relast
-        merged = self._mk_block(flat)
-        self._finalize_if_chained(merged)
-        for b in prefix:
-            b.unpersist()
-        self.blocks = [merged, last]
-        self.block_rows = [self.total_rows - self.block_rows[-1], self.block_rows[-1]]
-        self.just_compacted = True
+            self.blocks[-1].unpersist()
+            self.blocks[-1] = relast
+        self._fold(
+            0, len(self.blocks) - 1, rows=self.total_rows - self.block_rows[-1]
+        )
 
     def _compact_tiered(self) -> None:
         """Fold the maximal geometric suffix of the PREFIX into one block
@@ -302,15 +370,7 @@ class FactStore:
         if m - j < 2:
             j = m - 2  # nothing geometric to fold: merge the last two anyway
             acc = self.block_rows[j] + self.block_rows[j + 1]
-        merged_src = self.blocks[j:m]
-        flat = _union_all(merged_src).localCheckpoint(eager=False)
-        merged = self._mk_block(flat)
-        self._finalize_if_chained(merged)
-        for b in merged_src:
-            b.unpersist()
-        self.blocks = self.blocks[:j] + [merged, self.blocks[m]]
-        self.block_rows = self.block_rows[:j] + [acc, self.block_rows[m]]
-        self.just_compacted = True
+        self._fold(j, m, rows=acc)
 
     def union(self) -> DataFrame:
         return _union_all(self.blocks)
@@ -353,13 +413,13 @@ class InferConfig:
     # shuffle joins with AQE skew handling. The broadcast hash-table build
     # is SERIAL (driver collect + HashedRelation), so its relative cost
     # grows with parallelism (Amdahl): on the 1M-node-tree closure
-    # (scripts/profile_fixpoint.py, local[8]/16g) an all-shuffle run beat
-    # all-broadcast 147s vs 159s and raised 2->8-core scaling efficiency
-    # 0.49 -> 0.70, while iterations with <=1M-row deltas still ran
-    # slightly faster broadcast. 1M rows (~32 MB) keeps the tail-latency
-    # win for small deltas and lets big deltas scale with cores; raise it
-    # on clusters where facts >> delta makes avoiding the facts-side
-    # exchange dominant.
+    # (local[8]/16g, NOTES.md "Broadcast-vs-shuffle profiled") an
+    # all-shuffle run beat all-broadcast 147s vs 159s and raised 2->8-core
+    # scaling efficiency 0.49 -> 0.70, while iterations with <=1M-row
+    # deltas still ran slightly faster broadcast. 1M rows (~32 MB) keeps
+    # the tail-latency win for small deltas and lets big deltas scale with
+    # cores; raise it on clusters where facts >> delta makes avoiding the
+    # facts-side exchange dominant.
     broadcast_delta_max_rows: int = 1_000_000
     # persistent checkpoints (resumable); None -> localCheckpoint only
     checkpoint_dir: Optional[str] = None
@@ -439,12 +499,12 @@ def _broadcast_cutoff_rows(spark: SparkSession, cfg: InferConfig) -> int:
 
     Cores clamp: the HashedRelation build is SERIAL, so its break-even
     shrinks as cores grow — the shuffle alternative costs ~rows/cores while
-    the build stays ~rows (scripts/profile_fixpoint.py: all-shuffle beat
-    all-broadcast at both 2 and 8 cores on multi-million-row deltas). The
-    clamp holds the serial build to roughly the work one core does in a
-    shuffled iteration: full cfg cutoff up to 8 cores, scaled down
-    inversely beyond (32 cores -> 250k rows), floored at 64k where
-    broadcast always wins on stage-latency alone."""
+    the build stays ~rows (NOTES.md "Broadcast-vs-shuffle profiled":
+    all-shuffle beat all-broadcast at both 2 and 8 cores on
+    multi-million-row deltas). The clamp holds the serial build to roughly
+    the work one core does in a shuffled iteration: full cfg cutoff up to
+    8 cores, scaled down inversely beyond (32 cores -> 250k rows), floored
+    at 64k where broadcast always wins on stage-latency alone."""
     cores = max(1, spark.sparkContext.defaultParallelism)
     cores_cap = max(64_000, cfg.broadcast_delta_max_rows * 8 // max(8, cores))
     return min(cfg.broadcast_delta_max_rows, _heap_mb(spark) * 500, cores_cap)
@@ -472,20 +532,6 @@ def _limited_collect(df: DataFrame, n: int) -> list:
     with scoped_conf(df.sparkSession) as set_conf:
         set_conf("spark.sql.limit.initialNumPartitions", 10000)
         return df.limit(n).collect()
-
-
-def _count_and_preds(df: DataFrame) -> tuple:
-    """(row count, predicate set|None) of a checkpoint-backed delta in ONE
-    Spark job in the common case: the per-predicate counts give both, so
-    fusing the novelty count with the next iteration's prune set removes a
-    driver barrier per iteration. Only the rare overflow case — more than
-    STATS_MAX_PREDICATES distinct predicates in the delta (pruning then
-    stays off for that iteration) — pays a second job (the truncated
-    groupBy, then a plain count)."""
-    rows = _limited_collect(df.groupBy("p").count(), STATS_MAX_PREDICATES + 1)
-    if len(rows) > STATS_MAX_PREDICATES:
-        return df.count(), None
-    return sum(r["count"] for r in rows), {_norm_term(r["p"]) for r in rows}
 
 
 def _seed_plan_live(atom, delta_preds: Optional[set]) -> bool:
@@ -665,6 +711,8 @@ def fixpoint(
             spark,
             cfg.checkpoint_dir,
             fingerprint=job_fingerprint(lrules, dtype.simpleString(), lineage),
+            every=cfg.store_compact_every,
+            retain_history=cfg.checkpoint_retain_history,
         )
         if cfg.checkpoint_dir
         else None
@@ -674,7 +722,6 @@ def fixpoint(
     arguments: Optional[DataFrame] = None
     it = 0
     store = reuse_store or FactStore(spark, compact_every=cfg.store_compact_every)
-    last_base = 0  # iteration of the newest full-facts parquet base
 
     # prove-mode lineage accumulates as a list of checkpoint-backed blocks
     # (iteration-0 seed + one localCheckpoint per iteration): the plan of
@@ -690,7 +737,6 @@ def fixpoint(
         seed_lc, facts_rows = store.seed(facts_df, rows_hint=meta.get("facts_rows"))
         delta = delta_df.localCheckpoint(eager=True)
         delta_rows = meta["delta_rows"] if "delta_rows" in meta else delta.count()
-        last_base = meta.get("base_iter", it)
         # F_old for the next round (non-redundant decomposition)
         facts_old = seed_lc.join(delta, SPOG, "left_anti").localCheckpoint(
             eager=True
@@ -739,7 +785,7 @@ def fixpoint(
         _seed_scan(seed_lc, facts_rows, cfg) if cond_rules else (None, [])
     )
     # predicate set of the CURRENT delta (drives seed-plan pruning),
-    # maintained for free by _count_and_preds after each iteration. When the
+    # maintained for free by each iteration's FactStore.append. When the
     # first delta IS the seed, the join-order stats already hold its
     # predicate set — reuse instead of paying another scan.
     if not cond_rules:
@@ -747,7 +793,7 @@ def fixpoint(
     elif delta is seed_lc and stats is not None:
         delta_preds = {_norm_term(p) for p in stats}
     else:
-        delta_preds = _count_and_preds(delta)[1]
+        delta_preds = FactStore._count_and_preds(delta)[1]
 
     with scoped_conf(spark) as set_conf:
         # constraint propagation walks every operator's expression set at
@@ -803,19 +849,14 @@ def fixpoint(
                 )
                 break
 
-            # ONE explicit exchange for the whole post-candidate pipeline: the
-            # candidate set is hash-partitioned by s at the store's width, which
-            # (a) satisfies the SPOG dedup / first-wins-window clustering
-            # requirement via subset satisfaction (verified: zero added
-            # exchange), and (b) co-partitions the anti-join with every store
-            # block (zero exchange either side). Without it the delta pays a
-            # spog-dedup exchange AND an s-exchange at the anti-join.
-            cand = _union_all(plans).repartition(store.partitions, "s")
             if lineage:
-                novel = store.anti(cand)
+                # the one s-exchange of FactStore.novel, with the first-wins
+                # window in place of the dedup
+                cand = _union_all(plans).repartition(store.partitions, "s")
                 w = Window.partitionBy(*SPOG).orderBy("rule_index", "inst")
                 picked = (
-                    novel.withColumn("__rn", F.row_number().over(w))
+                    store.anti(cand)
+                    .withColumn("__rn", F.row_number().over(w))
                     .filter(F.col("__rn") == 1)
                     .drop("__rn")
                     .withColumn("iteration", F.lit(it).cast("long"))
@@ -824,27 +865,19 @@ def fixpoint(
                 new = new_full.select(*SPOG)
             else:
                 new_full = None
-                new = store.anti(cand.dropDuplicates(SPOG)).localCheckpoint(eager=False)
-            # LAZY checkpoint + count-on-block = ONE Spark job per iteration for
-            # the whole candidate->anti->checkpoint->block->count pipeline: the
-            # count materializes the checkpoint (lineage truncation) and fills
-            # the block's (s-partitioned, sorted) cache as side effects, and
-            # yields the count + next prune set. Eager checkpoint + separate
-            # count + separate block fill was three driver barriers.
-            block = store.stage_block(new)
-            delta_rows, delta_preds = _count_and_preds(block)
-            if lineage and delta_rows:
-                arg_blocks.append(new_full)
-                arguments = _union_all(arg_blocks)
-
+                new = store.novel(_union_all(plans))
+            # ONE Spark job for the whole candidate->anti->checkpoint->block
+            # pipeline, which also yields the next prune set
+            delta_rows, delta_preds = store.append(new, with_preds=True)
             if delta_rows == 0:
-                block.unpersist()
                 metrics.append(
                     {"iteration": it, "delta_rows": 0, "wall_s": round(time.time() - t0, 4)}
                 )
                 break
 
-            store.add_block(block, rows=delta_rows, src=new)
+            if lineage:
+                arg_blocks.append(new_full)
+                arguments = _union_all(arg_blocks)
             if track_deltas:
                 tracked_deltas.append(new)
             facts_old = store.union_except_last()
@@ -870,35 +903,23 @@ def fixpoint(
                 "compacted": store.just_compacted,
             })
             if ckpt:
-                # first saved iteration always writes a base (== the old
-                # `it == 1`: resumed runs restart past 1 with last_base > 0)
-                write_base = ckpt.base_due(it, last_base, cfg.store_compact_every)
-                if write_base:
-                    last_base = it
-                ckpt.save_iteration(
+                wrote_base = ckpt.save_iteration(
                     it,
                     delta,
-                    arguments=arguments if (lineage and write_base) else None,
-                    arguments_delta=new_full if lineage else None,
-                    facts=store.union() if write_base else None,
-                    extra_meta={
-                        "facts_rows": facts_rows,
-                        "delta_rows": delta_rows,
-                        "base_iter": last_base,
-                    },
+                    store.union(),
+                    arguments=arguments,
+                    arguments_delta=new_full,
+                    extra_meta={"facts_rows": facts_rows, "delta_rows": delta_rows},
                 )
-                if lineage and write_base:
+                if lineage and wrote_base:
                     # re-point the lineage union at the base parquet just
                     # written: bounds the union plan width to base + tail
                     # blocks AND drops any dependency a RESUMED run carried
-                    # on older checkpoint files (about to be pruned below) —
+                    # on older checkpoint files (the save just pruned them) —
                     # without this, the next base write or a post-run
                     # res.arguments consumer would re-read pruned parquet
                     arguments = spark.read.parquet(ckpt.arguments_path(it))
-                    arg_blocks.clear()
-                    arg_blocks.append(arguments)
-                if write_base and not cfg.checkpoint_retain_history:
-                    ckpt.prune(last_base)
+                    arg_blocks[:] = [arguments]
 
     return FixpointResult(
         facts=store.union(),

@@ -8,8 +8,9 @@ incremental-view-maintenance step. This module wires that up:
 
     readStream (file source / any source producing s,p,o,g)
       -> foreachBatch(IncrementalReasoner.process_batch)
-          batch quads = Δ; append novel quads to the LIVE FactStore; run
-          the delta-restricted fixpoint against it; append this batch's
+          batch quads = Δ; append the novel ones to the LIVE FactStore
+          (FactStore.novel -> append, one Spark job); run the
+          delta-restricted fixpoint against it; append this batch's
           additions to the durable bucketed parquet store
 
 Scale design (what keeps per-batch wall flat in store size):
@@ -64,6 +65,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import warnings
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -315,11 +317,10 @@ class IncrementalReasoner:
         """Drop the live FactStore; the next batch re-seeds from the durable
         parquet, i.e. from exactly the committed batch prefix."""
         if self._store is not None:
-            for b in self._store.blocks:
-                try:
-                    b.unpersist()
-                except Exception:
-                    pass
+            try:
+                self._store.release()
+            except Exception as e:  # best effort on a failed batch's path
+                warnings.warn(f"rify_spark live-store release failed: {e!r}")
         self._store = None
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -352,23 +353,14 @@ class IncrementalReasoner:
                 # from the first real batch so the block width matches the
                 # data (a store seeded from an empty durable read would
                 # serialize every join at width 1 until the first prefix
-                # compaction); drop any empty block seeded earlier.
-                for b in store.blocks:
-                    b.unpersist()
+                # compaction); seed() releases any empty block held.
                 seed = seed_facts(self.spark, batch, self.lrules, "string")
                 novel, n_novel = store.seed(seed)
             else:
                 # novelty against cached blocks (arrivals may repeat facts
                 # already present or derived) — no parquet re-read
-                novel = store.anti(
-                    batch.repartition(store.partitions, "s")
-                ).localCheckpoint(eager=True)
-                blk = store.stage_block(novel)
-                n_novel = blk.count()
-                if n_novel:
-                    store.add_block(blk, rows=n_novel, src=novel)
-                else:
-                    blk.unpersist()
+                novel = store.novel(batch)
+                n_novel, _ = store.append(novel)
             # an all-duplicates batch derives and persists nothing, but it
             # still counts toward compaction: its premises were appended
             if n_novel:
@@ -437,12 +429,7 @@ class IncrementalReasoner:
             return self._retract_batch_inner(retract_df)
 
     def _retract_batch_inner(self, retract_df: DataFrame) -> dict:
-        from .retract import (
-            _maybe_broadcast,
-            overdelete,
-            rederive,
-            store_subtract,
-        )
+        from .retract import _maybe_broadcast, overdelete, rederive, subtract_plan
 
         store = self._live_store()
         x_req = retract_df.select(*SPOG).dropDuplicates(SPOG)
@@ -480,7 +467,7 @@ class IncrementalReasoner:
             # asserted, and unconditional heads (they hold in any store).
             # dropDuplicates: a cone member that is BOTH a surviving premise
             # and an unconditional head appears in both arms, and nothing
-            # downstream dedups (stage_block and the journal keep rows as-is)
+            # downstream dedups (append and the journal keep rows as-is)
             p_rest = premises.join(_maybe_broadcast(x, x_rows), SPOG, "left_anti")
             reseed = cone.join(p_rest, SPOG, "left_semi")
             uncond = unconditional_heads_df(self.spark, self.lrules, "string")
@@ -489,16 +476,14 @@ class IncrementalReasoner:
                     uncond.join(cone, SPOG, "left_semi")
                 ).dropDuplicates(SPOG)
             # 3. subtract, then re-derive survivors
-            store_subtract(store, cone, cone_rows)
+            store.rebuild(subtract_plan(store, cone, cone_rows))
             readded, readd_rows, m["rederive_rounds"] = rederive(
                 self.spark, store, self.lrules, cone, cone_rows, reseed, dtype
             )
             m["cone"] = cone_rows
             m["readded"] = readd_rows
             if readd_rows:
-                blk = store.stage_block(readded)
-                n = blk.count()
-                store.add_block(blk, rows=n, src=readded)
+                store.append(readded)
             removed = cone.join(
                 _maybe_broadcast(readded, readd_rows), SPOG, "left_anti"
             ).localCheckpoint(eager=True)

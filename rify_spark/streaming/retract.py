@@ -11,7 +11,8 @@ over the existing FactStore + matcher machinery:
    premises through the rules against the pre-deletion store — every fact
    whose some derivation used a deleted fact lands in the cone ``D``
    (a superset of what must go).
-2. **Subtract** ``D`` from the store.
+2. **Subtract** ``D`` from the store: ``FactStore.rebuild`` over
+   :func:`subtract_plan`.
 3. **Re-derive**: a ``D``-member with an alternative derivation from the
    surviving facts comes back. This step is *goal-directed*: each rule
    head is unified against ``D`` first (``D`` is small — broadcast), so
@@ -154,14 +155,14 @@ def rederive(
     readded rows, rounds); both the per-round blocks and the remaining-cone
     frontier are eager localCheckpoints (bounded plans, no replay).
     """
-    readd_blocks = []
+    readd_parts = []
     readd_rows = 0
     d_rem = cone
     d_rem_rows = cone_rows
     r0 = reseed.localCheckpoint(eager=True)
     n0 = r0.count()
     if n0:
-        readd_blocks.append(r0)
+        readd_parts.append(r0)
         readd_rows += n0
         d_rem = d_rem.join(_maybe_broadcast(r0, n0), SPOG, "left_anti").localCheckpoint(
             eager=True
@@ -173,7 +174,7 @@ def rederive(
         if max_rounds is not None and rounds >= max_rounds:
             raise RuntimeError(f"rederive did not close in {max_rounds} rounds")
         rounds += 1
-        facts = _union_all([store.union()] + readd_blocks)
+        facts = _union_all([store.union()] + readd_parts)
         d_b = _maybe_broadcast(d_rem, d_rem_rows)
         plans = [p for r in cond for p in _rederive_rule(facts, r, d_b, dtype)]
         if not plans:
@@ -182,20 +183,22 @@ def rederive(
         n = new.count()
         if n == 0:
             break
-        readd_blocks.append(new)
+        readd_parts.append(new)
         readd_rows += n
         d_rem = d_rem.join(_maybe_broadcast(new, n), SPOG, "left_anti").localCheckpoint(
             eager=True
         )
         d_rem_rows = d_rem.count()
-    readded = _union_all(readd_blocks) if readd_blocks else cone.limit(0)
+    readded = _union_all(readd_parts) if readd_parts else cone.limit(0)
     return readded, readd_rows, rounds
 
 
 def subtract_plan(store: FactStore, cone: DataFrame, cone_rows: int) -> DataFrame:
-    """The UNEXECUTED fold scan ``store_subtract`` runs: the cached block
-    chain anti-joined against the (broadcast-when-small) cone. Exposed
-    separately so the physical plan is auditable before execution
+    """DRed step 2 as an UNEXECUTED plan for ``FactStore.rebuild``: the
+    cached block chain anti-joined against the (broadcast-when-small) cone.
+    The rebuild folds it into one block at the store's existing width, one
+    O(store) job — the price of re-establishing the block invariants every
+    insert batch relies on. The plan is auditable before execution
     (scripts/explain_audit.py): the store side must read its cached
     s-partitioned blocks with no Exchange; the cone side broadcasts below
     BROADCAST_MAX_ROWS, else exchanges once to the store's width."""
@@ -205,24 +208,3 @@ def subtract_plan(store: FactStore, cone: DataFrame, cone_rows: int) -> DataFram
         else cone.repartition(store.partitions, "s")
     )
     return store.union().join(anti_side, SPOG, "left_anti")
-
-
-def store_subtract(store: FactStore, cone: DataFrame, cone_rows: int) -> None:
-    """Remove the cone from the live FactStore in place: one fold of the
-    block chain through an anti-join and a fresh checkpoint, at the store's
-    existing width (the cone side broadcasts when small, otherwise
-    exchanges once to the store's s-partitioning). O(store) — the price of
-    re-establishing the block invariants every insert batch relies on."""
-    if store.total_rows == 0 or cone_rows == 0:
-        return
-    old = list(store.blocks)
-    flat = subtract_plan(store, cone, cone_rows).localCheckpoint(eager=False)
-    nb = store._mk_block(flat)
-    n = nb.count()  # fills the cache (and the lazy checkpoint) in one job
-    store.blocks = [nb]
-    store.block_rows = [n]
-    store.total_rows = n
-    store.last_src = flat
-    store.just_compacted = True
-    for b in old:
-        b.unpersist()

@@ -52,7 +52,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .matcher import SPOG, term_lit
+from .matcher import term_lit
 from .session import floor_regime, scoped_conf, shuffle_width
 
 PAIR = ["s", "o", "g"]
@@ -189,13 +189,14 @@ def smart_tc_fixpoint(
             spark,
             cfg.checkpoint_dir,
             fingerprint=_tc_fingerprint(rec, dtype.simpleString()),
+            every=cfg.store_compact_every,
+            retain_history=cfg.checkpoint_retain_history,
         )
         if cfg.checkpoint_dir
         else None
     )
     metrics: list = []
     tracked_deltas: list = []  # post-seed novel blocks == derived facts
-    last_base = 0  # iteration of the newest full-facts parquet base
 
     resumed = None
     if ckpt and cfg.resume:
@@ -213,7 +214,6 @@ def smart_tc_fixpoint(
         # storage
         d = spark.read.parquet(ckpt.extra_path(it, "d.parquet"))
         d_rows = meta["d_rows"] if "d_rows" in meta else d.count()
-        last_base = meta.get("base_iter", it)
         metrics.append(
             {
                 "iteration": it,
@@ -271,21 +271,11 @@ def smart_tc_fixpoint(
             else:
                 r = store.union().filter(F.col("p") == p_lit).select(*PAIR)
                 cand = _compose(d, r) if prepend else _compose(r, d)
-            cand = (
-                cand.select(
-                    F.col("s"), p_lit.alias("p"), F.col("o"), F.col("g")
-                )
-                # ONE explicit exchange per round, mirroring the main loop: the
-                # s-hash satisfies the SPOG dedup clustering and co-partitions
-                # the anti with every store block
-                .repartition(store.partitions, "s")
-                .dropDuplicates(SPOG)
+            novel = store.novel(
+                cand.select(F.col("s"), p_lit.alias("p"), F.col("o"), F.col("g"))
             )
-            novel = store.anti(cand).localCheckpoint(eager=False)
-            block = store.stage_block(novel)
-            delta_rows = block.count()
+            delta_rows, _ = store.append(novel)
             if delta_rows == 0:
-                block.unpersist()
                 metrics.append(
                     {
                         "iteration": it,
@@ -302,7 +292,6 @@ def smart_tc_fixpoint(
                     # to rounds that composed. Fall through to round 2.
                     continue
                 break
-            store.add_block(block, rows=delta_rows, src=novel)
             if track_deltas:
                 tracked_deltas.append(novel)
             facts_rows += delta_rows
@@ -347,9 +336,6 @@ def smart_tc_fixpoint(
                 # wavefront round it+1 consumes (round 1 never squares, so its
                 # saved D = B^1, what round 2 needs). d.parquet lands before
                 # save_iteration — meta.json stays the commit marker.
-                write_base = ckpt.base_due(it, last_base, cfg.store_compact_every)
-                if write_base:
-                    last_base = it
                 d.write.mode("overwrite").parquet(ckpt.extra_path(it, "d.parquet"))
                 # re-point D at the parquet just written: bounds the D lineage
                 # plan (localCheckpoint chains of compose∘compose) and drops
@@ -361,17 +347,14 @@ def smart_tc_fixpoint(
                 ckpt.save_iteration(
                     it,
                     novel,
-                    facts=store.union() if write_base else None,
+                    store.union(),
                     extra_meta={
                         "facts_rows": facts_rows,
                         "delta_rows": delta_rows,
                         "d_rows": d_rows,
-                        "base_iter": last_base,
                         "strategy": "smart_tc",
                     },
                 )
-                if write_base and not cfg.checkpoint_retain_history:
-                    ckpt.prune(last_base)
             if d_rows is not None and d_rows == 0:
                 break
 

@@ -117,10 +117,8 @@ def main() -> None:
         base = quads.tpch_quads(spark, SF_DIR)
         store.seed(base)
         for i in range(2):
-            blk = base.limit(500 + i).localCheckpoint(eager=True)
-            staged = store.stage_block(blk)
-            staged.count()  # fill the block cache (the fused count job's role)
-            store.add_block(staged, rows=500 + i, src=blk)
+            # append's count job fills the block cache
+            store.append(base.limit(500 + i).localCheckpoint(eager=True))
         cand = quads.tree_edges(spark, SF_DIR)
         anti = store.anti(cand)
         top = anti._jdf.queryExecution().executedPlan().toString()
@@ -220,10 +218,11 @@ def main() -> None:
         )
     )
 
-    # 10. retraction (DRed, streaming/retract.py): the subtract fold must
-    # read the cached s-partitioned blocks with NO exchange and anti-join a
-    # BROADCAST cone; the goal-directed re-derive probes must start from
-    # the broadcast head-binding side and stay JVM-only.
+    # 10. retraction (DRed, streaming/retract.py): the subtract fold
+    # (FactStore.rebuild over subtract_plan) must read the cached
+    # s-partitioned blocks with NO exchange and anti-join a BROADCAST cone;
+    # the goal-directed re-derive probes must start from the broadcast
+    # head-binding side and stay JVM-only.
     from rify_spark.infer import FactStore, SPOG
     from rify_spark.rules import Bound as RB, Rule, Unbound as RU, lower_rule
     from rify_spark.streaming.retract import _rederive_rule, subtract_plan

@@ -8,14 +8,15 @@ same methodology as TAIL_CONTROL.json (weak-scaling ceiling) and
 STREAM_SCAN_CONTROL.json (IVM scan floor).
 
 Per mirrored "retract op" against a cached, s-partitioned, sorted store of
-STORE_ROWS rows (the FactStore block layout, infer.py:119-140):
+STORE_ROWS rows (the FactStore block layout):
 
   1. over-delete rounds (3x): broadcast the cone-key set, left-semi probe
      the store, dropDuplicates the cone-sized result, eager localCheckpoint
      + count — the shape of the delta-seeded bindings rounds.
   2. subtract (1x): store -> left_anti(broadcast cone) -> lazy
      localCheckpoint -> repartition(width, "s") -> sortWithinPartitions ->
-     persist -> count — store_subtract's exact fold (retract.py:295-323).
+     persist -> count — the exact fold of FactStore.rebuild over
+     retract.subtract_plan.
   3. re-derive rounds (2x): broadcast cone inner-joined to the store on s,
      project + dropDuplicates + eager localCheckpoint + count — the
      goal-directed probe shape.
@@ -110,7 +111,7 @@ def leg() -> None:
                 .localCheckpoint(eager=True)
             )
             probe.count()
-        # 2. the subtract fold (store_subtract's plan, retract.py:295-323)
+        # 2. the subtract fold (FactStore.rebuild over retract.subtract_plan)
         flat = (
             store.join(F.broadcast(cone), spog, "left_anti")
             .localCheckpoint(eager=False)

@@ -1,7 +1,7 @@
 """Fault injection: every loop restores what it changed on the exception
 path too.
 
-Fixpoint loops: ``FactStore.stage_block`` is made to raise on its second
+Fixpoint loops: ``FactStore.append`` is made to raise on its second
 call, i.e. in the middle of round 2, after the round's conf regime
 (codegen, AQE, width, constraint propagation) has been applied. The
 original exception must propagate and each conf must read exactly as
@@ -45,23 +45,23 @@ class InjectedFault(RuntimeError):
 
 
 @pytest.fixture
-def fail_second_stage_block(monkeypatch):
-    real = FactStore.stage_block
+def fail_second_append(monkeypatch):
+    real = FactStore.append
     calls = []
 
-    def stage_block(self, df):
+    def append(self, src, with_preds=False):
         calls.append(1)
         if len(calls) == 2:
-            raise InjectedFault("injected: second stage_block")
-        return real(self, df)
+            raise InjectedFault("injected: second append")
+        return real(self, src, with_preds)
 
-    monkeypatch.setattr(FactStore, "stage_block", stage_block)
+    monkeypatch.setattr(FactStore, "append", append)
     return calls
 
 
 def _generic(spark):
     # symmetry over one fact: round 1 derives (y p x), round 2 re-derives
-    # (x p y) and stages an empty block — the injected fault fires there
+    # (x p y) and appends an empty block — the injected fault fires there
     facts = spark.createDataFrame(
         [("x", "p", "y", "g")], "s string, p string, o string, g string"
     )
@@ -100,7 +100,7 @@ def _pipeline(spark):
 @pytest.mark.parametrize(
     "run", [_generic, _smart_tc, _pipeline], ids=["fixpoint", "smart_tc", "pipeline"]
 )
-def test_confs_restored_when_round_raises(spark, fail_second_stage_block, run, width):
+def test_confs_restored_when_round_raises(spark, fail_second_append, run, width):
     saved = {k: spark.conf.get(k, None) for k in KEYS}
     try:
         spark.conf.set("spark.sql.codegen.wholeStage", "true")
@@ -112,7 +112,7 @@ def test_confs_restored_when_round_raises(spark, fail_second_stage_block, run, w
         before = {k: spark.conf.get(k, None) for k in KEYS}
         with pytest.raises(InjectedFault):
             run(spark)
-        assert len(fail_second_stage_block) == 2
+        assert len(fail_second_append) == 2
         assert {k: spark.conf.get(k, None) for k in KEYS} == before
     finally:
         for k, v in saved.items():
@@ -127,7 +127,7 @@ def test_confs_restored_when_round_raises(spark, fail_second_stage_block, run, w
     ids=["fixpoint", "smart_tc"],
 )
 def test_checkpoint_resume_after_round_fault(
-    spark, tmp_path, monkeypatch, fail_second_stage_block, rules, smart
+    spark, tmp_path, monkeypatch, fail_second_append, rules, smart
 ):
     """A checkpointed run that raises in round 2 leaves round 1 committed;
     a resume without the fault continues from it to the exact closure."""

@@ -536,9 +536,7 @@ def test_store_growth_triggers_on_rows_not_only_block_count(spark):
     assert w0 is not None
 
     big = spark.range(100, 1100).selectExpr(*quad).localCheckpoint()
-    blk = store.stage_block(big)
-    n = blk.count()
-    store.add_block(blk, rows=n, src=big)
+    assert store.append(big) == (1000, None)
     assert store.total_rows == 1008
     assert store.just_compacted, "row-growth compaction did not fire"
     assert store.partitions > w0, f"width did not grow: {w0} -> {store.partitions}"
@@ -619,9 +617,7 @@ def test_tiered_compaction_keeps_base_and_exact_union(spark):
     lo = 10_000
     for _ in range(6):
         src = spark.range(lo, lo + 50).selectExpr(*quad).localCheckpoint()
-        blk = store.stage_block(src)
-        n = blk.count()
-        store.add_block(blk, rows=n, src=src)
+        assert store.append(src) == (50, None)
         lo += 50
         assert len(store.blocks) <= store.compact_every + 1
         assert store.blocks[0] is base, "tiered merge must not rewrite the base"
@@ -629,3 +625,57 @@ def test_tiered_compaction_keeps_base_and_exact_union(spark):
     assert store.total_rows == 10_300
     assert store.union().count() == 10_300
     assert store.union_except_last().count() == 10_250
+
+
+def test_novel_then_append_is_one_spark_job(spark):
+    """``store.append(store.novel(cand))`` — candidate exchange, dedup,
+    anti-join, lazy checkpoint, block cache fill and count — runs as ONE
+    Spark job, and appends exactly the candidates the store lacked. AQE
+    and codegen are off, and so are broadcast joins: a broadcast build of
+    the store side is a job of its own."""
+    import time
+
+    from rify_spark.infer import FactStore
+    from rify_spark.session import scoped_conf
+
+    quad = ["cast(id as string) as s", "'p' as p", "'o' as o", "'g' as g"]
+    with scoped_conf(spark) as set_conf:
+        set_conf("spark.sql.adaptive.enabled", False)
+        set_conf("spark.sql.codegen.wholeStage", False)
+        set_conf("spark.sql.autoBroadcastJoinThreshold", -1)
+        store = FactStore(spark)
+        store.seed(spark.range(100).selectExpr(*quad))
+        store.union().count()  # fill the seed block's cache outside the probe
+        # 50 old + 50 new quads, each twice
+        cand = spark.range(50, 150).union(spark.range(50, 150)).selectExpr(*quad)
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        rows, preds = store.append(store.novel(cand))
+        time.sleep(1)  # job events reach the status store asynchronously
+        jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert (rows, preds) == (50, None)
+    assert len(jobs) == 1, sorted(jobs)
+    assert store.total_rows == 150 and store.union().count() == 150
+
+
+def test_seed_and_release_unpersist_replaced_blocks(spark):
+    """Re-seeding a store that holds blocks, and release(), leave every
+    replaced block unpersisted."""
+    from pyspark import StorageLevel
+
+    from rify_spark.infer import FactStore
+
+    quad = ["cast(id as string) as s", "'p' as p", "'o' as o", "'g' as g"]
+    store = FactStore(spark)
+    store.seed(spark.range(10).selectExpr(*quad))
+    store.append(spark.range(10, 20).selectExpr(*quad).localCheckpoint())
+    old = list(store.blocks)
+    assert len(old) == 2
+    assert all(b.storageLevel != StorageLevel.NONE for b in old)
+    store.seed(spark.range(5).selectExpr(*quad))
+    assert all(b.storageLevel == StorageLevel.NONE for b in old)
+    assert store.total_rows == 5 and len(store.blocks) == 1
+    cur = list(store.blocks)
+    store.release()
+    assert all(b.storageLevel == StorageLevel.NONE for b in cur)
+    assert store.blocks == [] and store.total_rows == 0

@@ -4,6 +4,7 @@ closed fact store via foreachBatch + semi-naive delta fixpoints."""
 import os
 
 import pytest
+from pyspark import StorageLevel
 
 from rify_spark.rules import Bound as B, Rule, Unbound as U
 from rify_spark.streaming import IncrementalReasoner
@@ -230,9 +231,21 @@ def test_failed_batch_rolls_back_live_store(spark, tmp_path):
 
     r._append_parquet = failing_append
     batch2 = spark.createDataFrame([src_rows[1]], SCHEMA)
+    live = r._store
+    held = list(live.blocks)
+    real_release = live.release
+
+    def release():
+        held.extend(live.blocks)
+        real_release()
+
+    live.release = release
     with pytest.raises(RuntimeError, match="injected"):
         r.process_batch(batch2, 1)
     assert r._store is None  # rolled back
+    # ...and every block the dropped store held reads unpersisted
+    assert len(held) > 1 and live.blocks == []
+    assert all(b.storageLevel == StorageLevel.NONE for b in held)
     assert _store_set(r) == committed  # durable store untouched
 
     # replay of the SAME batch on the SAME reasoner must fully process it
