@@ -100,7 +100,7 @@ def _q_prove_lineage(spark, sf_dir):
             [[U("a"), B("ancestor"), U("c"), U("g")]],
         ),
     ]
-    cfg = InferConfig(encode_terms=False)
+    cfg = InferConfig()
     lrules = [lower_rule(r, i, lambda t: t) for i, r in enumerate(rules)]
     prem = edges.select("s", "p", "o", "g")
     prem_dedup = prem.dropDuplicates(["s", "p", "o", "g"])

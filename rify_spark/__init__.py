@@ -3,9 +3,10 @@
 A from-scratch Spark reimplementation of the capabilities of the reference
 engine (docknetwork/rify: forward-chaining conjunctive-rule inference over
 RDF quads with proof generation and validation), re-architected as
-DataFrame programs: dictionary hash-encoding, rule-compiled join chains,
-semi-naive delta fixpoints with checkpointed iterations, and driver-side
-proof replay. See SURVEY.md at the repo root for the full mapping.
+DataFrame programs over the string terms (opt-in dictionary
+hash-encoding), rule-compiled join chains, semi-naive delta fixpoints with
+checkpointed iterations, and driver-side proof replay. See SURVEY.md at the
+repo root for the full mapping.
 
 Public API (mirrors the reference's three entry points, src/lib.rs:14-17):
 

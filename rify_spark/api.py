@@ -9,14 +9,17 @@ Front half shared by all entry points, mirroring the reference lifecycle
      non-string terms are mapped through a driver-side bijection — only
      meaningful for list-sized inputs, which is the only place non-string
      terms can occur);
-  2. optional dictionary encoding: strings -> 128-bit (h, l) ids
-     (dictionary.py);
+  2. opt-in dictionary encoding (``InferConfig(encode_terms=True)``):
+     strings -> 128-bit (h, l) ids (dictionary.py). By default the engine
+     seeds, joins and derives on the strings themselves — Spark joins them
+     natively, which is why rify's ``Translator`` (src/translator.rs:14-40)
+     has no counterpart on the default path;
   3. rule lowering (rules.py: lower_rule);
   4. fixpoint (infer.py / prove.py);
-  5. decode back.
+  5. decode back: the codec, and the dictionary when step 2 ran.
 
-DataFrame-level entry points (``infer_df``) skip steps 1 and 5 and are what
-the KG-construction pipeline uses.
+DataFrame-level entry points (``infer_df``) skip step 1 and the codec half
+of step 5 and are what the KG-construction pipeline uses.
 """
 
 from __future__ import annotations
@@ -180,7 +183,10 @@ def infer_df(
     """DataFrame-level infer over string-term quads (columns s,p,o,g).
 
     Returns (derived_df in string space, FixpointResult). This is the
-    KG-pipeline entry point: no collect, no codec.
+    KG-pipeline entry point: no collect, no codec. With
+    ``encode_terms=True`` the fixpoint runs on hash ids, the dictionary's
+    collision audit runs in a background thread, and the derived quads are
+    decoded back to strings; by default none of that runs.
     """
     cfg = config or InferConfig()
     bound_strs = list(dict.fromkeys(t for r in rules for t in r.bound_terms()))

@@ -19,6 +19,22 @@ n^2 / 2^129 ≈ 1.5e-15: collisions are extinct at any realistic corpus size.
 Bijectivity is still guarded by :func:`audit_collisions` — the salted
 hash-id-space collision audit, a cheap groupBy alongside dictionary
 materialization.
+
+Opt-in (``InferConfig(encode_terms=True)``). rify needs its Translator
+because its engine only joins ``usize`` ids; Spark joins strings natively,
+so the default fixpoint seeds, joins and derives on the string terms and
+never calls this module. Measured at 4 cores (NOTES.md "String terms by
+default") on perfbench's deep_closure (a 30,000-node tree closure), the
+encoding cost 2.0 s of an 11.3 s call and 9 of its 26 Spark jobs: the
+dictionary aggregate and its audit competing with the seed for the cores,
+``struct<h,l>`` join and sort keys (2.8x the shuffle bytes of the short
+node strings), and the decode broadcasts after the fixpoint. It bought
+nothing on a 300,000-node tree (4.7M derived quads; median 52.9 s encoded,
+51.9 s on strings, 4 calls each) nor on a 100,000-node tree whose terms are
+160-character IRIs (1.4M derived quads; median 16.9 s encoded, 14.9 s on
+strings, 8 calls each). The ids remain as the counterpart of the
+reference's Translator, which the o15 proof-raise gate exercises; no
+speedup is claimed for them.
 """
 
 from __future__ import annotations

@@ -38,9 +38,11 @@ Scale design:
   * the delta side of every join is broadcast while it fits
     (`broadcast_delta_max_rows`), turning the hot inner joins into
     shuffle-free broadcast-hash joins against the large fact set;
-  * AQE (incl. skew-join splitting) is expected on; hot-predicate skew is
-    additionally mitigated by the dictionary's hash ids spreading the key
-    space, and per-predicate stats feed the static join order.
+  * AQE (incl. skew-join splitting) is expected on; hot s/o values are
+    salted explicitly on shuffle-joined iterations (skew.py), and
+    per-predicate stats feed the static join order. Term encoding does not
+    change skew: string keys hash-partition like the dictionary's ids, so
+    a hot term lands on one partition either way.
 
 Rules are never rewritten. The one program with its own evaluation is the
 pure transitive closure (copy rule plus one linear or nonlinear
@@ -404,7 +406,13 @@ class FactStore:
 
 @dataclass
 class InferConfig:
-    encode_terms: bool = True
+    # run the fixpoint on 128-bit hash ids (dictionary.py), the counterpart
+    # of rify's Translator, instead of the string terms: a dictionary build,
+    # a collision audit and a decode join per call. The o15 proof_raise gate
+    # opts in to check the id -> term raise; no speedup is claimed for it —
+    # strings were faster on every corpus measured, 160-character IRIs
+    # included (NOTES.md, "String terms by default").
+    encode_terms: bool = False
     # caller guarantees the input quads are already SPOG-unique (e.g. the
     # KG pipeline's canonical stage ends in dropDuplicates): skips the
     # seed-time dedup shuffle
@@ -722,214 +730,220 @@ def fixpoint(
     arguments: Optional[DataFrame] = None
     it = 0
     store = reuse_store or FactStore(spark, compact_every=cfg.store_compact_every)
+    try:
+        # prove-mode lineage accumulates as a list of checkpoint-backed blocks
+        # (iteration-0 seed + one localCheckpoint per iteration): the plan of
+        # the final union is a flat N-leaf scan, so no periodic full-table
+        # re-checkpoint is needed, and parquet persistence is per-block O(delta)
+        arg_blocks: list = []
 
-    # prove-mode lineage accumulates as a list of checkpoint-backed blocks
-    # (iteration-0 seed + one localCheckpoint per iteration): the plan of
-    # the final union is a flat N-leaf scan, so no periodic full-table
-    # re-checkpoint is needed, and parquet persistence is per-block O(delta)
-    arg_blocks: list = []
-
-    resumed = None
-    if ckpt and cfg.resume:
-        resumed = ckpt.latest()
-    if resumed is not None:
-        it, facts_df, delta_df, arguments, meta = resumed
-        seed_lc, facts_rows = store.seed(facts_df, rows_hint=meta.get("facts_rows"))
-        delta = delta_df.localCheckpoint(eager=True)
-        delta_rows = meta["delta_rows"] if "delta_rows" in meta else delta.count()
-        # F_old for the next round (non-redundant decomposition)
-        facts_old = seed_lc.join(delta, SPOG, "left_anti").localCheckpoint(
-            eager=True
-        )
-        metrics.append({"iteration": it, "resumed": True, "delta_rows": delta_rows})
-    elif reuse_store is not None:
-        seed_lc = store.union()
-        facts_rows = store.total_rows
-        delta = store.last_src
-        delta_rows = store.block_rows[-1]
-        # the delta is the store's newest block, so the semi-naive F_old is
-        # exactly the cached block prefix — no O(store) anti-join/checkpoint
-        # per micro-batch
-        facts_old = store.union_except_last()
-    else:
-        seed_lc, facts_rows = store.seed(facts0)
-        delta = seed_lc
-        delta_rows = facts_rows
-        facts_old = seed_lc.limit(0)
-        if lineage:
-            # iteration-0 arguments (unconditional-rule heads) come from the
-            # caller; see prove.py.
-            arguments = (
-                initial_arguments
-                if initial_arguments is not None
-                else spark.createDataFrame(
-                    [],
-                    f"s {dtype.simpleString()}, p {dtype.simpleString()}, "
-                    f"o {dtype.simpleString()}, g {dtype.simpleString()}, "
-                    f"rule_index long, inst array<{dtype.simpleString()}>, iteration long",
-                )
+        resumed = None
+        if ckpt and cfg.resume:
+            resumed = ckpt.latest()
+        if resumed is not None:
+            it, facts_df, delta_df, arguments, meta = resumed
+            seed_lc, facts_rows = store.seed(facts_df, rows_hint=meta.get("facts_rows"))
+            delta = delta_df.localCheckpoint(eager=True)
+            delta_rows = meta["delta_rows"] if "delta_rows" in meta else delta.count()
+            # F_old for the next round (non-redundant decomposition)
+            facts_old = seed_lc.join(delta, SPOG, "left_anti").localCheckpoint(
+                eager=True
             )
-    if arguments is not None:
-        arg_blocks.append(arguments)
-
-    tracked_deltas: list = []
-    broadcast_cutoff = _broadcast_cutoff_rows(spark, cfg)
-    goals_n = goals.count() if goals is not None else 0
-
-    def goals_met() -> bool:
-        if goals is None or goals_n == 0:
-            return goals is not None
-        return goals.join(store.union(), SPOG, "left_anti").count() == 0
-
-    stats, hot_lits = (
-        _seed_scan(seed_lc, facts_rows, cfg) if cond_rules else (None, [])
-    )
-    # predicate set of the CURRENT delta (drives seed-plan pruning),
-    # maintained for free by each iteration's FactStore.append. When the
-    # first delta IS the seed, the join-order stats already hold its
-    # predicate set — reuse instead of paying another scan.
-    if not cond_rules:
-        delta_preds = None
-    elif delta is seed_lc and stats is not None:
-        delta_preds = {_norm_term(p) for p in stats}
-    else:
-        delta_preds = FactStore._count_and_preds(delta)[1]
-
-    with scoped_conf(spark) as set_conf:
-        # constraint propagation walks every operator's expression set at
-        # optimization time — a measurable slice of the per-iteration driver
-        # floor on the fixpoint's iteration-deep join/union plans (profiled
-        # ~0.5 s/iteration on the 100k-file pipeline) and useless here: quad
-        # columns are non-null by construction and every join is an inner
-        # equi-join. Scoped to THIS fixpoint run because the global off was
-        # measured to cost the shallow ops queries ~10% (knn_lsh A/B,
-        # AB_KNN_LSH.json) — they keep the Spark default.
-        set_conf("spark.sql.constraintPropagation.enabled", False)
-        session_width = shuffle_width(spark)
-        while delta_rows > 0 and cond_rules:
-            if goals is not None and goals_met():
-                break
-            if cfg.max_iterations is not None and it >= cfg.max_iterations:
-                break
-            it += 1
-            t0 = time.time()
-            # codegen, AQE and shuffle width keyed to the live delta size
-            floor_regime(set_conf, delta_rows, session_width)
-
-            broadcast_delta = delta_rows <= broadcast_cutoff
-            delta_src = F.broadcast(delta) if broadcast_delta else delta
-            # broadcast-hash joins stream the big side, so hot keys cost
-            # nothing extra; explicit salting applies only to shuffle-joined
-            # iterations
-            hot = hot_lits if (hot_lits and not broadcast_delta) else None
-            facts = store.union()
-
-            plans = []
-            for r in cond_rules:
-                extra = lineage_cols(r, dtype) if lineage else ()
-                for i in range(len(r.body)):
-                    if not _seed_plan_live(r.body[i], delta_preds):
-                        continue
-                    b = bindings(
-                        facts,
-                        r,
-                        delta=delta_src,
-                        seed_pos=i,
-                        stats=stats,
-                        facts_old=facts_old,
-                        hot_values=hot,
-                    )
-                    plans.append(project_heads(b, r, dtype, extra))
-            if not plans:
-                # every seeded plan is predicate-dead: nothing in the delta
-                # can fire any rule, so the fixpoint is reached
-                metrics.append(
-                    {"iteration": it, "delta_rows": 0, "plans_built": 0,
-                     "wall_s": round(time.time() - t0, 4)}
-                )
-                break
-
-            if lineage:
-                # the one s-exchange of FactStore.novel, with the first-wins
-                # window in place of the dedup
-                cand = _union_all(plans).repartition(store.partitions, "s")
-                w = Window.partitionBy(*SPOG).orderBy("rule_index", "inst")
-                picked = (
-                    store.anti(cand)
-                    .withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
-                    .withColumn("iteration", F.lit(it).cast("long"))
-                )
-                new_full = picked.localCheckpoint(eager=False)
-                new = new_full.select(*SPOG)
-            else:
-                new_full = None
-                new = store.novel(_union_all(plans))
-            # ONE Spark job for the whole candidate->anti->checkpoint->block
-            # pipeline, which also yields the next prune set
-            delta_rows, delta_preds = store.append(new, with_preds=True)
-            if delta_rows == 0:
-                metrics.append(
-                    {"iteration": it, "delta_rows": 0, "wall_s": round(time.time() - t0, 4)}
-                )
-                break
-
-            if lineage:
-                arg_blocks.append(new_full)
-                arguments = _union_all(arg_blocks)
-            if track_deltas:
-                tracked_deltas.append(new)
+            metrics.append({"iteration": it, "resumed": True, "delta_rows": delta_rows})
+        elif reuse_store is not None:
+            seed_lc = store.union()
+            facts_rows = store.total_rows
+            delta = store.last_src
+            delta_rows = store.block_rows[-1]
+            # the delta is the store's newest block, so the semi-naive F_old is
+            # exactly the cached block prefix — no O(store) anti-join/checkpoint
+            # per micro-batch
             facts_old = store.union_except_last()
-            facts_rows += delta_rows
-            delta = new
-            if store.just_compacted:
-                # emergent hot keys: re-detect on the compacted store (sampled —
-                # O(HOT_SCAN_SAMPLE_ROWS), amortized 1/store_compact_every)
-                hot_lits = _seed_scan(store.union(), facts_rows, cfg, hot_only=True)[1]
-            metrics.append({
-                "iteration": it,
-                "delta_rows": delta_rows,
-                "facts_rows": facts_rows,
-                "plans_built": len(plans),
-                "wall_s": round(time.time() - t0, 4),
-                # the delta lives in the store as an s-partitioned block at the
-                # store width — report that instead of new.rdd.getNumPartitions(),
-                # whose DataFrame->RDD conversion compiles the full plan and cost
-                # a measurable slice of every iteration (profiled ~0.5-1.5 s/iter)
-                "delta_partitions": store.partitions,
-                "store_blocks": len(store.blocks),
-                "store_partitions": store.partitions,
-                "compacted": store.just_compacted,
-            })
-            if ckpt:
-                wrote_base = ckpt.save_iteration(
-                    it,
-                    delta,
-                    store.union(),
-                    arguments=arguments,
-                    arguments_delta=new_full,
-                    extra_meta={"facts_rows": facts_rows, "delta_rows": delta_rows},
+        else:
+            seed_lc, facts_rows = store.seed(facts0)
+            delta = seed_lc
+            delta_rows = facts_rows
+            facts_old = seed_lc.limit(0)
+            if lineage:
+                # iteration-0 arguments (unconditional-rule heads) come from the
+                # caller; see prove.py.
+                arguments = (
+                    initial_arguments
+                    if initial_arguments is not None
+                    else spark.createDataFrame(
+                        [],
+                        f"s {dtype.simpleString()}, p {dtype.simpleString()}, "
+                        f"o {dtype.simpleString()}, g {dtype.simpleString()}, "
+                        f"rule_index long, inst array<{dtype.simpleString()}>, iteration long",
+                    )
                 )
-                if lineage and wrote_base:
-                    # re-point the lineage union at the base parquet just
-                    # written: bounds the union plan width to base + tail
-                    # blocks AND drops any dependency a RESUMED run carried
-                    # on older checkpoint files (the save just pruned them) —
-                    # without this, the next base write or a post-run
-                    # res.arguments consumer would re-read pruned parquet
-                    arguments = spark.read.parquet(ckpt.arguments_path(it))
-                    arg_blocks[:] = [arguments]
+        if arguments is not None:
+            arg_blocks.append(arguments)
 
-    return FixpointResult(
-        facts=store.union(),
-        arguments=arguments,
-        metrics=metrics,
-        iterations=it,
-        facts_rows=facts_rows,
-        delta_dfs=tracked_deltas,
-        resumed=resumed is not None,
-    )
+        tracked_deltas: list = []
+        broadcast_cutoff = _broadcast_cutoff_rows(spark, cfg)
+        goals_n = goals.count() if goals is not None else 0
+
+        def goals_met() -> bool:
+            if goals is None or goals_n == 0:
+                return goals is not None
+            return goals.join(store.union(), SPOG, "left_anti").count() == 0
+
+        stats, hot_lits = (
+            _seed_scan(seed_lc, facts_rows, cfg) if cond_rules else (None, [])
+        )
+        # predicate set of the CURRENT delta (drives seed-plan pruning),
+        # maintained for free by each iteration's FactStore.append. When the
+        # first delta IS the seed, the join-order stats already hold its
+        # predicate set — reuse instead of paying another scan.
+        if not cond_rules:
+            delta_preds = None
+        elif delta is seed_lc and stats is not None:
+            delta_preds = {_norm_term(p) for p in stats}
+        else:
+            delta_preds = FactStore._count_and_preds(delta)[1]
+
+        with scoped_conf(spark) as set_conf:
+            # constraint propagation walks every operator's expression set at
+            # optimization time — a measurable slice of the per-iteration driver
+            # floor on the fixpoint's iteration-deep join/union plans (profiled
+            # ~0.5 s/iteration on the 100k-file pipeline) and useless here: quad
+            # columns are non-null by construction and every join is an inner
+            # equi-join. Scoped to THIS fixpoint run because the global off was
+            # measured to cost the shallow ops queries ~10% (knn_lsh A/B,
+            # AB_KNN_LSH.json) — they keep the Spark default.
+            set_conf("spark.sql.constraintPropagation.enabled", False)
+            session_width = shuffle_width(spark)
+            while delta_rows > 0 and cond_rules:
+                if goals is not None and goals_met():
+                    break
+                if cfg.max_iterations is not None and it >= cfg.max_iterations:
+                    break
+                it += 1
+                t0 = time.time()
+                # codegen, AQE and shuffle width keyed to the live delta size
+                floor_regime(set_conf, delta_rows, session_width)
+
+                broadcast_delta = delta_rows <= broadcast_cutoff
+                delta_src = F.broadcast(delta) if broadcast_delta else delta
+                # broadcast-hash joins stream the big side, so hot keys cost
+                # nothing extra; explicit salting applies only to shuffle-joined
+                # iterations
+                hot = hot_lits if (hot_lits and not broadcast_delta) else None
+                facts = store.union()
+
+                plans = []
+                for r in cond_rules:
+                    extra = lineage_cols(r, dtype) if lineage else ()
+                    for i in range(len(r.body)):
+                        if not _seed_plan_live(r.body[i], delta_preds):
+                            continue
+                        b = bindings(
+                            facts,
+                            r,
+                            delta=delta_src,
+                            seed_pos=i,
+                            stats=stats,
+                            facts_old=facts_old,
+                            hot_values=hot,
+                        )
+                        plans.append(project_heads(b, r, dtype, extra))
+                if not plans:
+                    # every seeded plan is predicate-dead: nothing in the delta
+                    # can fire any rule, so the fixpoint is reached
+                    metrics.append(
+                        {"iteration": it, "delta_rows": 0, "plans_built": 0,
+                         "wall_s": round(time.time() - t0, 4)}
+                    )
+                    break
+
+                if lineage:
+                    # the one s-exchange of FactStore.novel, with the first-wins
+                    # window in place of the dedup
+                    cand = _union_all(plans).repartition(store.partitions, "s")
+                    w = Window.partitionBy(*SPOG).orderBy("rule_index", "inst")
+                    picked = (
+                        store.anti(cand)
+                        .withColumn("__rn", F.row_number().over(w))
+                        .filter(F.col("__rn") == 1)
+                        .drop("__rn")
+                        .withColumn("iteration", F.lit(it).cast("long"))
+                    )
+                    new_full = picked.localCheckpoint(eager=False)
+                    new = new_full.select(*SPOG)
+                else:
+                    new_full = None
+                    new = store.novel(_union_all(plans))
+                # ONE Spark job for the whole candidate->anti->checkpoint->block
+                # pipeline, which also yields the next prune set
+                delta_rows, delta_preds = store.append(new, with_preds=True)
+                if delta_rows == 0:
+                    metrics.append(
+                        {"iteration": it, "delta_rows": 0, "wall_s": round(time.time() - t0, 4)}
+                    )
+                    break
+
+                if lineage:
+                    arg_blocks.append(new_full)
+                    arguments = _union_all(arg_blocks)
+                if track_deltas:
+                    tracked_deltas.append(new)
+                facts_old = store.union_except_last()
+                facts_rows += delta_rows
+                delta = new
+                if store.just_compacted:
+                    # emergent hot keys: re-detect on the compacted store (sampled —
+                    # O(HOT_SCAN_SAMPLE_ROWS), amortized 1/store_compact_every)
+                    hot_lits = _seed_scan(store.union(), facts_rows, cfg, hot_only=True)[1]
+                metrics.append({
+                    "iteration": it,
+                    "delta_rows": delta_rows,
+                    "facts_rows": facts_rows,
+                    "plans_built": len(plans),
+                    "wall_s": round(time.time() - t0, 4),
+                    # the delta lives in the store as an s-partitioned block at the
+                    # store width — report that instead of new.rdd.getNumPartitions(),
+                    # whose DataFrame->RDD conversion compiles the full plan and cost
+                    # a measurable slice of every iteration (profiled ~0.5-1.5 s/iter)
+                    "delta_partitions": store.partitions,
+                    "store_blocks": len(store.blocks),
+                    "store_partitions": store.partitions,
+                    "compacted": store.just_compacted,
+                })
+                if ckpt:
+                    wrote_base = ckpt.save_iteration(
+                        it,
+                        delta,
+                        store.union(),
+                        arguments=arguments,
+                        arguments_delta=new_full,
+                        extra_meta={"facts_rows": facts_rows, "delta_rows": delta_rows},
+                    )
+                    if lineage and wrote_base:
+                        # re-point the lineage union at the base parquet just
+                        # written: bounds the union plan width to base + tail
+                        # blocks AND drops any dependency a RESUMED run carried
+                        # on older checkpoint files (the save just pruned them) —
+                        # without this, the next base write or a post-run
+                        # res.arguments consumer would re-read pruned parquet
+                        arguments = spark.read.parquet(ckpt.arguments_path(it))
+                        arg_blocks[:] = [arguments]
+
+        return FixpointResult(
+            facts=store.union(),
+            arguments=arguments,
+            metrics=metrics,
+            iterations=it,
+            facts_rows=facts_rows,
+            delta_dfs=tracked_deltas,
+            resumed=resumed is not None,
+        )
+    except BaseException:
+        # a store this call created must not outlive a failed round with its
+        # blocks still persisted; a caller's live store stays the caller's
+        if reuse_store is None:
+            store.release()
+        raise
 
 
 def seed_facts(

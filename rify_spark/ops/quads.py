@@ -648,9 +648,10 @@ def proof_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def proof_raise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O15: the same proof through the hash-encoded engine, raised back from
-    64-bit ids to terms (src/common.rs:52-77) — identical output proves the
-    raise is a bijection on the proof's instantiation vectors."""
+    """O15: the same proof through the hash-encoded engine
+    (``encode_terms=True``), raised back from 128-bit ids to terms
+    (src/common.rs:52-77) — identical output proves the raise is a
+    bijection on the proof's instantiation vectors."""
     return _proof_df(spark, encode_terms=True)
 
 

@@ -300,7 +300,8 @@ def run_pipeline(
     # DataFrames are lazy — a stage a caller materializes after return
     # runs under the restored confs (harmless: everything width-sensitive
     # — the fixpoint, the pandas-UDF stages — materializes eagerly inside
-    # the scoped block; only the final decode projection floats).
+    # the scoped block; only the derived set, a union scan of the
+    # fixpoint's checkpointed deltas, floats).
     in_bytes = _plan_size_bytes(code_files)
     small_input = in_bytes is not None and in_bytes <= small_input_max_bytes
     with scoped_conf(spark) as set_conf:

@@ -190,12 +190,12 @@ def _warm_session(spark: SparkSession) -> None:
             .write.format("noop").mode("overwrite").save()
         )
         # micro-fixpoint over an 8-row synthetic chain: compiles the
-        # engine's own hot path (smart-TC rounds, FactStore blocks,
-        # localCheckpoint/cache machinery, dictionary encode/decode)
-        # once per session — pure class-loading/first-compile warmup on
-        # synthetic rows; no caller data is read and nothing survives
+        # engine's own hot path as callers take it by default (smart-TC
+        # rounds on string terms, FactStore blocks, localCheckpoint/cache
+        # machinery) once per session — pure class-loading/first-compile
+        # warmup on synthetic rows; no caller data is read and nothing
+        # survives
         from .api import infer_df
-        from .infer import InferConfig
         from .rules import Bound as B, Rule, Unbound as U
 
         prem = spark.createDataFrame(
@@ -215,7 +215,7 @@ def _warm_session(spark: SparkSession) -> None:
                 [[U("a"), B("__wanc"), U("c"), U("g")]],
             ),
         ]
-        derived, _ = infer_df(spark, prem, wrules, InferConfig())
+        derived, _ = infer_df(spark, prem, wrules)
         derived.write.format("noop").mode("overwrite").save()
     except Exception as e:
         # warmup is best-effort: a failure must never block session use

@@ -2504,7 +2504,6 @@ class _Eval:
         (repeated-squaring) strategy, so a 10^4-deep chain costs
         O(log depth) rounds, not O(depth)."""
         from .api import infer_df
-        from .infer import InferConfig
         from .rules import Bound as RB, Rule, Unbound as RU
 
         edge = "\x02e"  # internal predicates, unmintable from query text
@@ -2525,9 +2524,7 @@ class _Eval:
                 [[RU("a"), RB(head), RU("c"), RU("g")]],
             ),
         ]
-        derived, _res = infer_df(
-            self.spark, prem, rules, InferConfig(encode_terms=False)
-        )
+        derived, _res = infer_df(self.spark, prem, rules)
         return derived.filter(F.col("p") == head).select("s", "o", "g")
 
     def _path_closure(self, pat) -> _Sol:
@@ -4110,11 +4107,8 @@ def sparql_query_entailed(
     ``Reasoner::insert``), so the union below is already a set.
     """
     from .api import infer_df
-    from .infer import InferConfig
 
-    derived, _res = infer_df(
-        spark, premises, rules, config or InferConfig(encode_terms=False)
-    )
+    derived, _res = infer_df(spark, premises, rules, config)
     store = (
         premises.select("s", "p", "o", "g")
         .dropDuplicates(["s", "p", "o", "g"])

@@ -121,9 +121,7 @@ class IncrementalReasoner:
         if config is None:
             # stats/hot-key scans are per-fixpoint-call full-store scans —
             # exactly the O(store)-per-batch work the live store removes
-            config = InferConfig(
-                encode_terms=False, use_stats=False, salt_hot_values=False
-            )
+            config = InferConfig(use_stats=False, salt_hot_values=False)
         self.cfg = config
         if self.cfg.encode_terms:
             # the stream store keeps raw string quads; encoding is an

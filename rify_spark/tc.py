@@ -184,186 +184,191 @@ def smart_tc_fixpoint(
     prepend = rec["direction"] == "prepend"
 
     store = FactStore(spark, compact_every=cfg.store_compact_every)
-    ckpt = (
-        CheckpointManager(
-            spark,
-            cfg.checkpoint_dir,
-            fingerprint=_tc_fingerprint(rec, dtype.simpleString()),
-            every=cfg.store_compact_every,
-            retain_history=cfg.checkpoint_retain_history,
-        )
-        if cfg.checkpoint_dir
-        else None
-    )
-    metrics: list = []
-    tracked_deltas: list = []  # post-seed novel blocks == derived facts
-
-    resumed = None
-    if ckpt and cfg.resume:
-        resumed = ckpt.latest()
-    if resumed is not None:
-        # smart-TC resume state is simpler than the generic loop's: the
-        # composition reads the WHOLE R each round (no F_old split), so
-        # store + post-squaring D + round number fully determine the run
-        it, facts_df, _delta_df, _args, meta = resumed
-        seed_lc, facts_rows = store.seed(
-            facts_df, rows_hint=meta.get("facts_rows")
-        )
-        # bare parquet read, same as the in-loop re-point: stable one-node
-        # plan, no localCheckpoint copy of the wavefront into executor
-        # storage
-        d = spark.read.parquet(ckpt.extra_path(it, "d.parquet"))
-        d_rows = meta["d_rows"] if "d_rows" in meta else d.count()
-        metrics.append(
-            {
-                "iteration": it,
-                "resumed": True,
-                "strategy": "smart_tc",
-                "delta_rows": meta.get("delta_rows"),
-            }
-        )
-    else:
-        seed_lc, facts_rows = store.seed(facts0)
-        it = 0
-
-        # D = the base relation, length exactly 1. Linear shape: the B
-        # edges (LFP = B* ∘ C0, and only B ever extends a path). Nonlinear
-        # shape (H <- B copy; H <- H∘H): LFP = (C ∪ H0)+, so the wavefront
-        # seeds from the B-image ∪ premise H-facts — deduplicated as pairs,
-        # since the same (s,o,g) can occur under both predicates.
-        if rec["shape"] == "nonlinear":
-            d = (
-                seed_lc.filter((F.col("p") == b_lit) | (F.col("p") == p_lit))
-                .select(*PAIR)
-                .dropDuplicates(PAIR)
+    try:
+        ckpt = (
+            CheckpointManager(
+                spark,
+                cfg.checkpoint_dir,
+                fingerprint=_tc_fingerprint(rec, dtype.simpleString()),
+                every=cfg.store_compact_every,
+                retain_history=cfg.checkpoint_retain_history,
             )
-        else:
-            # facts0 is SPOG-unique, so (s,o,g) under the single predicate
-            # B is already duplicate-free
-            d = seed_lc.filter(F.col("p") == b_lit).select(*PAIR)
-        d = d.localCheckpoint(eager=False)
-        # D materializes lazily inside round 1's block-count job (the copy
-        # round consumes it) — no dedicated count barrier; d_rows stays
-        # unknown (None) until a checkpointing run needs it for meta
-        d_rows = None
+            if cfg.checkpoint_dir
+            else None
+        )
+        metrics: list = []
+        tracked_deltas: list = []  # post-seed novel blocks == derived facts
 
-    # Same conf regime as the generic loop (infer.fixpoint): constraint
-    # propagation off for the whole run (quad columns are non-null by
-    # construction; every join is an inner equi-join), codegen/AQE/width
-    # per round via floor_regime (profiled ~1-1.5 s/round of the sf0.1
-    # ancestry closure's ~1.2 s/round wall is that floor). All are
-    # plan-cost knobs read at compile time; results are unaffected.
-    with scoped_conf(spark) as set_conf:
-        set_conf("spark.sql.constraintPropagation.enabled", False)
-        session_width = shuffle_width(spark)
-        while cfg.max_iterations is None or it < cfg.max_iterations:
-            it += 1
-            t0 = time.time()
-            # the round's data volume: the compose scans the whole R plus
-            # the D wavefront, so key the regime to the larger of the two;
-            # with a lazy (uncounted) wavefront, facts_rows alone decides —
-            # it already dominates every prior delta
-            floor_regime(set_conf, max(facts_rows, d_rows or 0), session_width)
-            if it == 1:
-                # round 1 = the copy rule: seed the H relation with the edge
-                # image. H-facts already among the premises are in the store.
-                cand = d
-            else:
-                r = store.union().filter(F.col("p") == p_lit).select(*PAIR)
-                cand = _compose(d, r) if prepend else _compose(r, d)
-            novel = store.novel(
-                cand.select(F.col("s"), p_lit.alias("p"), F.col("o"), F.col("g"))
+        resumed = None
+        if ckpt and cfg.resume:
+            resumed = ckpt.latest()
+        if resumed is not None:
+            # smart-TC resume state is simpler than the generic loop's: the
+            # composition reads the WHOLE R each round (no F_old split), so
+            # store + post-squaring D + round number fully determine the run
+            it, facts_df, _delta_df, _args, meta = resumed
+            seed_lc, facts_rows = store.seed(
+                facts_df, rows_hint=meta.get("facts_rows")
             )
-            delta_rows, _ = store.append(novel)
-            if delta_rows == 0:
-                metrics.append(
-                    {
-                        "iteration": it,
-                        "delta_rows": 0,
-                        "strategy": "smart_tc",
-                        "wall_s": round(time.time() - t0, 4),
-                    }
-                )
-                if it == 1:
-                    # an empty ROUND 1 only means the copy image is subsumed by
-                    # premise H-facts (e.g. the program seeded entirely from H0)
-                    # — no composition has run yet, so nothing is proven closed;
-                    # the termination theorem (D∘R ⊆ R ⇒ D^m∘R ⊆ R) applies only
-                    # to rounds that composed. Fall through to round 2.
-                    continue
-                break
-            if track_deltas:
-                tracked_deltas.append(novel)
-            facts_rows += delta_rows
-
-            # square the wavefront for the next round — but NOT after the copy
-            # round, which never consumed D: round 2 must compose with D = B^1
-            # (else exponent 1 — and with it every even total length — is
-            # skipped). Round i >= 2 consumes D = B^(2^(i-2)) and squares it,
-            # so round i adds exponents [2^(i-2), 2^(i-1)-1], each with a
-            # unique (D, R) split. Stop early if D empties (no path of the
-            # next power length exists).
-            if it >= 2:
-                d = (
-                    _compose(d, d)
-                    .repartition(store.partitions, "s")
-                    .dropDuplicates(PAIR)
-                    .localCheckpoint(eager=False)
-                )
-                # LAZY: the squared wavefront materializes inside the next
-                # round's block-count job (its compose reads it) — removing
-                # the dedicated count saved one driver barrier per round.
-                # Termination still holds: an empty D makes the next
-                # round's candidate set empty, so delta_rows==0 breaks one
-                # (cheap, empty-compose) round later. Checkpoint mode keeps
-                # an exact count below (parquet-footer read) for meta.
-                d_rows = None
+            # bare parquet read, same as the in-loop re-point: stable one-node
+            # plan, no localCheckpoint copy of the wavefront into executor
+            # storage
+            d = spark.read.parquet(ckpt.extra_path(it, "d.parquet"))
+            d_rows = meta["d_rows"] if "d_rows" in meta else d.count()
             metrics.append(
                 {
                     "iteration": it,
-                    "delta_rows": delta_rows,
-                    "facts_rows": facts_rows,
-                    "d_rows": d_rows,
+                    "resumed": True,
                     "strategy": "smart_tc",
-                    "store_blocks": len(store.blocks),
-                    "store_partitions": store.partitions,
-                    "compacted": store.just_compacted,
-                    "wall_s": round(time.time() - t0, 4),
+                    "delta_rows": meta.get("delta_rows"),
                 }
             )
-            if ckpt:
-                # persisted AFTER the squaring so the saved D is exactly the
-                # wavefront round it+1 consumes (round 1 never squares, so its
-                # saved D = B^1, what round 2 needs). d.parquet lands before
-                # save_iteration — meta.json stays the commit marker.
-                d.write.mode("overwrite").parquet(ckpt.extra_path(it, "d.parquet"))
-                # re-point D at the parquet just written: bounds the D lineage
-                # plan (localCheckpoint chains of compose∘compose) and drops
-                # any dependency a resumed run carried on soon-pruned files
-                d = spark.read.parquet(ckpt.extra_path(it, "d.parquet"))
-                if d_rows is None:
-                    d_rows = d.count()  # footer-count of the parquet just written
-                    metrics[-1]["d_rows"] = d_rows
-                ckpt.save_iteration(
-                    it,
-                    novel,
-                    store.union(),
-                    extra_meta={
-                        "facts_rows": facts_rows,
+        else:
+            seed_lc, facts_rows = store.seed(facts0)
+            it = 0
+
+            # D = the base relation, length exactly 1. Linear shape: the B
+            # edges (LFP = B* ∘ C0, and only B ever extends a path). Nonlinear
+            # shape (H <- B copy; H <- H∘H): LFP = (C ∪ H0)+, so the wavefront
+            # seeds from the B-image ∪ premise H-facts — deduplicated as pairs,
+            # since the same (s,o,g) can occur under both predicates.
+            if rec["shape"] == "nonlinear":
+                d = (
+                    seed_lc.filter((F.col("p") == b_lit) | (F.col("p") == p_lit))
+                    .select(*PAIR)
+                    .dropDuplicates(PAIR)
+                )
+            else:
+                # facts0 is SPOG-unique, so (s,o,g) under the single predicate
+                # B is already duplicate-free
+                d = seed_lc.filter(F.col("p") == b_lit).select(*PAIR)
+            d = d.localCheckpoint(eager=False)
+            # D materializes lazily inside round 1's block-count job (the copy
+            # round consumes it) — no dedicated count barrier; d_rows stays
+            # unknown (None) until a checkpointing run needs it for meta
+            d_rows = None
+
+        # Same conf regime as the generic loop (infer.fixpoint): constraint
+        # propagation off for the whole run (quad columns are non-null by
+        # construction; every join is an inner equi-join), codegen/AQE/width
+        # per round via floor_regime (profiled ~1-1.5 s/round of the sf0.1
+        # ancestry closure's ~1.2 s/round wall is that floor). All are
+        # plan-cost knobs read at compile time; results are unaffected.
+        with scoped_conf(spark) as set_conf:
+            set_conf("spark.sql.constraintPropagation.enabled", False)
+            session_width = shuffle_width(spark)
+            while cfg.max_iterations is None or it < cfg.max_iterations:
+                it += 1
+                t0 = time.time()
+                # the round's data volume: the compose scans the whole R plus
+                # the D wavefront, so key the regime to the larger of the two;
+                # with a lazy (uncounted) wavefront, facts_rows alone decides —
+                # it already dominates every prior delta
+                floor_regime(set_conf, max(facts_rows, d_rows or 0), session_width)
+                if it == 1:
+                    # round 1 = the copy rule: seed the H relation with the edge
+                    # image. H-facts already among the premises are in the store.
+                    cand = d
+                else:
+                    r = store.union().filter(F.col("p") == p_lit).select(*PAIR)
+                    cand = _compose(d, r) if prepend else _compose(r, d)
+                novel = store.novel(
+                    cand.select(F.col("s"), p_lit.alias("p"), F.col("o"), F.col("g"))
+                )
+                delta_rows, _ = store.append(novel)
+                if delta_rows == 0:
+                    metrics.append(
+                        {
+                            "iteration": it,
+                            "delta_rows": 0,
+                            "strategy": "smart_tc",
+                            "wall_s": round(time.time() - t0, 4),
+                        }
+                    )
+                    if it == 1:
+                        # an empty ROUND 1 only means the copy image is subsumed by
+                        # premise H-facts (e.g. the program seeded entirely from H0)
+                        # — no composition has run yet, so nothing is proven closed;
+                        # the termination theorem (D∘R ⊆ R ⇒ D^m∘R ⊆ R) applies only
+                        # to rounds that composed. Fall through to round 2.
+                        continue
+                    break
+                if track_deltas:
+                    tracked_deltas.append(novel)
+                facts_rows += delta_rows
+
+                # square the wavefront for the next round — but NOT after the copy
+                # round, which never consumed D: round 2 must compose with D = B^1
+                # (else exponent 1 — and with it every even total length — is
+                # skipped). Round i >= 2 consumes D = B^(2^(i-2)) and squares it,
+                # so round i adds exponents [2^(i-2), 2^(i-1)-1], each with a
+                # unique (D, R) split. Stop early if D empties (no path of the
+                # next power length exists).
+                if it >= 2:
+                    d = (
+                        _compose(d, d)
+                        .repartition(store.partitions, "s")
+                        .dropDuplicates(PAIR)
+                        .localCheckpoint(eager=False)
+                    )
+                    # LAZY: the squared wavefront materializes inside the next
+                    # round's block-count job (its compose reads it) — removing
+                    # the dedicated count saved one driver barrier per round.
+                    # Termination still holds: an empty D makes the next
+                    # round's candidate set empty, so delta_rows==0 breaks one
+                    # (cheap, empty-compose) round later. Checkpoint mode keeps
+                    # an exact count below (parquet-footer read) for meta.
+                    d_rows = None
+                metrics.append(
+                    {
+                        "iteration": it,
                         "delta_rows": delta_rows,
+                        "facts_rows": facts_rows,
                         "d_rows": d_rows,
                         "strategy": "smart_tc",
-                    },
+                        "store_blocks": len(store.blocks),
+                        "store_partitions": store.partitions,
+                        "compacted": store.just_compacted,
+                        "wall_s": round(time.time() - t0, 4),
+                    }
                 )
-            if d_rows is not None and d_rows == 0:
-                break
+                if ckpt:
+                    # persisted AFTER the squaring so the saved D is exactly the
+                    # wavefront round it+1 consumes (round 1 never squares, so its
+                    # saved D = B^1, what round 2 needs). d.parquet lands before
+                    # save_iteration — meta.json stays the commit marker.
+                    d.write.mode("overwrite").parquet(ckpt.extra_path(it, "d.parquet"))
+                    # re-point D at the parquet just written: bounds the D lineage
+                    # plan (localCheckpoint chains of compose∘compose) and drops
+                    # any dependency a resumed run carried on soon-pruned files
+                    d = spark.read.parquet(ckpt.extra_path(it, "d.parquet"))
+                    if d_rows is None:
+                        d_rows = d.count()  # footer-count of the parquet just written
+                        metrics[-1]["d_rows"] = d_rows
+                    ckpt.save_iteration(
+                        it,
+                        novel,
+                        store.union(),
+                        extra_meta={
+                            "facts_rows": facts_rows,
+                            "delta_rows": delta_rows,
+                            "d_rows": d_rows,
+                            "strategy": "smart_tc",
+                        },
+                    )
+                if d_rows is not None and d_rows == 0:
+                    break
 
-    return FixpointResult(
-        facts=store.union(),
-        arguments=None,
-        metrics=metrics,
-        iterations=it,
-        facts_rows=facts_rows,
-        delta_dfs=tracked_deltas,
-        resumed=resumed is not None,
-    )
+        return FixpointResult(
+            facts=store.union(),
+            arguments=None,
+            metrics=metrics,
+            iterations=it,
+            facts_rows=facts_rows,
+            delta_dfs=tracked_deltas,
+            resumed=resumed is not None,
+        )
+    except BaseException:
+        # the failed run's store must not stay persisted
+        store.release()
+        raise

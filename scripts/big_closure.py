@@ -1,9 +1,9 @@
 """Memory-bounded large-closure demonstration (the 100-TB design probe).
 
 Runs the ancestry-closure fixpoint over a RIFY_BIG_TREE_N-node tree (default
-10M nodes => ~218M derived quads) through the full production path: 128-bit
-dictionary encoding, FactStore blocked/compacted store, delta-incremental
-parquet checkpoints, cores-aware broadcast cutoff. The point is not the wall
+10M nodes => ~218M derived quads) through the full production path: the
+default string-term fixpoint, FactStore blocked/compacted store,
+delta-incremental parquet checkpoints, cores-aware broadcast cutoff. The point is not the wall
 clock — it is that executor memory stays ~O(store) (compaction drops
 superseded delta checkpoints; blocks spill MEMORY_AND_DISK) at a scale where
 round 1's grow-forever checkpoint union could not fit.

@@ -1,5 +1,6 @@
 """Decompose the KG pipeline's fixpoint window into phases: dict build,
-encode, seed, seed scan, loop, derived+decode+count. Mirrors infer_df."""
+encode, seed, seed scan, loop, derived+decode+count. Mirrors infer_df with
+``encode_terms=True``."""
 from __future__ import annotations
 
 import json

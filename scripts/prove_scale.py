@@ -63,7 +63,7 @@ def main() -> None:
         ),
     ]
     # string engine path: goal terms must match the seed's value space
-    cfg = InferConfig(encode_terms=False)
+    cfg = InferConfig()
     lrules = [lower_rule(r, i, lambda t: t) for i, r in enumerate(rules)]
     goal = (f"node:{TREE_N - 1}", "ancestor", "node:1", "g")
     goals_df = spark.createDataFrame(

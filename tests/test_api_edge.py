@@ -68,7 +68,6 @@ def test_prove_without_encoding(spark):
         facts,
         [("you", "score", "awesome", DG)],
         [axiom],
-        InferConfig(encode_terms=False),
     )
     assert proof == [RuleApplication(0, ("you", "default_graph", "unspecified"))]
 

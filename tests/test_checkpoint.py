@@ -43,7 +43,7 @@ def _chain_setup(spark, n=12):
 def test_checkpointed_fixpoint_writes_lineage(spark, tmp_path):
     ckdir = str(tmp_path / "ck")
     facts, lrules, expected = _chain_setup(spark)
-    cfg = InferConfig(encode_terms=False, checkpoint_dir=ckdir)
+    cfg = InferConfig(checkpoint_dir=ckdir)
     res = fixpoint(spark, seed_facts(spark, facts, lrules, "string"), lrules, cfg)
     got = {tuple(r) for r in res.facts.collect()}
     assert expected <= got
@@ -60,18 +60,14 @@ def test_resume_from_mid_fixpoint(spark, tmp_path):
     facts0 = seed_facts(spark, facts, lrules, "string")
 
     # run 1: killed after 2 iterations (max_iterations simulates the crash)
-    partial_cfg = InferConfig(
-        encode_terms=False, checkpoint_dir=ckdir, max_iterations=2
-    )
+    partial_cfg = InferConfig(checkpoint_dir=ckdir, max_iterations=2)
     partial = fixpoint(spark, facts0, lrules, partial_cfg)
     assert partial.iterations == 2
     partial_facts = {tuple(r) for r in partial.facts.collect()}
     assert not expected <= partial_facts  # genuinely unfinished
 
     # run 2: resume picks up the latest complete checkpoint and finishes
-    resume_cfg = InferConfig(
-        encode_terms=False, checkpoint_dir=ckdir, resume=True
-    )
+    resume_cfg = InferConfig(checkpoint_dir=ckdir, resume=True)
     res = fixpoint(spark, facts0, lrules, resume_cfg)
     got = {tuple(r) for r in res.facts.collect()}
     assert expected <= got
@@ -111,7 +107,7 @@ def test_resume_reads_row_count_from_meta(spark, tmp_path, monkeypatch, setup, l
     ckdir = str(tmp_path / "ck")
     facts, lrules, _ = setup(spark)
     facts0 = seed_facts(spark, facts, lrules, "string")
-    cfg = InferConfig(encode_terms=False, checkpoint_dir=ckdir, max_iterations=2)
+    cfg = InferConfig(checkpoint_dir=ckdir, max_iterations=2)
     assert fixpoint(spark, facts0, lrules, cfg).iterations == 2
 
     DataFrame = type(spark.range(1))
@@ -123,9 +119,7 @@ def test_resume_reads_row_count_from_meta(spark, tmp_path, monkeypatch, setup, l
         return real_count(self)
 
     monkeypatch.setattr(DataFrame, "count", count)
-    cfg = InferConfig(
-        encode_terms=False, checkpoint_dir=ckdir, max_iterations=2, resume=True
-    )
+    cfg = InferConfig(checkpoint_dir=ckdir, max_iterations=2, resume=True)
     res = fixpoint(spark, facts0, lrules, cfg)
     assert res.resumed and res.iterations == 2
     assert loop not in callers
@@ -135,9 +129,7 @@ def test_resume_refuses_mismatched_fingerprint(spark, tmp_path):
     ckdir = str(tmp_path / "ck")
     facts, lrules, _ = _chain_setup(spark)
     facts0 = seed_facts(spark, facts, lrules, "string")
-    partial_cfg = InferConfig(
-        encode_terms=False, checkpoint_dir=ckdir, max_iterations=1
-    )
+    partial_cfg = InferConfig(checkpoint_dir=ckdir, max_iterations=1)
     fixpoint(spark, facts0, lrules, partial_cfg)
 
     # same directory, different rule set -> refuse to resume
@@ -151,7 +143,7 @@ def test_resume_refuses_mismatched_fingerprint(spark, tmp_path):
             lambda t: t,
         )
     ]
-    resume_cfg = InferConfig(encode_terms=False, checkpoint_dir=ckdir, resume=True)
+    resume_cfg = InferConfig(checkpoint_dir=ckdir, resume=True)
     with pytest.raises(ValueError, match="different job"):
         fixpoint(spark, seed_facts(spark, facts, other, "string"), other, resume_cfg)
 
@@ -164,9 +156,7 @@ def test_prove_mode_resume_reconstructs_arguments(spark, tmp_path):
     facts, lrules, expected = _chain_setup(spark)
     facts0 = seed_facts(spark, facts, lrules, "string")
 
-    partial_cfg = InferConfig(
-        encode_terms=False, checkpoint_dir=ckdir, max_iterations=2
-    )
+    partial_cfg = InferConfig(checkpoint_dir=ckdir, max_iterations=2)
     partial = fixpoint(spark, facts0, lrules, partial_cfg, lineage=True)
     assert partial.iterations == 2
 
@@ -175,7 +165,7 @@ def test_prove_mode_resume_reconstructs_arguments(spark, tmp_path):
     assert os.path.exists(os.path.join(ckdir, "iter=00002", "args_delta.parquet"))
     assert not os.path.exists(os.path.join(ckdir, "iter=00002", "arguments.parquet"))
 
-    resume_cfg = InferConfig(encode_terms=False, checkpoint_dir=ckdir, resume=True)
+    resume_cfg = InferConfig(checkpoint_dir=ckdir, resume=True)
     res = fixpoint(spark, facts0, lrules, resume_cfg, lineage=True)
     args = {tuple(r)[:4] for r in res.arguments.collect()}
     assert args == expected  # exactly one argument row per derived quad
@@ -190,7 +180,6 @@ def test_checkpoint_pruned_to_newest_base_and_still_resumes(spark, tmp_path):
     ckdir = str(tmp_path / "ck")
     facts, lrules, expected = _chain_setup(spark)
     partial_cfg = InferConfig(
-        encode_terms=False,
         checkpoint_dir=ckdir,
         store_compact_every=2,
         max_iterations=3,
@@ -206,7 +195,6 @@ def test_checkpoint_pruned_to_newest_base_and_still_resumes(spark, tmp_path):
         "has_facts"
     ]
     resume_cfg = InferConfig(
-        encode_terms=False,
         checkpoint_dir=ckdir,
         store_compact_every=2,
         resume=True,
@@ -220,7 +208,6 @@ def test_checkpoint_retain_history_keeps_everything(spark, tmp_path):
     ckdir = str(tmp_path / "ck")
     facts, lrules, _ = _chain_setup(spark)
     cfg = InferConfig(
-        encode_terms=False,
         checkpoint_dir=ckdir,
         store_compact_every=2,
         max_iterations=3,
@@ -244,14 +231,12 @@ def test_pruned_lineage_resume_repoints_arguments(spark, tmp_path):
     facts, lrules, expected = _chain_setup(spark)
     facts0 = seed_facts(spark, facts, lrules, "string")
     partial_cfg = InferConfig(
-        encode_terms=False,
         checkpoint_dir=ckdir,
         store_compact_every=2,
         max_iterations=3,
     )
     fixpoint(spark, facts0, lrules, partial_cfg, lineage=True)
     resume_cfg = InferConfig(
-        encode_terms=False,
         checkpoint_dir=ckdir,
         store_compact_every=2,
         resume=True,

@@ -54,13 +54,15 @@ def test_collision_audit_detects_fabricated_collision(spark):
 
 
 def test_collision_audit_always_runs(spark, monkeypatch):
-    """Both entry points audit the dictionary: infer_df re-raises its
-    background audit's collision after joining the audit thread, and infer
-    raises it from build_dict_audited."""
+    """Both entry points audit the dictionary when they encode terms
+    (``encode_terms=True``; the default runs on strings and builds none):
+    infer_df re-raises its background audit's collision after joining the
+    audit thread, and infer raises it from build_dict_audited."""
     import threading
 
     from rify_spark import Bound as B, Rule, Unbound as U, infer
     from rify_spark.api import infer_df
+    from rify_spark.infer import InferConfig
 
     real = D.build_dict_deferred
     audit_threads = []
@@ -82,13 +84,14 @@ def test_collision_audit_always_runs(spark, monkeypatch):
         )
     ]
     quads = [("x", "parent", "y", "g")]
+    encoded = InferConfig(encode_terms=True)
     with pytest.raises(DictionaryCollision, match="fabricated"):
-        infer_df(spark, spark.createDataFrame(quads, SCHEMA), rules)
+        infer_df(spark, spark.createDataFrame(quads, SCHEMA), rules, encoded)
     assert len(audit_threads) == 1
     assert audit_threads[0] is not threading.main_thread()
     assert not audit_threads[0].is_alive()
     with pytest.raises(DictionaryCollision, match="fabricated"):
-        infer(spark, quads, rules)
+        infer(spark, quads, rules, encoded)
     assert len(audit_threads) == 2
 
 
@@ -115,3 +118,61 @@ def test_128bit_collision_expectation_documented():
     n = 10**12
     assert n * n / 2 / 2**64 > 1000        # 64-bit ids would fail the audit
     assert n * n / 2 / 2**128 < 1e-12      # 128-bit ids cannot collide
+
+
+def test_default_path_builds_no_dictionary(spark, monkeypatch):
+    """Without ``encode_terms=True`` every entry point seeds, joins and
+    derives on the string terms: no hash ids, no dictionary, no audit and
+    no decode join — and infer_df's and run_pipeline's derived sets equal
+    the encoded runs'."""
+    from rify_spark import Bound as B, Rule, Unbound as U, infer, prove
+    from rify_spark.api import infer_df
+    from rify_spark.extract import code_files_df
+    from rify_spark.infer import InferConfig
+    from rify_spark.pipeline import run_pipeline
+
+    edges = [(f"c{i}", "parent", f"c{i + 1}", "g") for i in range(6)]
+    rules = [
+        # unconditional: one head equal to a premise, one novel
+        Rule.create([], [[B("c0"), B("parent"), B("c1"), B("g")]]),
+        Rule.create([], [[B("axiom"), B("is"), B("true"), B("g")]]),
+        Rule.create(
+            [[U("a"), B("parent"), U("b"), U("g")]],
+            [[U("a"), B("anc"), U("b"), U("g")]],
+        ),
+        Rule.create(
+            [
+                [U("a"), B("anc"), U("b"), U("g")],
+                [U("b"), B("anc"), U("c"), U("g")],
+            ],
+            [[U("a"), B("anc"), U("c"), U("g")]],
+        ),
+    ]
+    facts = spark.createDataFrame(edges + edges[:3], SCHEMA)
+    encoded, _ = infer_df(spark, facts, rules, InferConfig(encode_terms=True))
+    want = sorted(map(tuple, encoded.collect()))
+    files = code_files_df(spark, n_repos=1, n_modules=3, n_funcs=2)
+    kg_encoded = run_pipeline(
+        spark, files, infer_config=InferConfig(encode_terms=True)
+    )
+    kg_want = sorted(map(tuple, kg_encoded.derived.collect()))
+
+    def forbidden(*args, **kwargs):
+        raise AssertionError("dictionary used on the default path")
+
+    for name in (
+        "hash_terms", "encode_quads", "build_dict_deferred",
+        "build_dict_audited", "decode_quads",
+    ):
+        monkeypatch.setattr(D, name, forbidden)
+
+    derived, _ = infer_df(spark, facts, rules)
+    assert sorted(map(tuple, derived.collect())) == want
+    assert ("c0", "anc", "c6", "g") in want
+    assert ("axiom", "is", "true", "g") in want
+    assert sorted(infer(spark, edges, rules)) == want
+    proof = prove(spark, edges, [("c0", "anc", "c2", "g")], rules)
+    assert sorted(app.rule_index for app in proof) == [2, 2, 3]
+    res = run_pipeline(spark, files)
+    assert res.derived.count() > 0
+    assert sorted(map(tuple, res.derived.collect())) == kg_want

@@ -4,8 +4,9 @@ path too.
 Fixpoint loops: ``FactStore.append`` is made to raise on its second
 call, i.e. in the middle of round 2, after the round's conf regime
 (codegen, AQE, width, constraint propagation) has been applied. The
-original exception must propagate and each conf must read exactly as
-before the call — a key that was unset before must be unset again.
+original exception must propagate, each conf must read exactly as
+before the call — a key that was unset before must be unset again — and
+every fact-store block the call built must be unpersisted.
 
 With a checkpoint directory, a rerun with ``resume=True`` after such a
 fault continues from the last committed round to the exact closure.
@@ -21,7 +22,7 @@ from pyspark import StorageLevel
 from rify_spark import Bound as B, Rule, Unbound as U
 from rify_spark.api import infer_df
 from rify_spark.extract import code_files_df
-from rify_spark.infer import FactStore, InferConfig
+from rify_spark.infer import FactStore, InferConfig, fixpoint
 from rify_spark.ops.graph import (
     bfs_levels,
     kcore,
@@ -31,6 +32,7 @@ from rify_spark.ops.graph import (
 )
 from rify_spark.pipeline import run_pipeline
 from rify_spark.reference import naive_closure
+from rify_spark.rules import lower_rule
 
 KEYS = (
     "spark.sql.codegen.wholeStage",
@@ -57,6 +59,20 @@ def fail_second_append(monkeypatch):
 
     monkeypatch.setattr(FactStore, "append", append)
     return calls
+
+
+@pytest.fixture
+def built_blocks(monkeypatch):
+    """Every block a FactStore builds, in build order."""
+    real = FactStore._mk_block
+    blocks = []
+
+    def mk_block(self, src):
+        blocks.append(real(self, src))
+        return blocks[-1]
+
+    monkeypatch.setattr(FactStore, "_mk_block", mk_block)
+    return blocks
 
 
 def _generic(spark):
@@ -100,7 +116,9 @@ def _pipeline(spark):
 @pytest.mark.parametrize(
     "run", [_generic, _smart_tc, _pipeline], ids=["fixpoint", "smart_tc", "pipeline"]
 )
-def test_confs_restored_when_round_raises(spark, fail_second_append, run, width):
+def test_confs_restored_when_round_raises(
+    spark, fail_second_append, built_blocks, run, width
+):
     saved = {k: spark.conf.get(k, None) for k in KEYS}
     try:
         spark.conf.set("spark.sql.codegen.wholeStage", "true")
@@ -114,12 +132,40 @@ def test_confs_restored_when_round_raises(spark, fail_second_append, run, width)
             run(spark)
         assert len(fail_second_append) == 2
         assert {k: spark.conf.get(k, None) for k in KEYS} == before
+        # the store the failed call created is released with it
+        assert built_blocks
+        assert [b.storageLevel for b in built_blocks] == (
+            [StorageLevel.NONE] * len(built_blocks)
+        )
     finally:
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_caller_store_kept_when_round_raises(spark, fail_second_append):
+    """A ``reuse_store`` belongs to the caller (the streaming live store):
+    a round that raises leaves its blocks persisted."""
+    schema = "s string, p string, o string, g string"
+    store = FactStore(spark)
+    store.seed(spark.createDataFrame([("x", "p", "y", "g")], schema))
+    # first append: the batch the fixpoint takes as its worklist
+    store.append(store.novel(spark.createDataFrame([("y", "p", "z", "g")], schema)))
+    symmetry = Rule.create([[U("a"), B("p"), U("b"), U("g")]],
+                           [[U("b"), B("p"), U("a"), U("g")]])
+    lrules = [lower_rule(symmetry, 0, lambda t: t)]
+    try:
+        with pytest.raises(InjectedFault):
+            fixpoint(spark, store.last_src, lrules, reuse_store=store)
+        assert len(fail_second_append) == 2
+        assert len(store.blocks) == 2
+        assert [b.storageLevel for b in store.blocks] == (
+            [StorageLevel.MEMORY_AND_DISK] * 2
+        )
+    finally:
+        store.release()
 
 
 @pytest.mark.parametrize(

@@ -495,7 +495,10 @@ def test_derived_union_equals_anti_join(spark):
             [[U("a"), B("anc"), U("c"), U("g")]],
         ),
     ]
-    derived, res = infer_df(spark, facts, rules, config=InferConfig())
+    # encoded, so res.facts is in id space for the encode_quads oracle below
+    derived, res = infer_df(
+        spark, facts, rules, config=InferConfig(encode_terms=True)
+    )
     got = sorted(map(tuple, derived.collect()))
     # oracle: full facts minus deduped premises
     anti = res.facts
@@ -515,11 +518,16 @@ def test_derived_union_equals_anti_join(spark):
     assert ("axiom", "is", "true", "g") in got
     assert ("c0", "parent", "c1", "g") not in got  # premise-equal head excluded
     assert ("c0", "anc", "c6", "g") in got
-    # input_deduped on pre-deduped input gives the identical set
-    derived2, _ = infer_df(
-        spark, prem, rules, config=InferConfig(input_deduped=True)
-    )
-    assert sorted(map(tuple, derived2.collect())) == got
+    # input_deduped on pre-deduped input gives the identical set, on both
+    # term representations
+    for encode in (True, False):
+        derived2, _ = infer_df(
+            spark,
+            prem,
+            rules,
+            config=InferConfig(input_deduped=True, encode_terms=encode),
+        )
+        assert sorted(map(tuple, derived2.collect())) == got
 
 
 def test_store_growth_triggers_on_rows_not_only_block_count(spark):
