@@ -108,8 +108,8 @@ def _q_prove_lineage(spark, sf_dir):
         [(f"node:{maxk}", "ancestor", "node:0", TREE_G)],
         "s string, p string, o string, g string",
     )
-    facts0 = seed_facts(spark, prem, lrules, "string")
-    res = prove_fixpoint(spark, facts0, prem_dedup, goals, lrules, cfg, "string")
+    facts0 = seed_facts(spark, prem, lrules)
+    res = prove_fixpoint(spark, facts0, prem_dedup, goals, lrules, cfg)
     return res.arguments.select("s", "p", "o", "g", "rule_index", "iteration")
 
 

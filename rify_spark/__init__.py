@@ -3,8 +3,8 @@
 A from-scratch Spark reimplementation of the capabilities of the reference
 engine (docknetwork/rify: forward-chaining conjunctive-rule inference over
 RDF quads with proof generation and validation), re-architected as
-DataFrame programs over the string terms (opt-in dictionary
-hash-encoding), rule-compiled join chains, semi-naive delta fixpoints with
+DataFrame programs over the string terms (the engine's one value type:
+no id dictionary), rule-compiled join chains, semi-naive delta fixpoints with
 checkpointed iterations, and driver-side proof replay. See SURVEY.md at the
 repo root for the full mapping.
 

@@ -40,9 +40,7 @@ Scale design:
     shuffle-free broadcast-hash joins against the large fact set;
   * AQE (incl. skew-join splitting) is expected on; hot s/o values are
     salted explicitly on shuffle-joined iterations (skew.py), and
-    per-predicate stats feed the static join order. Term encoding does not
-    change skew: string keys hash-partition like the dictionary's ids, so
-    a hot term lands on one partition either way.
+    per-predicate stats feed the static join order.
 
 Rules are never rewritten. The one program with its own evaluation is the
 pure transitive closure (copy rule plus one linear or nonlinear
@@ -68,6 +66,8 @@ from .session import floor_regime, scoped_conf, shuffle_width
 from .tc import detect_tc, smart_tc_fixpoint
 
 SPOG = ["s", "p", "o", "g"]
+# the engine's one value type: every quad column holds a string term
+QUAD_SCHEMA = "s string, p string, o string, g string"
 # predicate-vocabulary cap of the driver-side statistics: join-order stats
 # and seed-plan pruning switch off for a relation with more distinct
 # predicates (one extra row is collected to detect the overflow)
@@ -221,7 +221,7 @@ class FactStore:
         rows = _limited_collect(df.groupBy("p").count(), STATS_MAX_PREDICATES + 1)
         if len(rows) > STATS_MAX_PREDICATES:
             return df.count(), None
-        return sum(r["count"] for r in rows), {_norm_term(r["p"]) for r in rows}
+        return sum(r["count"] for r in rows), {r["p"] for r in rows}
 
     def append(self, src: DataFrame, with_preds: bool = False) -> tuple:
         """Append the checkpoint-backed quads ``src`` (disjoint from the
@@ -406,13 +406,11 @@ class FactStore:
 
 @dataclass
 class InferConfig:
-    # run the fixpoint on 128-bit hash ids (dictionary.py), the counterpart
-    # of rify's Translator, instead of the string terms: a dictionary build,
-    # a collision audit and a decode join per call. The o15 proof_raise gate
-    # opts in to check the id -> term raise; no speedup is claimed for it —
-    # strings were faster on every corpus measured, 160-character IRIs
-    # included (NOTES.md, "String terms by default").
-    encode_terms: bool = False
+    """Fixpoint knobs. There is no term-encoding knob: the engine runs on
+    the string terms themselves (strings were faster on every corpus
+    measured, 160-character IRIs included — NOTES.md, "String terms by
+    default")."""
+
     # caller guarantees the input quads are already SPOG-unique (e.g. the
     # KG pipeline's canonical stage ends in dropDuplicates): skips the
     # seed-time dedup shuffle
@@ -474,6 +472,16 @@ class FixpointResult:
     # then misses pre-restart iterations — derived-set shortcuts must fall
     # back to the facts-minus-premises anti-join)
     resumed: bool = False
+    # the FactStore this run created and ``facts`` reads; None when the
+    # caller passed its own (``reuse_store``), which stays the caller's
+    store: Optional[FactStore] = None
+
+    def release(self) -> None:
+        """Unpersist the blocks of the store this run created. ``facts``
+        and every DataFrame derived from it recompute from their
+        checkpoints afterwards, so call it once they are no longer read."""
+        if self.store is not None:
+            self.store.release()
 
 
 def _union_all(dfs: list) -> DataFrame:
@@ -500,10 +508,11 @@ def _broadcast_cutoff_rows(spark: SparkSession, cfg: InferConfig) -> int:
     """Effective delta-broadcast cutoff: the configured row cap, clamped by
     heap and by parallelism.
 
-    Heap clamp: a broadcast HashedRelation over 128-bit quad keys costs
-    ~2 KB/row all-in across build + driver copy; ~500 rows/MB keeps the
-    build well under a quarter of the heap. A 4 GB two-core executor clamps
-    to ~2M rows where the fixed 5M default OOMed.
+    Heap clamp: a broadcast HashedRelation over quad keys (measured when
+    they were 128-bit ids) costs ~2 KB/row all-in across build + driver
+    copy; ~500 rows/MB keeps the build well under a quarter of the heap. A
+    4 GB two-core executor clamps to ~2M rows where the fixed 5M default
+    OOMed.
 
     Cores clamp: the HashedRelation build is SERIAL, so its break-even
     shrinks as cores grow — the shuffle alternative costs ~rows/cores while
@@ -518,12 +527,6 @@ def _broadcast_cutoff_rows(spark: SparkSession, cfg: InferConfig) -> int:
     return min(cfg.broadcast_delta_max_rows, _heap_mb(spark) * 500, cores_cap)
 
 
-def _norm_term(v):
-    """Hashable driver-side form of a collected term value (128-bit struct
-    ids arrive as Rows; lowered rule constants are tuples)."""
-    return v if isinstance(v, (str, int)) else tuple(v)
-
-
 def _limited_collect(df: DataFrame, n: int) -> list:
     """``limit(n).collect()`` in ONE Spark job. CollectLimit launches
     partition scans incrementally (1 partition, then scaleUpFactor x more,
@@ -534,9 +537,7 @@ def _limited_collect(df: DataFrame, n: int) -> list:
     launch.
 
     The limit conf is scoped with :func:`~rify_spark.session.scoped_conf`,
-    under its single-tenant session contract (the concurrent dictionary
-    audit thread only submits jobs whose plans are already compiled, so
-    this perf-only conf cannot change its results)."""
+    under its single-tenant session contract."""
     with scoped_conf(df.sparkSession) as set_conf:
         set_conf("spark.sql.limit.initialNumPartitions", 10000)
         return df.limit(n).collect()
@@ -549,7 +550,7 @@ def _seed_plan_live(atom, delta_preds: Optional[set]) -> bool:
     if delta_preds is None:
         return True
     kind, val = atom[1]
-    return kind != "c" or _norm_term(val) in delta_preds
+    return kind != "c" or val in delta_preds
 
 
 def _seed_scan(
@@ -615,20 +616,22 @@ def _seed_scan(
         total = max(int(occ_rows * frac), 1)
         hrows = sorted((r for r in rows if r["so"]), key=lambda r: -r["count"])
         hot = [
-            (term_lit(_norm_term(r["k"]), dtype),)
+            (term_lit(r["k"], dtype),)
             for r in hrows[:HOT_VALUE_TOP]
             if r["count"] / total >= cfg.hot_value_min_share
         ]
     return stats, hot
 
 
-def job_fingerprint(lrules: list, dtype_str: str, lineage: bool) -> str:
+def job_fingerprint(lrules: list, lineage: bool) -> str:
     """Deterministic identity of a fixpoint job: the lowered rule set (body/
-    head slot structure and constant values), the engine value type, and
-    whether lineage is maintained. Stamped into checkpoint meta.json so a
-    resume against a different job's directory is refused."""
+    head slot structure and constant values) and whether lineage is
+    maintained. Stamped into checkpoint meta.json so a resume against a
+    different job's directory is refused. The ``dtype=string`` prefix is
+    the engine's one value type, kept so that checkpoints written while a
+    second (hash-id) type existed keep their identity."""
     h = hashlib.sha256()
-    h.update(f"dtype={dtype_str};lineage={lineage};".encode())
+    h.update(f"dtype=string;lineage={lineage};".encode())
     for r in lrules:
         h.update(f"r{r.index}:{r.body!r}->{r.head!r};n={r.n_vars}".encode())
     return h.hexdigest()[:32]
@@ -655,18 +658,14 @@ def unconditional_heads(lrules: list) -> list:
     return out
 
 
-def unconditional_heads_df(
-    spark: SparkSession, lrules: list, dtype_str: str
-) -> Optional[DataFrame]:
+def unconditional_heads_df(spark: SparkSession, lrules: list) -> Optional[DataFrame]:
     """:func:`unconditional_heads` as an SPOG quad DataFrame, or None when
     no rule is unconditional. These quads hold in every store (they are
     never deletable, and every seed includes them)."""
     heads = unconditional_heads(lrules)
     if not heads:
         return None
-    return spark.createDataFrame(
-        [h[:4] for h in heads], ", ".join(f"{c} {dtype_str}" for c in SPOG)
-    )
+    return spark.createDataFrame([h[:4] for h in heads], QUAD_SCHEMA)
 
 
 def fixpoint(
@@ -718,7 +717,7 @@ def fixpoint(
         CheckpointManager(
             spark,
             cfg.checkpoint_dir,
-            fingerprint=job_fingerprint(lrules, dtype.simpleString(), lineage),
+            fingerprint=job_fingerprint(lrules, lineage),
             every=cfg.store_compact_every,
             retain_history=cfg.checkpoint_retain_history,
         )
@@ -799,7 +798,7 @@ def fixpoint(
         if not cond_rules:
             delta_preds = None
         elif delta is seed_lc and stats is not None:
-            delta_preds = {_norm_term(p) for p in stats}
+            delta_preds = set(stats)
         else:
             delta_preds = FactStore._count_and_preds(delta)[1]
 
@@ -937,6 +936,7 @@ def fixpoint(
             facts_rows=facts_rows,
             delta_dfs=tracked_deltas,
             resumed=resumed is not None,
+            store=None if reuse_store is not None else store,
         )
     except BaseException:
         # a store this call created must not outlive a failed round with its
@@ -950,7 +950,7 @@ def seed_facts(
     spark: SparkSession,
     premises: DataFrame,
     lrules: list,
-    dtype_str: str = "string",
+    *,
     assume_deduped: bool = False,
 ) -> DataFrame:
     """Deduplicated premises ∪ unconditional-rule heads (src/infer.rs:32-50).
@@ -962,7 +962,7 @@ def seed_facts(
     regardless — heads may repeat premises.
     """
     facts = premises if assume_deduped else premises.dropDuplicates(SPOG)
-    hdf = unconditional_heads_df(spark, lrules, dtype_str)
+    hdf = unconditional_heads_df(spark, lrules)
     if hdf is not None:
         facts = facts.unionByName(hdf).dropDuplicates(SPOG)
     return facts
@@ -973,7 +973,6 @@ def derived_facts(
     res: FixpointResult,
     premises_dedup: DataFrame,
     lrules: list,
-    dtype_str: str = "string",
 ) -> DataFrame:
     """facts ∖ premises WITHOUT the O(store) anti-join.
 
@@ -988,7 +987,7 @@ def derived_facts(
     if res.resumed:
         return res.facts.join(premises_dedup, SPOG, "left_anti")
     parts = list(res.delta_dfs)
-    hdf = unconditional_heads_df(spark, lrules, dtype_str)
+    hdf = unconditional_heads_df(spark, lrules)
     if hdf is not None:
         # heads ∖ premises with the SMALL side as the broadcast build:
         # stream the premises once for the tiny intersection, subtract

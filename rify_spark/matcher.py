@@ -38,13 +38,7 @@ SPOG = ["s", "p", "o", "g"]
 
 
 def term_lit(val, dtype):
-    """Literal column for a lowered constant in the engine value space:
-    plain literal for string/long terms, field-wise struct literal for
-    128-bit (h, l) ids (F.lit does not accept tuples)."""
-    if isinstance(val, tuple):
-        return F.struct(
-            *[F.lit(v).alias(f.name) for v, f in zip(val, dtype.fields)]
-        )
+    """Literal column for a lowered constant in the engine value space."""
     return F.lit(val).cast(dtype)
 
 

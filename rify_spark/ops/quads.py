@@ -94,8 +94,9 @@ def dict_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same result as a global row_number() OVER (ORDER BY term) — which the
     DuckDB oracle uses — WITHOUT the single-task global sort that plan would
     force in Spark (at 100x scale every term would funnel through one task).
-    The engine's real dictionary is hash ids (rify_spark.dictionary, o2/o3);
-    dense ranks exist only for Translator parity (src/translator.rs:14-40).
+    The hash-id dictionary is rify_spark.dictionary (o2/o3); the engine uses
+    neither, and dense ranks exist only for Translator parity
+    (src/translator.rs:14-40).
     """
     quads = tpch_quads(spark, sf_dir)
     terms = quads.select(
@@ -548,7 +549,7 @@ def seed_unconditional(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ]
     lrules = [lower_rule(r, i, lambda t: t) for i, r in enumerate(rules)]
-    return seed_facts(spark, edges.unionByName(edges), lrules, "string")
+    return seed_facts(spark, edges.unionByName(edges), lrules)
 
 
 SEED_UNCONDITIONAL_SQL = f"""
@@ -595,8 +596,11 @@ _EXPECTED_PROOF = [
 ]
 
 
-def _friendship_rules():
-    from ..rules import Bound as B, Rule, Unbound as U
+def _friendship_rules(term):
+    from ..rules import Bound, Rule, Unbound as U
+
+    def B(name):
+        return Bound(term(name))
 
     return [
         Rule.create(
@@ -622,20 +626,27 @@ def _friendship_rules():
     ]
 
 
-def _proof_df(spark: SparkSession, encode_terms: bool) -> DataFrame:
+def _proof_df(spark: SparkSession, lift) -> DataFrame:
+    """The friendship proof with every name passed to ``prove`` as
+    ``lift(name)``; the ``inst`` column maps each term back to its name."""
     from ..api import prove
-    from ..infer import InferConfig
+
+    names: dict = {}
+
+    def term(name):
+        t = lift(name)
+        names[t] = name
+        return t
+
+    def quads(rows):
+        return [tuple(term(x) for x in q) for q in rows]
 
     claims = [("soyoung", "is", "awesome", _DG), ("nick", "is", "awesome", _DG)]
     proof = prove(
-        spark,
-        _FRIENDSHIP_FACTS,
-        claims,
-        _friendship_rules(),
-        InferConfig(encode_terms=encode_terms),
+        spark, quads(_FRIENDSHIP_FACTS), quads(claims), _friendship_rules(term)
     )
     rows = [
-        (i, app.rule_index, "|".join(app.instantiations))
+        (i, app.rule_index, "|".join(names[v] for v in app.instantiations))
         for i, app in enumerate(proof)
     ]
     return spark.createDataFrame(rows, "step long, rule_index long, inst string")
@@ -644,15 +655,16 @@ def _proof_df(spark: SparkSession, encode_terms: bool) -> DataFrame:
 def proof_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O14: recall_proof over the lineage table, raw-string engine path —
     the exact canonical proof (src/prove.rs:168-207)."""
-    return _proof_df(spark, encode_terms=False)
+    return _proof_df(spark, lambda name: name)
 
 
 def proof_raise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O15: the same proof through the hash-encoded engine
-    (``encode_terms=True``), raised back from 128-bit ids to terms
-    (src/common.rs:52-77) — identical output proves the raise is a
-    bijection on the proof's instantiation vectors."""
-    return _proof_df(spark, encode_terms=True)
+    """O15: the same proof over non-string terms (every name a 1-tuple),
+    which the API's term codec lowers to engine strings and raises back
+    (src/common.rs:52-77; the reference is generic over ``Bound: Ord``) —
+    identical output proves the raise is a bijection on the proof's
+    instantiation vectors."""
+    return _proof_df(spark, lambda name: (name,))
 
 
 PROOF_SQL = "SELECT * FROM (VALUES\n" + ",\n".join(

@@ -25,8 +25,16 @@ from dataclasses import dataclass
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from .infer import SPOG, InferConfig, FixpointResult, fixpoint, unconditional_heads
+from .infer import (
+    QUAD_SCHEMA,
+    SPOG,
+    FixpointResult,
+    InferConfig,
+    fixpoint,
+    unconditional_heads,
+)
 from .rules import LoweredRule
 
 # argument tables up to this many rows are collected outright; larger ones
@@ -36,7 +44,7 @@ COLLECT_ARGUMENTS_MAX_ROWS = 1_000_000
 
 @dataclass(frozen=True)
 class LowApplication:
-    """A proof step in the engine's value space (hashed ids or raw strings).
+    """A proof step in the engine's value space (the engine strings).
 
     ``instantiations`` is ordered by the rule's canonical unbound order —
     unlike the reference's slot-indexed Vec<Option<usize>>, it is dense:
@@ -55,7 +63,6 @@ def prove_fixpoint(
     goals: DataFrame,
     lrules: list,
     cfg: Optional[InferConfig] = None,
-    dtype_str: str = "long",
 ) -> FixpointResult:
     """Run the lineage-carrying fixpoint with goal early-exit.
 
@@ -67,15 +74,10 @@ def prove_fixpoint(
     heads = unconditional_heads(lrules)
     initial_args = None
     if heads:
-        hdf = spark.createDataFrame(
-            heads,
-            f"s {dtype_str}, p {dtype_str}, o {dtype_str}, g {dtype_str}, rule_index long",
-        )
-        from pyspark.sql import functions as F
-
+        hdf = spark.createDataFrame(heads, f"{QUAD_SCHEMA}, rule_index long")
         initial_args = (
             hdf.join(premises_dedup, SPOG, "left_anti")
-            .withColumn("inst", F.array().cast(f"array<{dtype_str}>"))
+            .withColumn("inst", F.array().cast("array<string>"))
             .withColumn("iteration", F.lit(0).cast("long"))
             .select(*SPOG, "rule_index", "inst", "iteration")
         )
@@ -106,7 +108,7 @@ def collect_reachable_arguments(
     args_df: DataFrame,
     goal_quads: list,
     lrules: list,
-    dtype_str: str = "long",
+    *,
     metrics: Optional[dict] = None,
 ) -> dict:
     """quad -> LowApplication for every argument reachable from the goals.
@@ -143,14 +145,13 @@ def collect_reachable_arguments(
     args: dict = {}
     visited: set = set()
     frontier = [q for q in goal_quads]
-    schema = f"s {dtype_str}, p {dtype_str}, o {dtype_str}, g {dtype_str}"
     level = 0
     while frontier:
         need = [q for q in frontier if q not in visited]
         visited.update(need)
         if not need:
             break
-        fdf = spark.createDataFrame(need, schema)
+        fdf = spark.createDataFrame(need, QUAD_SCHEMA)
         rows = args_df.join(fdf, SPOG, "left_semi").collect()
         if metrics is not None:
             metrics["frontier_levels"].append(
@@ -211,8 +212,6 @@ def lineage_to_quads(arguments: DataFrame) -> DataFrame:
     mint is injective and reproducible by a SQL twin. Plan shape: one
     narrow projection + ``explode`` of a 6-element literal-struct
     array — a single scan, no shuffle, no Python."""
-    from pyspark.sql import functions as F
-
     d = F.concat(
         F.lit("_:d"),
         F.md5(

@@ -215,8 +215,9 @@ def _warm_session(spark: SparkSession) -> None:
                 [[U("a"), B("__wanc"), U("c"), U("g")]],
             ),
         ]
-        derived, _ = infer_df(spark, prem, wrules)
+        derived, res = infer_df(spark, prem, wrules)
         derived.write.format("noop").mode("overwrite").save()
+        res.release()
     except Exception as e:
         # warmup is best-effort: a failure must never block session use
         warnings.warn(f"rify_spark session warm-up failed: {e!r}")

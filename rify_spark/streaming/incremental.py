@@ -72,6 +72,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..infer import (
+    QUAD_SCHEMA,
     SPOG,
     FactStore,
     InferConfig,
@@ -83,7 +84,6 @@ from ..infer import (
 from ..rules import Rule, lower_rule
 from ..session import scoped_conf
 
-QUAD_SCHEMA = "s string, p string, o string, g string"
 BUCKET_COL = "bucket"
 DEFAULT_BUCKETS = 16
 # bucket count of stores written before the layout record existed
@@ -123,10 +123,6 @@ class IncrementalReasoner:
             # exactly the O(store)-per-batch work the live store removes
             config = InferConfig(use_stats=False, salt_hot_values=False)
         self.cfg = config
-        if self.cfg.encode_terms:
-            # the stream store keeps raw string quads; encoding is an
-            # inner detail of each batch's fixpoint
-            raise ValueError("IncrementalReasoner stores string quads; use encode_terms=False")
         self.lrules = [lower_rule(r, i, lambda t: t) for i, r in enumerate(self.rules)]
         self._store: Optional[FactStore] = None
         self._recover_compaction()
@@ -352,7 +348,7 @@ class IncrementalReasoner:
                 # data (a store seeded from an empty durable read would
                 # serialize every join at width 1 until the first prefix
                 # compaction); seed() releases any empty block held.
-                seed = seed_facts(self.spark, batch, self.lrules, "string")
+                seed = seed_facts(self.spark, batch, self.lrules)
                 novel, n_novel = store.seed(seed)
             else:
                 # novelty against cached blocks (arrivals may repeat facts
@@ -468,7 +464,7 @@ class IncrementalReasoner:
             # downstream dedups (append and the journal keep rows as-is)
             p_rest = premises.join(_maybe_broadcast(x, x_rows), SPOG, "left_anti")
             reseed = cone.join(p_rest, SPOG, "left_semi")
-            uncond = unconditional_heads_df(self.spark, self.lrules, "string")
+            uncond = unconditional_heads_df(self.spark, self.lrules)
             if uncond is not None:
                 reseed = reseed.unionByName(
                     uncond.join(cone, SPOG, "left_semi")

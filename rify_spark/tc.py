@@ -139,16 +139,18 @@ def detect_tc(lrules: list):
     return None
 
 
-def _tc_fingerprint(rec: dict, dtype_str: str) -> str:
+def _tc_fingerprint(rec: dict) -> str:
     """Checkpoint identity of a smart-TC job: strategy + the detected pair.
     The ``smart_tc;`` prefix guarantees a generic-loop checkpoint directory
     (fingerprinted by infer.job_fingerprint over the lowered rules) is
     refused on resume and vice versa — the two strategies persist different
-    state (smart TC needs the D wavefront; the generic loop needs F_old)."""
+    state (smart TC needs the D wavefront; the generic loop needs F_old).
+    ``dtype=string`` keeps the identity of checkpoints written while the
+    engine had a second (hash-id) value type."""
     h = hashlib.sha256()
     h.update(
         (
-            f"smart_tc;dtype={dtype_str};p={rec['predicate']!r};"
+            f"smart_tc;dtype=string;p={rec['predicate']!r};"
             f"b={rec['edge_predicate']!r};dir={rec['direction']};"
             f"shape={rec['shape']}"
         ).encode()
@@ -189,7 +191,7 @@ def smart_tc_fixpoint(
             CheckpointManager(
                 spark,
                 cfg.checkpoint_dir,
-                fingerprint=_tc_fingerprint(rec, dtype.simpleString()),
+                fingerprint=_tc_fingerprint(rec),
                 every=cfg.store_compact_every,
                 retain_history=cfg.checkpoint_retain_history,
             )
@@ -367,6 +369,7 @@ def smart_tc_fixpoint(
             facts_rows=facts_rows,
             delta_dfs=tracked_deltas,
             resumed=resumed is not None,
+            store=store,
         )
     except BaseException:
         # the failed run's store must not stay persisted

@@ -62,7 +62,7 @@ def main() -> None:
             [[U("a"), B("ancestor"), U("c"), U("g")]],
         ),
     ]
-    # string engine path: goal terms must match the seed's value space
+    # goal terms must match the seed's value space (the engine strings)
     cfg = InferConfig()
     lrules = [lower_rule(r, i, lambda t: t) for i, r in enumerate(rules)]
     goal = (f"node:{TREE_N - 1}", "ancestor", "node:1", "g")
@@ -71,10 +71,10 @@ def main() -> None:
     )
     prem = edges.select("s", "p", "o", "g")
     prem_dedup = prem.dropDuplicates(["s", "p", "o", "g"])
-    facts0 = seed_facts(spark, prem, lrules, "string")
+    facts0 = seed_facts(spark, prem, lrules)
 
     t0 = time.time()
-    res = prove_fixpoint(spark, facts0, prem_dedup, goals_df, lrules, cfg, "string")
+    res = prove_fixpoint(spark, facts0, prem_dedup, goals_df, lrules, cfg)
     goal_found = goals_df.join(res.facts, ["s", "p", "o", "g"], "left_semi").count()
     args_rows = res.arguments.count()
     wall = time.time() - t0
@@ -91,8 +91,7 @@ def main() -> None:
     t1 = time.time()
     frontier_metrics: dict = {}
     args = collect_reachable_arguments(
-        spark, res.arguments, [goal], lrules, "string",
-        metrics=frontier_metrics,
+        spark, res.arguments, [goal], lrules, metrics=frontier_metrics,
     )
     lproof = recall_proof([goal], args, lrules)
     assert frontier_metrics.get("path") == "frontier", frontier_metrics

@@ -44,7 +44,7 @@ def test_checkpointed_fixpoint_writes_lineage(spark, tmp_path):
     ckdir = str(tmp_path / "ck")
     facts, lrules, expected = _chain_setup(spark)
     cfg = InferConfig(checkpoint_dir=ckdir)
-    res = fixpoint(spark, seed_facts(spark, facts, lrules, "string"), lrules, cfg)
+    res = fixpoint(spark, seed_facts(spark, facts, lrules), lrules, cfg)
     got = {tuple(r) for r in res.facts.collect()}
     assert expected <= got
     iters = sorted(d for d in os.listdir(ckdir) if d.startswith("iter="))
@@ -57,7 +57,7 @@ def test_checkpointed_fixpoint_writes_lineage(spark, tmp_path):
 def test_resume_from_mid_fixpoint(spark, tmp_path):
     ckdir = str(tmp_path / "ck")
     facts, lrules, expected = _chain_setup(spark)
-    facts0 = seed_facts(spark, facts, lrules, "string")
+    facts0 = seed_facts(spark, facts, lrules)
 
     # run 1: killed after 2 iterations (max_iterations simulates the crash)
     partial_cfg = InferConfig(checkpoint_dir=ckdir, max_iterations=2)
@@ -106,7 +106,7 @@ def test_resume_reads_row_count_from_meta(spark, tmp_path, monkeypatch, setup, l
     resumed run stops at the same iteration cap, so it runs no round."""
     ckdir = str(tmp_path / "ck")
     facts, lrules, _ = setup(spark)
-    facts0 = seed_facts(spark, facts, lrules, "string")
+    facts0 = seed_facts(spark, facts, lrules)
     cfg = InferConfig(checkpoint_dir=ckdir, max_iterations=2)
     assert fixpoint(spark, facts0, lrules, cfg).iterations == 2
 
@@ -128,7 +128,7 @@ def test_resume_reads_row_count_from_meta(spark, tmp_path, monkeypatch, setup, l
 def test_resume_refuses_mismatched_fingerprint(spark, tmp_path):
     ckdir = str(tmp_path / "ck")
     facts, lrules, _ = _chain_setup(spark)
-    facts0 = seed_facts(spark, facts, lrules, "string")
+    facts0 = seed_facts(spark, facts, lrules)
     partial_cfg = InferConfig(checkpoint_dir=ckdir, max_iterations=1)
     fixpoint(spark, facts0, lrules, partial_cfg)
 
@@ -145,7 +145,7 @@ def test_resume_refuses_mismatched_fingerprint(spark, tmp_path):
     ]
     resume_cfg = InferConfig(checkpoint_dir=ckdir, resume=True)
     with pytest.raises(ValueError, match="different job"):
-        fixpoint(spark, seed_facts(spark, facts, other, "string"), other, resume_cfg)
+        fixpoint(spark, seed_facts(spark, facts, other), other, resume_cfg)
 
 
 def test_prove_mode_resume_reconstructs_arguments(spark, tmp_path):
@@ -154,7 +154,7 @@ def test_prove_mode_resume_reconstructs_arguments(spark, tmp_path):
     the complete lineage (one argument row per derived quad)."""
     ckdir = str(tmp_path / "ck")
     facts, lrules, expected = _chain_setup(spark)
-    facts0 = seed_facts(spark, facts, lrules, "string")
+    facts0 = seed_facts(spark, facts, lrules)
 
     partial_cfg = InferConfig(checkpoint_dir=ckdir, max_iterations=2)
     partial = fixpoint(spark, facts0, lrules, partial_cfg, lineage=True)
@@ -184,7 +184,7 @@ def test_checkpoint_pruned_to_newest_base_and_still_resumes(spark, tmp_path):
         store_compact_every=2,
         max_iterations=3,
     )
-    fixpoint(spark, seed_facts(spark, facts, lrules, "string"), lrules, partial_cfg)
+    fixpoint(spark, seed_facts(spark, facts, lrules), lrules, partial_cfg)
     iters = sorted(
         int(d.split("=")[1]) for d in os.listdir(ckdir) if d.startswith("iter=")
     )
@@ -199,7 +199,7 @@ def test_checkpoint_pruned_to_newest_base_and_still_resumes(spark, tmp_path):
         store_compact_every=2,
         resume=True,
     )
-    res = fixpoint(spark, seed_facts(spark, facts, lrules, "string"), lrules, resume_cfg)
+    res = fixpoint(spark, seed_facts(spark, facts, lrules), lrules, resume_cfg)
     assert res.resumed and res.metrics[0]["iteration"] == 3
     assert expected <= {tuple(r) for r in res.facts.collect()}
 
@@ -213,7 +213,7 @@ def test_checkpoint_retain_history_keeps_everything(spark, tmp_path):
         max_iterations=3,
         checkpoint_retain_history=True,
     )
-    fixpoint(spark, seed_facts(spark, facts, lrules, "string"), lrules, cfg)
+    fixpoint(spark, seed_facts(spark, facts, lrules), lrules, cfg)
     iters = sorted(
         int(d.split("=")[1]) for d in os.listdir(ckdir) if d.startswith("iter=")
     )
@@ -229,7 +229,7 @@ def test_pruned_lineage_resume_repoints_arguments(spark, tmp_path):
     re-read deleted files."""
     ckdir = str(tmp_path / "ck")
     facts, lrules, expected = _chain_setup(spark)
-    facts0 = seed_facts(spark, facts, lrules, "string")
+    facts0 = seed_facts(spark, facts, lrules)
     partial_cfg = InferConfig(
         checkpoint_dir=ckdir,
         store_compact_every=2,
@@ -253,3 +253,27 @@ def test_pruned_lineage_resume_repoints_arguments(spark, tmp_path):
     args = {tuple(r)[:4] for r in res.arguments.collect()}
     assert args == expected
     assert res.arguments.count() == len(expected)
+
+
+def test_fingerprints_pinned():
+    """Checkpoint identities do not drift: a directory written by an
+    earlier string-term run must still resume. Both fingerprints keep
+    hashing ``dtype=string`` from when the engine also had a hash-id value
+    type; the pinned values were recorded on that engine."""
+    from rify_spark.infer import job_fingerprint
+    from rify_spark.tc import _tc_fingerprint, detect_tc
+
+    rules = [
+        Rule.create([[U("a"), B("parent"), U("b"), U("g")]],
+                    [[U("a"), B("anc"), U("b"), U("g")]]),
+        Rule.create(
+            [[U("a"), B("anc"), U("b"), U("g")], [U("b"), B("anc"), U("c"), U("g")]],
+            [[U("a"), B("anc"), U("c"), U("g")]],
+        ),
+    ]
+    lrules = [lower_rule(r, i, lambda t: t) for i, r in enumerate(rules)]
+    assert job_fingerprint(lrules, False) == "83fcedf7c48282bb0a329e3df896686c"
+    assert job_fingerprint(lrules, True) == "57cae131016c132fdb90be3d56196cfc"
+    assert _tc_fingerprint(detect_tc(lrules)) == (
+        "smart_tc:38e30e3856e2457717f7a4c5d7ff2544"
+    )

@@ -2,7 +2,6 @@
 novel-term behavior (Translator parity, src/translator.rs)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from rify_spark import dictionary as D
 from rify_spark.errors import DictionaryCollision
@@ -53,66 +52,6 @@ def test_collision_audit_detects_fabricated_collision(spark):
     assert D.audit_collisions(bad, raise_on_collision=False) == 1
 
 
-def test_collision_audit_always_runs(spark, monkeypatch):
-    """Both entry points audit the dictionary when they encode terms
-    (``encode_terms=True``; the default runs on strings and builds none):
-    infer_df re-raises its background audit's collision after joining the
-    audit thread, and infer raises it from build_dict_audited."""
-    import threading
-
-    from rify_spark import Bound as B, Rule, Unbound as U, infer
-    from rify_spark.api import infer_df
-    from rify_spark.infer import InferConfig
-
-    real = D.build_dict_deferred
-    audit_threads = []
-
-    def colliding(*args, **kwargs):
-        dict_df, _ = real(*args, **kwargs)
-
-        def audit_fn():
-            audit_threads.append(threading.current_thread())
-            raise DictionaryCollision("fabricated collision")
-
-        return dict_df, audit_fn
-
-    monkeypatch.setattr(D, "build_dict_deferred", colliding)
-    rules = [
-        Rule.create(
-            [[U("a"), B("parent"), U("b"), U("g")]],
-            [[U("a"), B("anc"), U("b"), U("g")]],
-        )
-    ]
-    quads = [("x", "parent", "y", "g")]
-    encoded = InferConfig(encode_terms=True)
-    with pytest.raises(DictionaryCollision, match="fabricated"):
-        infer_df(spark, spark.createDataFrame(quads, SCHEMA), rules, encoded)
-    assert len(audit_threads) == 1
-    assert audit_threads[0] is not threading.main_thread()
-    assert not audit_threads[0].is_alive()
-    with pytest.raises(DictionaryCollision, match="fabricated"):
-        infer(spark, quads, rules, encoded)
-    assert len(audit_threads) == 2
-
-
-def test_hash_terms_matches_spark_hash(spark):
-    terms = ["alpha", "beta", "gamma"]
-    m = D.hash_terms(spark, terms)
-    df = spark.createDataFrame([(t,) for t in terms], "term string")
-    expected = {
-        r["term"]: (r["h"], r["l"])
-        for r in df.select(
-            "term",
-            F.xxhash64("term").alias("h"),
-            F.xxhash64("term", F.lit(1)).alias("l"),
-        ).collect()
-    }
-    assert dict(m) == expected
-    # the two lanes are genuinely independent hash functions
-    assert all(h != l for h, l in m.values())
-    assert D.hash_terms(spark, []) == {}
-
-
 def test_128bit_collision_expectation_documented():
     # design check: expected birthday collisions at 10^12 terms
     n = 10**12
@@ -121,15 +60,14 @@ def test_128bit_collision_expectation_documented():
 
 
 def test_default_path_builds_no_dictionary(spark, monkeypatch):
-    """Without ``encode_terms=True`` every entry point seeds, joins and
-    derives on the string terms: no hash ids, no dictionary, no audit and
-    no decode join — and infer_df's and run_pipeline's derived sets equal
-    the encoded runs'."""
+    """The engine runs on the string terms: no entry point calls the id
+    dictionary, and infer_df, infer, prove and run_pipeline still derive
+    exactly the closure."""
     from rify_spark import Bound as B, Rule, Unbound as U, infer, prove
     from rify_spark.api import infer_df
     from rify_spark.extract import code_files_df
-    from rify_spark.infer import InferConfig
-    from rify_spark.pipeline import run_pipeline
+    from rify_spark.pipeline import code_ontology_rules, run_pipeline
+    from rify_spark.reference import naive_closure
 
     edges = [(f"c{i}", "parent", f"c{i + 1}", "g") for i in range(6)]
     rules = [
@@ -148,31 +86,28 @@ def test_default_path_builds_no_dictionary(spark, monkeypatch):
             [[U("a"), B("anc"), U("c"), U("g")]],
         ),
     ]
-    facts = spark.createDataFrame(edges + edges[:3], SCHEMA)
-    encoded, _ = infer_df(spark, facts, rules, InferConfig(encode_terms=True))
-    want = sorted(map(tuple, encoded.collect()))
-    files = code_files_df(spark, n_repos=1, n_modules=3, n_funcs=2)
-    kg_encoded = run_pipeline(
-        spark, files, infer_config=InferConfig(encode_terms=True)
+    want = sorted(
+        [(f"c{i}", "anc", f"c{j}", "g") for i in range(7) for j in range(i + 1, 7)]
+        + [("axiom", "is", "true", "g")]
     )
-    kg_want = sorted(map(tuple, kg_encoded.derived.collect()))
 
     def forbidden(*args, **kwargs):
-        raise AssertionError("dictionary used on the default path")
+        raise AssertionError("dictionary used by the engine")
 
     for name in (
-        "hash_terms", "encode_quads", "build_dict_deferred",
-        "build_dict_audited", "decode_quads",
+        "term_id", "encode_quads", "term_df", "build_dict",
+        "audit_collisions", "decode_quads",
     ):
         monkeypatch.setattr(D, name, forbidden)
 
+    facts = spark.createDataFrame(edges + edges[:3], SCHEMA)
     derived, _ = infer_df(spark, facts, rules)
     assert sorted(map(tuple, derived.collect())) == want
-    assert ("c0", "anc", "c6", "g") in want
-    assert ("axiom", "is", "true", "g") in want
     assert sorted(infer(spark, edges, rules)) == want
     proof = prove(spark, edges, [("c0", "anc", "c2", "g")], rules)
     assert sorted(app.rule_index for app in proof) == [2, 2, 3]
-    res = run_pipeline(spark, files)
-    assert res.derived.count() > 0
-    assert sorted(map(tuple, res.derived.collect())) == kg_want
+    res = run_pipeline(spark, code_files_df(spark, n_repos=1, n_modules=3, n_funcs=2))
+    canonical = {tuple(r) for r in res.canonical.collect()}
+    kg_want = naive_closure(canonical, code_ontology_rules()) - canonical
+    assert kg_want
+    assert sorted(map(tuple, res.derived.collect())) == sorted(kg_want)

@@ -6,7 +6,9 @@ call, i.e. in the middle of round 2, after the round's conf regime
 (codegen, AQE, width, constraint propagation) has been applied. The
 original exception must propagate, each conf must read exactly as
 before the call — a key that was unset before must be unset again — and
-every fact-store block the call built must be unpersisted.
+every fact-store block the call built must be unpersisted. A call that
+finishes with its result collected (``infer``, ``prove``, the session
+warm-up) unpersists them too.
 
 With a checkpoint directory, a rerun with ``resume=True`` after such a
 fault continues from the last committed round to the exact closure.
@@ -19,8 +21,9 @@ DataFrame the call persisted must be unpersisted again.
 import pytest
 from pyspark import StorageLevel
 
-from rify_spark import Bound as B, Rule, Unbound as U
+from rify_spark import Bound as B, Rule, Unbound as U, infer, prove
 from rify_spark.api import infer_df
+from rify_spark.errors import ExhaustedSearchSpace
 from rify_spark.extract import code_files_df
 from rify_spark.infer import FactStore, InferConfig, fixpoint
 from rify_spark.ops.graph import (
@@ -33,6 +36,7 @@ from rify_spark.ops.graph import (
 from rify_spark.pipeline import run_pipeline
 from rify_spark.reference import naive_closure
 from rify_spark.rules import lower_rule
+from rify_spark.session import _warm_session
 
 KEYS = (
     "spark.sql.codegen.wholeStage",
@@ -190,6 +194,42 @@ def test_checkpoint_resume_after_round_fault(
     assert got == naive_closure(CHAIN, rules)
 
 
+def _spy_persist(spark, monkeypatch) -> list:
+    """Every DataFrame persisted from now on, in persist order."""
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is its
+    # abstract base, so patching that would miss every call)
+    DataFrame = type(spark.range(1))
+    persisted = []
+    real_persist = DataFrame.persist
+
+    def persist(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "persist", persist)
+    return persisted
+
+
+def test_finished_calls_release_their_store(spark, monkeypatch):
+    """``infer`` and ``prove`` collect their rows and the session warm-up
+    writes its derived set to a no-op sink; nothing reads the fact store
+    afterwards, so every block it persisted is unpersisted — on the generic
+    loop, on smart TC and when no proof exists."""
+    persisted = _spy_persist(spark, monkeypatch)
+    monkeypatch.setattr(spark, "_rify_warmed", False)
+    monkeypatch.delenv("RIFY_SESSION_WARMUP", raising=False)
+    _warm_session(spark)
+    assert infer(spark, CHAIN, TC_RULES + [INERT])
+    assert infer(spark, CHAIN, TC_RULES)
+    assert prove(spark, CHAIN, [("n0", "q", "n6", "g")], TC_RULES)
+    with pytest.raises(ExhaustedSearchSpace):
+        prove(spark, CHAIN, [("n6", "q", "n0", "g")], TC_RULES)
+    assert persisted
+    assert [df.storageLevel for df in persisted] == (
+        [StorageLevel.NONE] * len(persisted)
+    )
+
+
 def _path(spark, n, cols="s string, o string"):
     return spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(n)], cols
@@ -237,16 +277,8 @@ GRAPH_LOOPS = [
 def test_graph_loop_unpersists_when_round_raises(
     spark, monkeypatch, run, method, nth, n_persisted
 ):
-    # the session's concrete DataFrame class (pyspark.sql.DataFrame is its
-    # abstract base, so patching that would miss every call)
+    persisted = _spy_persist(spark, monkeypatch)
     DataFrame = type(spark.range(1))
-    persisted = []
-    real_persist = DataFrame.persist
-
-    def persist(self, *args, **kwargs):
-        persisted.append(self)
-        return real_persist(self, *args, **kwargs)
-
     real = getattr(DataFrame, method)
     calls = []
 
@@ -256,7 +288,6 @@ def test_graph_loop_unpersists_when_round_raises(
             raise InjectedFault(f"injected: {method} call {nth}")
         return real(self, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrame, "persist", persist)
     monkeypatch.setattr(DataFrame, method, fail_in_round_2)
     with pytest.raises(InjectedFault):
         run(spark)

@@ -6,7 +6,7 @@ paths where it adds coverage.
 
 import pytest
 
-from rify_spark import Bound as B, InferConfig, Rule, Unbound as U, infer
+from rify_spark import Bound as B, Rule, Unbound as U, infer
 
 DG = "default_graph"
 
@@ -33,15 +33,14 @@ def ancestry_rules(parent="parent", ancestor="ancestor", dg=DG):
     )
 
 
-@pytest.mark.parametrize("encode", [True, False])
-def test_ancestry(spark, encode):
+def test_ancestry(spark):
     # reference src/infer.rs:117-154: 10-node parent cycle => full closure
     nodes = [f"node_{n}" for n in range(10)]
     facts = [
         (a, "parent", b, DG)
         for a, b in zip(nodes, nodes[1:] + nodes[:1])
     ]
-    out = infer(spark, facts, ancestry_rules(), InferConfig(encode_terms=encode))
+    out = infer(spark, facts, ancestry_rules())
     expected = sorted(
         (a, "ancestor", b, DG) for a in nodes for b in nodes
     )
@@ -495,39 +494,20 @@ def test_derived_union_equals_anti_join(spark):
             [[U("a"), B("anc"), U("c"), U("g")]],
         ),
     ]
-    # encoded, so res.facts is in id space for the encode_quads oracle below
-    derived, res = infer_df(
-        spark, facts, rules, config=InferConfig(encode_terms=True)
-    )
+    derived, res = infer_df(spark, facts, rules)
     got = sorted(map(tuple, derived.collect()))
     # oracle: full facts minus deduped premises
-    anti = res.facts
     prem = facts.dropDuplicates(["s", "p", "o", "g"])
-    from rify_spark.dictionary import encode_quads
-
     want = sorted(
-        map(
-            tuple,
-            res.facts.join(
-                encode_quads(prem), ["s", "p", "o", "g"], "left_anti"
-            ).collect(),
-        )
+        map(tuple, res.facts.join(prem, ["s", "p", "o", "g"], "left_anti").collect())
     )
-    # decode side: compare by count + the novel unconditional head presence
-    assert len(got) == len(want)
+    assert got == want
     assert ("axiom", "is", "true", "g") in got
     assert ("c0", "parent", "c1", "g") not in got  # premise-equal head excluded
     assert ("c0", "anc", "c6", "g") in got
-    # input_deduped on pre-deduped input gives the identical set, on both
-    # term representations
-    for encode in (True, False):
-        derived2, _ = infer_df(
-            spark,
-            prem,
-            rules,
-            config=InferConfig(input_deduped=True, encode_terms=encode),
-        )
-        assert sorted(map(tuple, derived2.collect())) == got
+    # input_deduped on pre-deduped input gives the identical set
+    derived2, _ = infer_df(spark, prem, rules, config=InferConfig(input_deduped=True))
+    assert sorted(map(tuple, derived2.collect())) == got
 
 
 def test_store_growth_triggers_on_rows_not_only_block_count(spark):

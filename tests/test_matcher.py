@@ -143,7 +143,7 @@ def test_fixpoint_max_iterations_guard(spark):
         ),
     ]
     lrules = [lower_rule(r, i, lambda t: t) for i, r in enumerate(rules)]
-    facts0 = seed_facts(spark, facts, lrules, "string")
+    facts0 = seed_facts(spark, facts, lrules)
     res = fixpoint(spark, facts0, lrules, InferConfig(max_iterations=1))
     assert res.iterations == 1  # stopped early, did not reach closure
 

@@ -92,9 +92,9 @@ facts_st = st.lists(
 # ---------------------------------------------------------------------------
 
 @settings(max_examples=10 * _SCALE, **_SETTINGS)
-@given(facts=facts_st, rules=rules_st, encode=st.booleans())
-def test_infer_matches_naive_oracle(spark, facts, rules, encode):
-    got = infer(spark, facts, rules, InferConfig(encode_terms=encode))
+@given(facts=facts_st, rules=rules_st)
+def test_infer_matches_naive_oracle(spark, facts, rules):
+    got = infer(spark, facts, rules)
     want = sorted(_naive_closure(facts, rules) - set(facts))
     assert got == want
 

@@ -6,7 +6,6 @@ import pytest
 from rify_spark import (
     Bound as B,
     ExhaustedSearchSpace,
-    InferConfig,
     NovelName,
     Rule,
     RuleApplication,
@@ -185,7 +184,7 @@ FRIENDSHIP_FACTS = [
 ]
 
 
-def test_prove_multi_step(spark, config=None):
+def test_prove_multi_step(spark):
     # src/prove.rs:503-627 — 11-step proof + validate round trip
     rules = decl_rules(FRIENDSHIP_RULES)
     composite_claims = [
@@ -205,7 +204,7 @@ def test_prove_multi_step(spark, config=None):
         RuleApplication(2, ("soyoung", "nick")),
         RuleApplication(1, ("nick", "soyoung")),
     ]
-    proof = prove(spark, FRIENDSHIP_FACTS, composite_claims, rules, config)
+    proof = prove(spark, FRIENDSHIP_FACTS, composite_claims, rules)
     assert len(proof) <= len(expected_proof)
     assert proof == expected_proof
     valid = validate(rules, proof)
@@ -214,7 +213,7 @@ def test_prove_multi_step(spark, config=None):
         assert claim not in FRIENDSHIP_FACTS
 
 
-def test_ancestry_high_prove_and_verify(spark, config=None):
+def test_ancestry_high_prove_and_verify(spark):
     # src/prove.rs:630-678 — non-string (u32) terms
     nxt = iter(range(100))
     parent, ancestor, default_graph = next(nxt), next(nxt), next(nxt)
@@ -244,7 +243,7 @@ def test_ancestry_high_prove_and_verify(spark, config=None):
         (nodes[0], ancestor, nodes[0], default_graph),
         (nodes[0], parent, nodes[1], default_graph),  # a premise
     ]
-    proof = prove(spark, facts, composite_claims, rules, config)
+    proof = prove(spark, facts, composite_claims, rules)
     valid = validate(rules, proof)
     assert valid.assumed == set(facts), "all premises used for this proof"
     for claim in composite_claims:
@@ -271,27 +270,11 @@ def test_no_proof_is_generated_for_facts(spark):
     assert prove(spark, facts, [("nachos", "are", "food", DG)], rules) == []
 
 
-def test_unconditional_rule(spark, config=None):
+def test_unconditional_rule(spark):
     # src/prove.rs:697-712
     rules = decl_rules([([], [[B("nachos"), B("are"), B("food"), B(DG)]])])
-    proof = prove(spark, [], [("nachos", "are", "food", DG)], rules, config)
+    proof = prove(spark, [], [("nachos", "are", "food", DG)], rules)
     assert proof == [RuleApplication(0, ())]
-
-
-@pytest.mark.parametrize(
-    "case",
-    [
-        test_prove_multi_step,
-        test_ancestry_high_prove_and_verify,
-        test_unconditional_rule,
-    ],
-    ids=lambda case: case.__name__[len("test_"):],
-)
-def test_prove_on_hash_ids(spark, case):
-    """The proofs above on the opt-in hash-id path: goals hashed into id
-    space, lineage over id instantiation vectors, and the id -> term raise
-    of every rule application."""
-    case(spark, InferConfig(encode_terms=True))
 
 
 # --- Explicit Ethos credential chain (JS binding test, DCK-69) -------------

@@ -107,15 +107,6 @@ def test_incremental_matches_batch_engine(spark, tmp_path):
     assert streamed == batch_out
 
 
-def test_encode_terms_config_rejected(spark, tmp_path):
-    from rify_spark.infer import InferConfig
-
-    with pytest.raises(ValueError):
-        IncrementalReasoner(
-            spark, _rules(), str(tmp_path / "s"), InferConfig(encode_terms=True)
-        )
-
-
 def test_restart_recovers_from_bucketed_store(spark, tmp_path):
     """A NEW reasoner over the same durable store must continue exactly
     where the old one stopped (cold-start recovery path), and the durable
